@@ -2,10 +2,20 @@
 the sklearn `precision_recall_fscore_support` calls of the reference
 (evaluator.py:10-31) re-derived from tp/fp/fn counts so they distribute.
 
-All of these are single hash-aggregate shuffles on the label column (tiny
-cardinality), then a driver-sized reduce — at 100 TB the only shuffle is on
-a handful of class labels, with map-side partial aggregation doing ~all of
-the work.
+Each aggregate references its input frame ONCE. The input of a scored
+task is the tail of a long lazy chain (seeded sample -> prompt build ->
+`mapInPandas` generate -> `pandas_udf` matcher); every extra reference
+is a separate branch that re-runs that whole chain, Python workers
+included, because branches ending in different aggregates share no
+exchange. So `classification_metrics` folds its input into a (pred,
+true) count table first and derives every number from that one table —
+no self-join, no cross join. The shuffles left are on the (pred, true)
+and label columns (tiny cardinality) with map-side partial aggregation
+doing ~all of the work, then a driver-sized reduce.
+
+NULL labels (a ragged ``arrays_zip`` pads the shorter side with NULL)
+form a class of their own with zero tp/fp/fn; ``accuracy`` averages only
+the pairs whose two labels are non-NULL, ``n`` counts every pair.
 """
 
 from __future__ import annotations
@@ -27,31 +37,54 @@ def classification_metrics(
     unweighted mean over classes; weighted = mean weighted by true support
     (classes with zero support contribute 0 weight); micro = global
     tp/(tp+fp) etc. (== accuracy for single-label multiclass).
+
+    ``pairs`` is referenced once: a (pred, true) count table, each count
+    row exploded into a pred-label contribution (tp, fp and the row
+    totals) and a true-label contribution (fn), one group-by on the label
+    for the per-class P/R/F1, and one global aggregate for every column.
+
+    NULL labels (a ragged ``arrays_zip`` pads the shorter side with
+    NULL): a NULL label is a class with tp = fp = fn = 0, so it counts in
+    the macro averages; a pair with a NULL side is neither a hit nor a
+    miss for any class; ``accuracy`` averages only the pairs where both
+    labels are non-NULL and is NULL when there are none; ``n`` counts
+    every pair (0 on empty input, where the macro averages are NULL).
     """
     p, t = F.col(pred_col), F.col(true_col)
-    labels = (
-        pairs.select(p.alias("label"))
-        .unionByName(pairs.select(t.alias("label")))
-        .distinct()
+    counts = pairs.groupBy(p.alias("pred"), t.alias("true")).count()
+    c = F.col("count")
+    zero = F.lit(0).cast("long")
+    # equality is NULL when either side is NULL: such a count lands in
+    # neither hit nor miss, but still names its labels as classes
+    hit = F.when(F.col("pred") == F.col("true"), c).otherwise(zero)
+    miss = F.when(F.col("pred") != F.col("true"), c).otherwise(zero)
+    compared = F.when(F.col("pred").isNotNull() & F.col("true").isNotNull(), c).otherwise(zero)
+
+    def contribution(label, tp=zero, fp=zero, fn=zero, n=zero, compared=zero):
+        return F.struct(
+            F.col(label).alias("label"), tp.alias("tp"), fp.alias("fp"),
+            fn.alias("fn"), n.alias("n"), compared.alias("compared"),
+        )
+
+    per_class = (
+        counts.select(
+            F.inline(
+                F.array(
+                    contribution("pred", tp=hit, fp=miss, n=c, compared=compared),
+                    contribution("true", fn=miss),
+                )
+            )
+        )
+        .groupBy("label")
+        .agg(*(F.sum(k).alias(k) for k in ("tp", "fp", "fn", "n", "compared")))
     )
-    per_class = labels.join(
-        pairs.groupBy(p.alias("label")).agg(
-            F.sum(F.when(p == t, 1).otherwise(0)).alias("tp"),
-            F.sum(F.when(p != t, 1).otherwise(0)).alias("fp"),
-        ),
-        "label",
-        "left",
-    ).join(
-        pairs.filter(p != t).groupBy(t.alias("label")).agg(F.count("*").alias("fn")),
-        "label",
-        "left",
-    ).fillna(0, subset=["tp", "fp", "fn"])
+    tp, fp, fn = F.col("tp"), F.col("fp"), F.col("fn")
     per_class = per_class.withColumn(
         "precision",
-        F.when(F.col("tp") + F.col("fp") > 0, F.col("tp") / (F.col("tp") + F.col("fp"))).otherwise(F.lit(0.0)),
+        F.when(tp + fp > 0, tp / (tp + fp)).otherwise(F.lit(0.0)),
     ).withColumn(
         "recall",
-        F.when(F.col("tp") + F.col("fn") > 0, F.col("tp") / (F.col("tp") + F.col("fn"))).otherwise(F.lit(0.0)),
+        F.when(tp + fn > 0, tp / (tp + fn)).otherwise(F.lit(0.0)),
     ).withColumn(
         "f1",
         F.when(
@@ -59,14 +92,12 @@ def classification_metrics(
             2 * F.col("precision") * F.col("recall") / (F.col("precision") + F.col("recall")),
         ).otherwise(F.lit(0.0)),
     )
-    totals = pairs.agg(
-        F.count("*").alias("n"),
-        F.avg((p == t).cast("double")).alias("accuracy"),
-    )
     # try_divide + coalesce: zero-tp corners (all predictions wrong, empty
     # class) must yield 0.0 metrics, not ANSI division-by-zero errors
-    support = F.col("tp") + F.col("fn")  # sklearn weights by TRUE support
-    micro = per_class.agg(
+    support = tp + fn  # sklearn weights by TRUE support
+    totals = per_class.agg(
+        F.coalesce(F.sum("n"), zero).alias("n"),
+        F.sum("compared").alias("compared"),
         F.sum("tp").alias("tp"), F.sum("fp").alias("fp"), F.sum("fn").alias("fn"),
         F.avg("precision").alias("macro_precision"),
         F.avg("recall").alias("macro_recall"),
@@ -76,36 +107,29 @@ def classification_metrics(
         F.sum(support * F.col("recall")).alias("w_r"),
         F.sum(support * F.col("f1")).alias("w_f"),
     ).select(
-        F.coalesce(
-            F.try_divide(F.col("tp"), F.col("tp") + F.col("fp")), F.lit(0.0)
-        ).alias("micro_precision"),
-        F.coalesce(
-            F.try_divide(F.col("tp"), F.col("tp") + F.col("fn")), F.lit(0.0)
-        ).alias("micro_recall"),
+        "n",
+        # the matched pairs are exactly the tp of every class
+        F.try_divide(tp.cast("double"), F.col("compared")).alias("accuracy"),
+        F.coalesce(F.try_divide(tp, tp + fp), F.lit(0.0)).alias("micro_precision"),
+        F.coalesce(F.try_divide(tp, tp + fn), F.lit(0.0)).alias("micro_recall"),
         "macro_precision",
         "macro_recall",
         "macro_f1",
-        F.coalesce(F.try_divide(F.col("w_p"), F.col("total_support")), F.lit(0.0)).alias(
-            "weighted_precision"
-        ),
-        F.coalesce(F.try_divide(F.col("w_r"), F.col("total_support")), F.lit(0.0)).alias(
-            "weighted_recall"
-        ),
-        F.coalesce(F.try_divide(F.col("w_f"), F.col("total_support")), F.lit(0.0)).alias(
-            "weighted_f1"
-        ),
-    ).withColumn(
-        "micro_f1",
-        F.coalesce(
-            F.try_divide(
-                2 * F.col("micro_precision") * F.col("micro_recall"),
-                F.col("micro_precision") + F.col("micro_recall"),
-            ),
-            F.lit(0.0),
+        *(
+            F.coalesce(F.try_divide(F.col(w), F.col("total_support")), F.lit(0.0)).alias(name)
+            for w, name in (
+                ("w_p", "weighted_precision"),
+                ("w_r", "weighted_recall"),
+                ("w_f", "weighted_f1"),
+            )
         ),
     )
-    return totals.crossJoin(micro).select(
-        "n", "accuracy", "micro_precision", "micro_recall", "micro_f1",
+    micro_p, micro_r = F.col("micro_precision"), F.col("micro_recall")
+    return totals.select(
+        "n", "accuracy", "micro_precision", "micro_recall",
+        F.coalesce(
+            F.try_divide(2 * micro_p * micro_r, micro_p + micro_r), F.lit(0.0)
+        ).alias("micro_f1"),
         "macro_precision", "macro_recall", "macro_f1",
         "weighted_precision", "weighted_recall", "weighted_f1",
     )

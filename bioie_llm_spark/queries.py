@@ -2168,15 +2168,20 @@ def dd_minhash_simhash_check(spark, sf_dir):
     exact = ngram_jaccard_pairs(docs, threshold=0.8, max_df=100).select(
         "id_a", "id_b"
     )
-    found = exact.join(cands, ["id_a", "id_b"], "left_semi")
+    # the reference is evaluated ONCE: each exact pair, flagged if any
+    # candidate hits it (candidates made distinct so a duplicate pair cannot
+    # count twice), feeds both counts in one aggregate
+    hits = cands.select("id_a", "id_b").distinct().withColumn("hit", F.lit(1))
+    ref = exact.join(hits, ["id_a", "id_b"], "left").agg(
+        F.count("*").alias("n_expected"), F.count("hit").alias("n_found")
+    )
     recall = F.coalesce(F.try_divide("n_found", "n_expected"), F.lit(1.0))
     mh = (
         cands.agg(
             F.count("*").alias("n_total"),
             F.bit_xor(F.xxhash64("id_a", "id_b")).alias("cand_hash"),
         )
-        .crossJoin(exact.agg(F.count("*").alias("n_expected")))
-        .crossJoin(found.agg(F.count("*").alias("n_found")))
+        .crossJoin(ref)
         .select(
             F.lit("minhash_lsh_recall@0.8").alias("method"),
             "n_total", "n_expected", "n_found",

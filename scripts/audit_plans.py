@@ -38,7 +38,8 @@ CARTESIAN_OK = {
     "sim_cosine_topk",
     "sim_ann_recall",     # contains the brute-force baseline
     # 1-row x 1-row crossJoins composing scalar aggregates into one result
-    # row (metrics summaries, digest rows) — bounded by construction
+    # row (the scored-task row: metrics x recompute x n_pairs x pairs_hash;
+    # digest rows) — bounded by construction
     "kg_entity_task",
     "kg_relation_task",
     "kg_relation_type_task",
@@ -62,9 +63,9 @@ CARTESIAN_OK = {
 }
 
 
-def plan_stats(df) -> dict[str, int]:
+def plan_stats(df, features: dict[str, str] = FEATURES) -> dict[str, int]:
     plan = df._jdf.queryExecution().executedPlan().toString()
-    return {k: len(re.findall(rx, plan)) for k, rx in FEATURES.items()}
+    return {k: len(re.findall(rx, plan)) for k, rx in features.items()}
 
 
 def audit(spark, sf_dir: str) -> dict[str, dict[str, int]]:

@@ -9,7 +9,7 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
 
-from audit_plans import CARTESIAN_OK, plan_stats  # noqa: E402
+from audit_plans import CARTESIAN_OK, FEATURES, plan_stats  # noqa: E402
 
 from bioie_llm_spark.queries import REGISTRY
 
@@ -69,3 +69,45 @@ def test_curation_plan_shapes(spark):
 
     st = plan_stats(pack_sequences(docs, max_tokens=256))
     assert st["exchanges"] == 1 and st["python"] == 1
+
+
+def test_scored_task_metrics_run_each_udf_once(spark, tmp_path_factory):
+    """Each scored task's metrics frame plans exactly one evaluation of
+    each Python UDF it uses — the generate (MapInPandas) and, where the
+    task matches mentions, the matcher (ArrowEvalPython) — and no
+    cartesian product. Every extra reference to the task's pairs would
+    re-run the whole generate -> match chain in a branch of its own."""
+    from bioie_llm_spark.datagen.corpus import CorpusSpec
+    from bioie_llm_spark.pipeline import (
+        build_triples,
+        entity_task,
+        kegg_entity_task,
+        relation_task,
+        relation_type_task,
+    )
+
+    # triples read back from parquet: the extraction UDF is not in the plans
+    stages = build_triples(
+        spark, CorpusSpec.for_scale(0.001), out_dir=str(tmp_path_factory.mktemp("kg"))
+    )
+    triples, facts = stages["triples"], stages["facts"]
+    udfs = {
+        "generate": r"MapInPandas",
+        "matcher": r"ArrowEvalPython",
+        "python": FEATURES["python"],
+        "cartesian": FEATURES["cartesian"],
+    }
+    want = {
+        "entity": (entity_task, 1),
+        "relation": (relation_task, 0),
+        "relation_type": (relation_type_task, 0),
+        "kegg_entity": (kegg_entity_task, 1),
+    }
+    got = {
+        name: plan_stats(task(triples, facts)["metrics"], udfs)
+        for name, (task, _) in want.items()
+    }
+    assert got == {
+        name: {"generate": 1, "matcher": n_matcher, "python": 1 + n_matcher, "cartesian": 0}
+        for name, (_, n_matcher) in want.items()
+    }

@@ -116,50 +116,79 @@ def test_context_budget(spark):
 
 def test_classification_metrics_property(spark):
     """classification_metrics vs a pure-Python sklearn-semantics twin on
-    random (pred, true) multisets — every averaging mode must agree."""
+    random (pred, true) multisets — every output column must agree,
+    including the NULL labels a ragged ``arrays_zip`` produces and the
+    empty input. NULL semantics: a NULL label is a class with
+    tp = fp = fn = 0 (it counts in the macro averages); a pair with a NULL
+    side is neither a hit nor a miss for any class; ``accuracy`` averages
+    only the pairs where both labels are non-NULL (NULL when there are
+    none); ``n`` counts every pair."""
     import math
+
+    from hypothesis import example
 
     from bioie_llm_spark.operators.metrics import classification_metrics
 
-    label_st = st.sampled_from(["a", "b", "c", "d"])
-    pairs_st = st.lists(st.tuples(label_st, label_st), min_size=1, max_size=30)
+    label_st = st.sampled_from(["a", "b", "c", "d", None])
+    pairs_st = st.lists(st.tuples(label_st, label_st), min_size=0, max_size=30)
+
+    def ratio(num, den):
+        return num / den if den else 0.0
 
     def py_metrics(pairs):
-        labels = sorted({p for p, _ in pairs} | {t for _, t in pairs})
+        compared = [(p, t) for p, t in pairs if p is not None and t is not None]
+        labels = {p for p, _ in pairs} | {t for _, t in pairs}
         per = []
         for lab in labels:
-            tp = sum(1 for p, t in pairs if p == lab and t == lab)
-            fp = sum(1 for p, t in pairs if p == lab and t != lab)
-            fn = sum(1 for p, t in pairs if t == lab and p != lab)
-            prec = tp / (tp + fp) if tp + fp else 0.0
-            rec = tp / (tp + fn) if tp + fn else 0.0
-            f1 = 2 * prec * rec / (prec + rec) if prec + rec else 0.0
-            per.append((prec, rec, f1, tp + fn))
-        n = len(pairs)
-        total_support = sum(s for *_, s in per)
+            tp = sum(1 for p, t in compared if p == lab and t == lab)
+            fp = sum(1 for p, t in compared if p == lab and t != lab)
+            fn = sum(1 for p, t in compared if t == lab and p != lab)
+            prec, rec = ratio(tp, tp + fp), ratio(tp, tp + fn)
+            per.append((prec, rec, ratio(2 * prec * rec, prec + rec), tp, fp, fn))
+        tp, fp, fn = (sum(c[i] for c in per) for i in (3, 4, 5))
+        support = [c[3] + c[5] for c in per]
+        micro_p, micro_r = ratio(tp, tp + fp), ratio(tp, tp + fn)
+
+        def macro(i):
+            return sum(c[i] for c in per) / len(per) if per else None
+
+        def weighted(i):
+            return ratio(sum(c[i] * s for c, s in zip(per, support)), sum(support))
+
         return {
-            "accuracy": sum(1 for p, t in pairs if p == t) / n,
-            "macro_precision": sum(p for p, *_ in per) / len(per),
-            "macro_recall": sum(r for _, r, *_ in per) / len(per),
-            "macro_f1": sum(f for _, _, f, _ in per) / len(per),
-            "weighted_f1": (
-                sum(f * s for _, _, f, s in per) / total_support
-                if total_support else 0.0
+            "n": len(pairs),
+            "accuracy": (
+                sum(1 for p, t in compared if p == t) / len(compared)
+                if compared else None
             ),
-            "weighted_precision": (
-                sum(p * s for p, _, _, s in per) / total_support
-                if total_support else 0.0
-            ),
+            "micro_precision": micro_p,
+            "micro_recall": micro_r,
+            "micro_f1": ratio(2 * micro_p * micro_r, micro_p + micro_r),
+            "macro_precision": macro(0),
+            "macro_recall": macro(1),
+            "macro_f1": macro(2),
+            "weighted_precision": weighted(0),
+            "weighted_recall": weighted(1),
+            "weighted_f1": weighted(2),
         }
 
     @given(pairs_st)
-    @settings(max_examples=12, deadline=None)
+    @example([])
+    @example([(None, None)])
+    @example([("a", None), (None, "b")])
+    @settings(max_examples=20, deadline=None)
     def check(pairs):
         df = spark.createDataFrame(pairs, "pred string, true string")
-        got = classification_metrics(df).first()
+        got = classification_metrics(df).first().asDict()
         want = py_metrics(pairs)
+        assert set(got) == set(want)
         for k, v in want.items():
-            assert math.isclose(got[k], v, abs_tol=1e-9), (k, got[k], v, pairs)
+            if v is None:
+                assert got[k] is None, (k, got[k], pairs)
+            else:
+                assert got[k] is not None and math.isclose(got[k], v, abs_tol=1e-9), (
+                    k, got[k], v, pairs,
+                )
 
     check()
 
