@@ -15,6 +15,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.checkpoint import CODEC
+
 
 def write_bucketed(
     df: DataFrame,
@@ -23,8 +25,13 @@ def write_bucketed(
     n_buckets: int = 8,
     sort_cols: list[str] | None = None,
 ) -> None:
-    """Persist df as a bucketed (and optionally sorted) managed table."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
+    """Persist df as a bucketed (and optionally sorted) managed table,
+    compressed with the checkpoint layer's codec."""
+    writer = (
+        df.write.mode("overwrite")
+        .option("compression", CODEC)
+        .bucketBy(n_buckets, *bucket_cols)
+    )
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table)

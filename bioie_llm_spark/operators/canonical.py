@@ -171,50 +171,52 @@ def connected_components(
     # round across the per-round checkpoints, which dominate wall time
     # (measured 5.7s -> 4.5s for the sf1.0 cc+pagerank slot at 8
     # partitions). ~100k edges per partition keeps big graphs at the
-    # session default — scale-adaptive, never a local-mode constant.
-    conf = edges.sparkSession.conf
-    orig_parts = conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(8, min(int(orig_parts), -(-max(sig[0], 1) // 100_000)))
-    conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        for _ in range(max_iter):
-            # --- large-star ---
-            sym = e.unionByName(
-                e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-            )
-            mins = sym.groupBy(F.col("a").alias("u")).agg(
-                F.min("b").alias("mn")
-            ).select("u", F.least("mn", F.col("u")).alias("m"))
-            # checkpointed: small-star reads `large` twice (min agg + join);
-            # duplicates are tolerated downstream (min unaffected, final
-            # distinct canonicalizes), so no distinct shuffle here
-            large = (
-                sym.withColumnRenamed("a", "u")
-                .join(mins, "u")
-                .filter(F.col("b") > F.col("u"))
-                .select(F.col("m").alias("a"), F.col("b"))
-                .filter(F.col("a") != F.col("b"))
-                .localCheckpoint()
-            )
-            # --- small-star over (a < b) edges: per b, m = min of its
-            # smaller neighborhood; link each smaller neighbor and b
-            # itself to m ---
-            m_b = large.groupBy("b").agg(F.min("a").alias("m"))
-            small = (
-                large.join(m_b, "b")
-                .select(F.col("m").alias("a"), F.col("a").alias("b"))
-                .unionByName(m_b.select(F.col("m").alias("a"), F.col("b")))
-                .filter(F.col("a") != F.col("b"))
-                .distinct()
-                .localCheckpoint()
-            )
-            e = small
-            new_sig = _signature(e)
-            if new_sig == sig:
-                break
-            sig = new_sig
-    finally:
-        conf.set("spark.sql.shuffle.partitions", orig_parts)
+    # session default — scale-adaptive, never a local-mode constant. The
+    # sizing is an explicit repartition(loop_parts, key) on every loop
+    # input, never a session conf change, so a concurrent query on the same
+    # session keeps its shuffle partition count. A checkpoint forgets its
+    # partitioning, so a checkpointed frame is repartitioned where it is
+    # read.
+    shuffle_parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    loop_parts = max(8, min(shuffle_parts, -(-max(sig[0], 1) // 100_000)))
+    for _ in range(max_iter):
+        # --- large-star --- one shuffle of sym on `a` serves the min agg
+        # and the join
+        sym = e.unionByName(
+            e.select(F.col("b").alias("a"), F.col("a").alias("b"))
+        ).repartition(loop_parts, "a")
+        mins = sym.groupBy(F.col("a").alias("u")).agg(
+            F.min("b").alias("mn")
+        ).select("u", F.least("mn", F.col("u")).alias("m"))
+        # checkpointed: small-star reads `large` twice (min agg + join);
+        # duplicates are tolerated downstream (min unaffected, final
+        # distinct canonicalizes), so no distinct shuffle here
+        large = (
+            sym.withColumnRenamed("a", "u")
+            .join(mins, "u")
+            .filter(F.col("b") > F.col("u"))
+            .select(F.col("m").alias("a"), F.col("b"))
+            .filter(F.col("a") != F.col("b"))
+            .localCheckpoint()
+        ).repartition(loop_parts, "b")
+        # --- small-star over (a < b) edges: per b, m = min of its
+        # smaller neighborhood; link each smaller neighbor and b itself
+        # to m ---
+        m_b = large.groupBy("b").agg(F.min("a").alias("m"))
+        small = (
+            large.join(m_b, "b")
+            .select(F.col("m").alias("a"), F.col("a").alias("b"))
+            .unionByName(m_b.select(F.col("m").alias("a"), F.col("b")))
+            .filter(F.col("a") != F.col("b"))
+            .repartition(loop_parts, "a")
+            .distinct()
+            .localCheckpoint()
+        )
+        e = small
+        new_sig = _signature(e)
+        if new_sig == sig:
+            break
+        sig = new_sig
     # fixpoint is a set of stars centered at each component's min node;
     # the groupBy-min is a no-op there and a safe reduction if max_iter
     # ever cuts a pathological graph short

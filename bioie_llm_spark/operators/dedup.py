@@ -669,31 +669,37 @@ def cdc_chunks(
     than a higher-order ``filter`` lambda: HOF lambdas evaluate through
     the interpreted expression path, which made the cut scan the dominant
     cost (measured 5.8s -> 2.6s at sf1.0 for identical output). The cut
-    positions (~2.3% of bytes under mask '05') are re-grouped per doc with
-    one small shuffle — (id, int) rows only, never text — and the chunk
-    rebuild is per-row array work again; output rows ~ |text|/43, linear
-    in corpus bytes, the shape that survives 100 TB."""
+    positions (~2.3% of bytes under mask '05') are re-grouped per row with
+    one small shuffle — (id, text hash, int) rows only, never text — and
+    the chunk rebuild is per-row array work again; output rows ~ |text|/43,
+    linear in corpus bytes, the shape that survives 100 TB."""
     n_mask = len(mask)
     t = F.col(text_col)
     n = F.length(t)
     cand = F.when(
         n >= k + 1, F.sequence(F.lit(2), n - (k - 1))
     ).otherwise(F.array().cast("array<int>"))
+    # the regroup key is (id, xxhash64(text)), not the id alone: rows that
+    # share an id but not their text keep their own cut lists (keyed on the
+    # id, they merged theirs). Identical rows share one key, and the
+    # collect_set gives each the cut list it would get alone. Only a 64-bit
+    # hash collision between two texts under one id would merge them.
+    keys = [F.col(id_col), F.xxhash64(t).alias("__cdc_h")]
     # codegen'd cut scan: one (id, position) row per candidate, md5 in the
-    # filter, then per-doc cut lists via a map-side-combinable collect
+    # filter, then per-row cut lists via a map-side-combinable collect
     cuts = (
-        df.select(F.col(id_col), t.alias("__cdc_t"), F.explode(cand).alias("__i"))
+        df.select(*keys, t.alias("__cdc_t"), F.explode(cand).alias("__i"))
         .filter(
             F.md5(F.col("__cdc_t").substr(F.col("__i"), F.lit(k))).substr(
                 F.lit(1), F.lit(n_mask)
             )
             <= F.lit(mask)
         )
-        .groupBy(id_col)
-        .agg(F.sort_array(F.collect_list("__i")).alias("__cuts"))
+        .groupBy(id_col, "__cdc_h")
+        .agg(F.sort_array(F.collect_set("__i")).alias("__cuts"))
     )
-    with_cuts = df.select(F.col(id_col), t.alias("__cdc_text")).join(
-        cuts, id_col, "left"
+    with_cuts = df.select(*keys, t.alias("__cdc_text")).join(
+        cuts, [id_col, "__cdc_h"], "left"
     )
     nn = F.length(F.col("__cdc_text"))
     bounds = F.concat(

@@ -56,39 +56,46 @@ def pagerank_fixed_point(
     PageRank over the symmetrized graph, in 1/scale fixed-point units.
     Bit-identical at any parallelism and reproducible in plain SQL."""
     sym = symmetrize(edges, src, dst).localCheckpoint()
-    deg = sym.groupBy(F.col("a").alias("node")).agg(F.count("*").alias("d"))
-    n_nodes = deg.count()
+    n_nodes = sym.select("a").distinct().count()
     if n_nodes == 0:
         # empty (or all-self-loop) edge set: no nodes to rank — return an
         # empty frame instead of dividing by zero (ADVICE r7)
-        return deg.select("node", F.lit(None).cast("long").alias("rank_int"))
+        return sym.select(
+            F.col("a").alias("node"), F.lit(None).cast("long").alias("rank_int")
+        )
     r0 = scale // n_nodes
     base = (scale // n_nodes) * 15 // 100
 
     # size the per-round shuffles from the measured node count (same
     # adaptive rule as canonical.connected_components: ~100k keys per
     # partition, floor 8) — a small graph at the session default pays
-    # mostly empty-task launches per round
-    conf = edges.sparkSession.conf
-    orig_parts = conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(8, min(int(orig_parts), -(-max(n_nodes, 1) // 100_000)))
-    conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        ranks = deg.select("node", F.lit(r0).cast("long").alias("r"))
-        for i in range(iterations):
-            contribs = ranks.join(deg, "node").select(
-                "node", F.expr("r div d").alias("c")
-            )
-            ranks = (
-                contribs.join(sym, contribs["node"] == sym["a"])
-                .groupBy(F.col("b").alias("node"))
-                .agg(F.expr("(85 * sum(c)) div 100").alias("s"))
-                .select("node", (F.lit(base) + F.col("s")).cast("long").alias("r"))
-            )
-            # checkpoint every 3rd round (and the last): lineage stays
-            # bounded without paying a materialization action per round
-            if i % 3 == 2 or i == iterations - 1:
-                ranks = ranks.localCheckpoint()
-    finally:
-        conf.set("spark.sql.shuffle.partitions", orig_parts)
+    # mostly empty-task launches per round. The sizing is an explicit
+    # repartition(loop_parts, key) on every loop input, never a session
+    # conf change. A checkpoint forgets its partitioning, so checkpointed
+    # frames are repartitioned where they are read; Spark drops a
+    # repartition its input already satisfies, so a round shuffles sym once
+    # (deg and both joins reuse it), the ranks only after a checkpoint, and
+    # the contributions on their destination
+    shuffle_parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    loop_parts = max(8, min(shuffle_parts, -(-n_nodes // 100_000)))
+    sym = sym.repartition(loop_parts, "a")
+    deg = sym.groupBy(F.col("a").alias("node")).agg(F.count("*").alias("d"))
+    ranks = deg.select("node", F.lit(r0).cast("long").alias("r"))
+    for i in range(iterations):
+        contribs = (
+            ranks.repartition(loop_parts, "node")
+            .join(deg, "node")
+            .select("node", F.expr("r div d").alias("c"))
+        )
+        ranks = (
+            contribs.join(sym, contribs["node"] == sym["a"])
+            .repartition(loop_parts, "b")
+            .groupBy(F.col("b").alias("node"))
+            .agg(F.expr("(85 * sum(c)) div 100").alias("s"))
+            .select("node", (F.lit(base) + F.col("s")).cast("long").alias("r"))
+        )
+        # checkpoint every 3rd round (and the last): lineage stays
+        # bounded without paying a materialization action per round
+        if i % 3 == 2 or i == iterations - 1:
+            ranks = ranks.localCheckpoint()
     return ranks.select("node", F.col("r").alias("rank_int"))

@@ -13,7 +13,9 @@ Local sandbox usage::
 
 Runs corpus -> extraction -> linking -> triple table (pred-partitioned,
 checkpoint-resumable, lineage-tracked) and prints a one-line JSON summary
-with triple P/R vs the planted gold set.
+with triple P/R vs the planted gold set, the bytes stored under each stage
+directory of ``--out`` (``stage_bytes``; ``_lineage`` is its own entry) and
+their total per byte of corpus text (``bytes_per_corpus_byte``).
 """
 
 from __future__ import annotations
@@ -27,6 +29,13 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def tree_bytes(path: str) -> int:
+    """Bytes of every file under ``path``."""
+    return sum(
+        os.path.getsize(os.path.join(d, f)) for d, _dirs, files in os.walk(path) for f in files
+    )
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", type=float, default=0.01, help="corpus scale factor")
@@ -38,6 +47,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
+    from pyspark.sql import functions as F
 
     from bioie_llm_spark.datagen.corpus import CorpusSpec
     from bioie_llm_spark.operators.metrics import triple_pr
@@ -60,6 +70,13 @@ def main() -> None:
     )
     n_triples = stages["triples"].count()
     pr = triple_pr(stages["triples"], stages["facts"]).first()
+    sec = time.time() - t0
+    corpus_bytes = stages["corpus"].agg(F.sum(F.octet_length("content"))).first()[0]
+    stage_bytes = {
+        d: tree_bytes(os.path.join(args.out, d))
+        for d in sorted(os.listdir(args.out))
+        if d != "metrics" and os.path.isdir(os.path.join(args.out, d))
+    }
     summary = {
         "snapshot": args.snapshot,
         "sf": args.sf,
@@ -68,7 +85,9 @@ def main() -> None:
         "precision": round(pr["precision"], 4),
         "recall": round(pr["recall"], 4),
         "f1": round(pr["f1"], 4),
-        "sec": round(time.time() - t0, 2),
+        "sec": round(sec, 2),
+        "stage_bytes": stage_bytes,
+        "bytes_per_corpus_byte": round(sum(stage_bytes.values()) / corpus_bytes, 4),
         "out": args.out,
     }
     # S10 metrics sink: the reference writes scores into every result file

@@ -176,3 +176,116 @@ def test_incremental_snapshots(spark, tiny_spec, tmp_path):
     assert got == want
     # snapshot A's table is still readable and smaller
     assert spark.read.parquet(stage_path(root, "triples", "snap-a")).count() == t_a.count()
+
+
+def _n_jobs(spark, fn) -> int:
+    """Spark jobs launched while ``fn`` runs (tagged with a fresh job group)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_materialize_reads_stage_once(spark, tmp_path):
+    """A fresh materialize launches the jobs of its parts — the stage
+    write, ONE read of the stage (a schema-inference job) and the lineage
+    write — not a second read for the returned frame."""
+    from bioie_llm_spark.sources.checkpoint import lineage_of
+
+    df = spark.range(100).selectExpr("id", "id * 2 as v")
+    ref = str(tmp_path / "ref")
+    n_write = _n_jobs(spark, lambda: df.write.parquet(ref))
+    n_read = _n_jobs(spark, lambda: spark.read.parquet(ref))
+    written = spark.read.parquet(ref)
+    n_lineage = _n_jobs(
+        spark, lambda: lineage_of(written, "s", "snap").write.parquet(str(tmp_path / "lin"))
+    )
+    assert n_read == 1
+    got = _n_jobs(spark, lambda: materialize(df, str(tmp_path / "root"), "s", "snap"))
+    assert got == n_write + n_read + n_lineage
+
+
+def _codecs(files) -> dict[str, set[str]]:
+    import pyarrow.parquet as pq
+
+    out = {}
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        out[f] = {
+            md.row_group(g).column(c).compression
+            for g in range(md.num_row_groups)
+            for c in range(md.num_columns)
+        }
+    return out
+
+
+def test_checkpoint_layer_writes_zstd(spark, tmp_path):
+    """Every parquet file the checkpoint layer writes — a materialized
+    stage and its lineage, a resume_by_key store with its delta lineage
+    and key log, and a bucketed table — has only ZSTD column chunks."""
+    from urllib.parse import urlparse
+
+    from bioie_llm_spark.operators.bucketing import write_bucketed
+    from bioie_llm_spark.sources.checkpoint import _data_files, resume_by_key
+
+    root = str(tmp_path / "ck")
+    df = spark.range(200).selectExpr("id", "id % 3 as p", "sha2(cast(id as string), 256) as h")
+    materialize(df, root, "stage", "s0", partition_by=["p"])
+    half = df.filter("id < 100")
+    resume_by_key(half, root, "rk", "s0", ["id"], lambda d: d)
+    resume_by_key(df, root, "rk", "s0", ["id"], lambda d: d)
+    table = "codec_probe_bucketed"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    write_bucketed(df, table, ["id"], n_buckets=4)
+    try:
+        files = _data_files(root) | set(spark.table(table).inputFiles())
+        dirs = {os.path.relpath(os.path.dirname(f), root).split(os.sep)[0] for f in files}
+        # the stage, its lineage, the store and its key log
+        assert {"stage", "_lineage", "rk", "rk__keys"} <= dirs
+        assert len([f for f in files if "/_lineage/stage=rk/" in f]) >= 2  # two deltas
+        codecs = _codecs(urlparse(f).path for f in files)
+        # (a file of an empty task has a schema footer but no column chunks)
+        assert sum(len(c) > 0 for c in codecs.values()) >= 10
+        assert {f: c for f, c in codecs.items() if not c <= {"ZSTD"}} == {}
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_incremental_on_snappy_store(spark, tiny_spec, tmp_path):
+    """A store whose first snapshot was written with snappy (an older
+    build's codec) stays resumable: a zstd append on top mixes the codecs
+    in one store, and the last snapshot's triple table equals a one-shot
+    build over the full corpus."""
+    from bioie_llm_spark.datagen.corpus import build_corpus, build_gazetteer
+    from bioie_llm_spark.extraction import extract_triples, link_entities
+    from bioie_llm_spark.pipeline import incremental_triples
+    from bioie_llm_spark.sources.checkpoint import _data_files
+
+    root = str(tmp_path / "mixed")
+    corpus = build_corpus(spark, tiny_spec).cache()
+    gaz = build_gazetteer(spark, tiny_spec)
+    snap_a = corpus.filter(F.col("path") < "src/file_3")
+    keys = ["repo", "path", "commit"]
+    # snapshot A's store and key log, laid out as incremental_triples
+    # lays them out, in snappy
+    link_entities(extract_triples(snap_a), gaz).write.option(
+        "compression", "snappy"
+    ).parquet(stage_path(root, "linked_incr", "cumulative"))
+    snap_a.select(keys).distinct().write.option("compression", "snappy").parquet(
+        stage_path(root, "linked_incr__keys", "cumulative")
+    )
+
+    t_b = incremental_triples(spark, corpus, gaz, root, "snap-b")
+    store = _codecs(_data_files(stage_path(root, "linked_incr", "cumulative")))
+    assert set().union(*store.values()) == {"SNAPPY", "ZSTD"}
+    oneshot = link_entities(extract_triples(corpus), gaz).groupBy("subj", "pred", "obj").agg(
+        F.count("*").alias("n_sources"), F.min("source_sha256").alias("source_sha256")
+    )
+    cols = ["subj", "pred", "obj", "n_sources", "source_sha256"]
+    assert sorted(t_b.select(cols).collect()) == sorted(oneshot.select(cols).collect())

@@ -382,3 +382,23 @@ def test_minhash_upper_triangle_pair_invariants(spark):
     # the exact-duplicate docs (1,2,3 normalize identically) must pair at 1.0
     est = {(r["id_a"], r["id_b"]): r["est_jaccard"] for r in rows}
     assert est.get((1, 2)) == 1.0 and est.get((1, 3)) == 1.0
+
+
+def test_cdc_chunks_duplicate_ids(spark):
+    """Rows that share an id keep their own cut lists: two different texts
+    under one id each get exactly their own chunks, and an identical
+    duplicate row gets the same chunks as its twin."""
+    import random
+
+    from bioie_llm_spark.operators.dedup import cdc_chunks
+
+    rng = random.Random(7)
+    t1, t2, t3 = ("".join(rng.choice("abcdefgh ") for _ in range(n)) for n in (600, 500, 400))
+    df = spark.createDataFrame(
+        [(1, t1), (1, t2), (2, t3), (2, t3)], "doc_id long, text string"
+    )
+    got = {}
+    for r in cdc_chunks(df).collect():
+        got.setdefault(r["doc_id"], []).append((r["pos"], r["clen"], r["chash"]))
+    assert sorted(got[1]) == sorted(_py_cdc_chunks(t1) + _py_cdc_chunks(t2))
+    assert sorted(got[2]) == sorted(_py_cdc_chunks(t3) * 2)

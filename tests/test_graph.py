@@ -4,11 +4,15 @@ plus rank-mass conservation up to floor-division truncation."""
 
 from __future__ import annotations
 
+import re
 from collections import defaultdict
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
+from bioie_llm_spark.operators.canonical import connected_components
 from bioie_llm_spark.operators.graph import pagerank_fixed_point, symmetrize
 
 SCALE = 10**12
@@ -86,3 +90,46 @@ class TestPagerankFixedPoint:
         a = _spark_ranks(spark, edges, partitions=1)
         b = _spark_ranks(spark, edges, partitions=8)
         assert a == b
+
+
+class _LoopBreak(Exception):
+    pass
+
+
+@pytest.mark.parametrize("fn", [connected_components, pagerank_fixed_point])
+def test_iterative_loops_leave_session_shuffle_conf_alone(spark, monkeypatch, fn):
+    """Queries on the same session while the CC / PageRank loop runs, and
+    after it raises, keep the session's shuffle partition count: the loops
+    size their shuffles with explicit repartitions, not a conf change."""
+    key = "spark.sql.shuffle.partitions"
+    orig = spark.conf.get(key)
+    # distinct from the loops' floor of 8, so a leaked loop size shows
+    spark.conf.set(key, "13")
+
+    def probe_parts() -> set[int]:
+        q = spark.range(64).groupBy((F.col("id") % 5).alias("k")).count()
+        plan = q._jdf.queryExecution().executedPlan().toString()
+        return {int(n) for n in re.findall(r"Exchange hashpartitioning\(.*, (\d+)\)", plan)}
+
+    seen = []
+    frame_cls = type(spark.range(1))
+    real = frame_cls.localCheckpoint
+
+    def checkpoint_and_probe(self, *a, **k):
+        seen.append(probe_parts())
+        if len(seen) == 5:
+            raise _LoopBreak  # the loop dies mid-round
+        return real(self, *a, **k)
+
+    try:
+        monkeypatch.setattr(frame_cls, "localCheckpoint", checkpoint_and_probe)
+        edges = spark.range(40).select(
+            F.col("id").alias("src"), ((F.col("id") * 7 + 1) % 40).alias("dst")
+        )
+        with pytest.raises(_LoopBreak):
+            fn(edges, "src", "dst")
+        monkeypatch.undo()
+        assert seen == [{13}] * 5
+        assert spark.conf.get(key) == "13" and probe_parts() == {13}
+    finally:
+        spark.conf.set(key, orig)
