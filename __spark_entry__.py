@@ -34,7 +34,6 @@ def entry(spark: SparkSession) -> DataFrame:
     Q._pack_parquet(spark, Q._oracle_sf_dir())
     Q._canon_parquet(spark, Q._oracle_sf_dir())
     Q._fuzzy_parquet(spark, Q._oracle_sf_dir())
-    Q._mm_parquet(spark, Q._oracle_sf_dir())
     Q._simlsh_parquet(spark, Q._oracle_sf_dir())
     Q._ann_parquet(spark, Q._oracle_sf_dir())
     Q._mhc_parquet(spark, Q._oracle_sf_dir())

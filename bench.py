@@ -433,21 +433,21 @@ def run_once(cpus: int, sf_dir: str) -> dict:
     )
 
     # cache keyed on curation source + the IDENTITY of the documents
-    # parquet (path/size/mtime — two sf-less dirs or regenerated testdata
-    # can never share a model), completed atomically with a __done marker
+    # table (_table_ident — two sf-less dirs or regenerated testdata can
+    # never share a model), completed atomically with a __done marker
     # (code-review r5: the uni/_SUCCESS probe could pass on a half-written
     # cache since uni is written first)
     from bioie_llm_spark.operators import curation as _cur_mod
-    from bioie_llm_spark.queries import _source_hashed_root, materialize_once
+    from bioie_llm_spark.queries import (
+        _source_hashed_root,
+        _table_ident,
+        materialize_once,
+    )
 
-    doc_path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(doc_path)
-        ident = f"{os.path.realpath(doc_path)}:{st.st_size}:{int(st.st_mtime)}"
-    except OSError:
-        ident = f"{doc_path}:missing"
     lm_dir = materialize_once(
-        _source_hashed_root("bioie_lm_stage", sf_dir, (_cur_mod,), extra=ident),
+        _source_hashed_root(
+            "bioie_lm_stage", sf_dir, (_cur_mod,), extra=_table_ident(sf_dir, "documents")
+        ),
         lambda scr: save_ngram_lm(docs, scr),  # train-once, outside both slots
     )
     def _force_lm(df):
@@ -466,7 +466,6 @@ def run_once(cpus: int, sf_dir: str) -> dict:
     # + exact re-rank. The contrast slot is sim_cosine_topk in HEADLINE
     # (brute-force scan of the raw vectors for the same 5 queries).
     from bioie_llm_spark.operators.similarity import ivfpq_index, ivfpq_query
-    from bioie_llm_spark.queries import _table_ident
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double"))

@@ -53,7 +53,6 @@ HYBRID_PINNED: dict[str, list[str]] = {
     "kg_canonicalize": ["map_hash", "triples_hash"],
     "dd_minhash_simhash_check": ["method", "cand_hash"],
     "dd_fuzzy_dedup": ["assign_hash"],
-    "mm_binary_pipeline": ["features_hash", "resize_hash", "frames_hash"],
     "sim_ann_recall": ["method", "ann_hash"],
     "sim_near_dup_lsh": ["lsh_hash", "sd_hash"],
 }

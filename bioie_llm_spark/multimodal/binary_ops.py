@@ -356,26 +356,15 @@ def _png_encode(w: int, h: int, rgb: bytes) -> bytes:
 
 def _image_parse(payload: bytes | None) -> tuple[str, int, int, bytes]:
     """Format-sniffing decode: (fmt, w, h, rgb) for the formats the stdlib
-    path understands — 'ppm' (P6), 'png' (8-bit RGB), 'bmp' (24-bit
-    BI_RGB), 'jpeg' (baseline + progressive, r6/r7) and 'gif' (LZW,
-    87a/89a incl. interlace, r7). Anything else raises
-    NotImplementedError for the stub fallback."""
+    path understands — 'ppm' (P6), 'png' (8-bit RGB) and 'bmp' (24-bit
+    BI_RGB). Anything else raises NotImplementedError for the stub
+    fallback."""
     if payload and payload.startswith(_PNG_SIG):
         w, h, rgb = _png_parse(payload)
         return "png", w, h, rgb
     if payload and payload.startswith(b"BM"):
         w, h, rgb = _bmp_parse(payload)
         return "bmp", w, h, rgb
-    if payload and payload.startswith(b"\xff\xd8"):
-        from .jpeg_codec import jpeg_parse
-
-        w, h, rgb = jpeg_parse(payload)
-        return "jpeg", w, h, rgb
-    if payload and payload[:6] in (b"GIF87a", b"GIF89a"):
-        from .gif_codec import gif_parse
-
-        w, h, rgb = gif_parse(payload)
-        return "gif", w, h, rgb
     w, h, rgb = _ppm_parse(payload)
     return "ppm", w, h, rgb
 
@@ -441,10 +430,9 @@ def _image_features(w: int, h: int, rgb: bytes, dim: int = 16) -> list[float]:
 
 
 def _real_decode(op: str, *args):
-    """The real-media decode dispatch. PPM (P6), minimal-RGB PNG, 24-bit
-    BMP and baseline-sequential JPEG images plus 16-bit PCM RIFF/WAVE
-    audio are decoded with pure stdlib (VERDICT r3 #6 / r4 #5 / r5 #6 —
-    all real branches run in CI, no
+    """The real-media decode dispatch. PPM (P6), minimal-RGB PNG and 24-bit
+    BMP images plus PCM / mu-law RIFF/WAVE audio are decoded with pure
+    stdlib (VERDICT r3 #6 / r4 #5 / r5 #6 — all real branches run in CI, no
     PIL/ffmpeg required); any other format raises NotImplementedError so
     the caller falls back PER ROW to the deterministic stub — a working
     pipeline is never turned into a hard failure by an exotic payload
@@ -466,16 +454,6 @@ def _real_decode(op: str, *args):
             return _png_encode(out_w, out_h, resized)
         if fmt == "bmp":
             return _bmp_encode(out_w, out_h, resized)
-        if fmt == "jpeg":
-            from .jpeg_codec import jpeg_encode
-
-            return jpeg_encode(out_w, out_h, resized)
-        if fmt == "gif":
-            from .gif_codec import gif_encode
-
-            # NN-resample only repeats source colors, so the <=256-color
-            # GIF invariant survives the resize by construction
-            return gif_encode(out_w, out_h, resized)
         return _ppm_encode(out_w, out_h, resized)
     raise NotImplementedError(op)
 
@@ -502,15 +480,13 @@ FRAMES_SCHEMA = "asset_id long, frame_idx int, frame_sha string"
 
 def synth_assets(spark: SparkSession, n: int = 64) -> DataFrame:
     """Deterministic assets: kind and metadata hash-assigned, pure
-    expressions (format selector round-robin by id). All five image
-    format-selectors carry a REAL 8x8
-    payload — binary PPM (P6) for selector 0 (header + 192 md5-derived RGB
-    bytes, pure expressions), minimal 8-bit-RGB PNG for selector 1,
-    24-bit BI_RGB BMP for selector 2, baseline-or-progressive JPEG for
-    selector 3 and GIF89a (half interlaced) for selector 4 (same
-    md5-chain pixels, container-
-    framed by an Arrow-batched pass since CRC/deflate/BGR-flip/DCT are not
-    expressible in Catalyst) — and 2/5 of the audio assets carry a REAL
+    expressions (format selector round-robin by id). Image format-selectors
+    0-2 carry a REAL 8x8 payload — binary PPM (P6) for selector 0 (header
+    + 192 md5-derived RGB bytes, pure expressions), minimal 8-bit-RGB PNG
+    for selector 1 and 24-bit BI_RGB BMP for selector 2 (same md5-chain
+    pixels, container-framed by an Arrow-batched pass since
+    CRC/deflate/BGR-flip are not expressible in Catalyst) — and 2/5 of the
+    audio assets carry a REAL
     RIFF/WAVE payload — one selector 16-bit PCM, one G.711 mu-law (64
     mono samples at the metadata sample rate, md5-chain-derived) — so every real-decode branch is exercised by
     the standard pipeline; the rest carry opaque md5-chain bytes that
@@ -540,15 +516,13 @@ def synth_assets(spark: SparkSession, n: int = 64) -> DataFrame:
     ppm = F.concat(F.to_binary(F.lit("P6\n8 8\n255\n"), F.lit("UTF-8")), F.unhex(rgb_hex))
     # round-robin (not hash) format selector: guarantees every container
     # branch appears with ~n/15 rows at any corpus size (a 5-way hash
-    # split left 1 JPEG in 64 assets — too thin to gate a decode path)
+    # split can leave a single row of a format — too thin to gate a decode
+    # path)
     fmt_sel = F.pmod(F.col("id"), F.lit(5))
     payload = F.when((kind == "image") & (fmt_sel == 0), ppm).otherwise(junk)
     fmt = (
         F.when((kind == "image") & (fmt_sel == 1), F.lit("png"))
         .when((kind == "image") & (fmt_sel == 2), F.lit("bmp"))
-        .when((kind == "image") & (fmt_sel == 3), F.lit("jpeg"))
-        .when((kind == "image") & (fmt_sel == 4), F.lit("gif"))
-        .when((kind == "video") & (fmt_sel < 2), F.lit("agif"))
         .when((kind == "audio") & (fmt_sel == 0), F.lit("wav"))
         .when((kind == "audio") & (fmt_sel == 1), F.lit("wavu"))
         .otherwise(F.lit(""))
@@ -571,54 +545,11 @@ def synth_assets(spark: SparkSession, n: int = 64) -> DataFrame:
     def frame_payload(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import struct
 
-        def enc(aid: int, f: str, p: bytes, hx: str, nf: int) -> bytes:
+        def enc(f: str, p: bytes, hx: str) -> bytes:
             if f == "png":
                 return _png_encode(8, 8, bytes.fromhex(hx))
             if f == "bmp":
                 return _bmp_encode(8, 8, bytes.fromhex(hx))
-            if f == "jpeg":
-                from .jpeg_codec import jpeg_encode, jpeg_encode_progressive
-
-                # half the JPEG fixtures are PROGRESSIVE (SOF2) — the
-                # container real web corpora actually serve (r7); both
-                # decode to identical pixels, so the pinned features_hash
-                # / resize_hash goldens discriminate: a broken progressive
-                # path would route these rows to the stub and drift both.
-                # Round-robin on asset_id (exactly alternating), not a hash
-                # digit — a thin hash split once left 1 progressive row in
-                # a 64-asset corpus.
-                if (aid // 5) % 2:
-                    return jpeg_encode_progressive(8, 8, bytes.fromhex(hx))
-                return jpeg_encode(8, 8, bytes.fromhex(hx))
-            if f == "gif":
-                from .gif_codec import gif_encode
-
-                # half the GIF fixtures are INTERLACED — both orders
-                # decode to identical pixels, so the pinned features /
-                # resize hashes gate the deinterlace path the same way
-                # the SOF2 split gates progressive JPEG
-                return gif_encode(8, 8, bytes.fromhex(hx), interlace=(aid // 5) % 2 == 1)
-            if f == "agif":
-                from .gif_codec import gif_encode_animated
-
-                # REAL animated GIF: meta.n_frames full 8x8 frames drawn
-                # from a 64-color md5-derived palette (GIF's <=256-color
-                # global table holds at any frame count)
-                pal_src = hashlib.md5(f"vp|{hx}".encode()).digest()
-                pal = []
-                i = 0
-                while len(pal) < 64:
-                    d = hashlib.md5(pal_src + i.to_bytes(2, "big")).digest()
-                    pal.extend(d[j : j + 3] for j in range(0, 15, 3))
-                    i += 1
-                pal = pal[:64]
-                frames = []
-                for k in range(int(nf)):
-                    sel = hashlib.md5(f"vf|{hx}|{k}".encode()).digest()
-                    while len(sel) < 64:
-                        sel += hashlib.md5(sel).digest()
-                    frames.append(b"".join(pal[sel[j] % 64] for j in range(64)))
-                return gif_encode_animated(8, 8, frames)
             if f == "wav":
                 raw = bytes.fromhex(hx)
                 return _wav_encode(16000, 1, list(struct.unpack("<64h", raw)))
@@ -632,11 +563,8 @@ def synth_assets(spark: SparkSession, n: int = 64) -> DataFrame:
         for pdf in batches:
             pdf = pdf.copy()
             pdf["payload"] = [
-                enc(int(aid), f, p, hx, int(m["n_frames"]))
-                for aid, f, p, hx, m in zip(
-                    pdf["asset_id"], pdf["__fmt"], pdf["payload"], pdf["__hex"],
-                    pdf["meta"],
-                )
+                enc(f, p, hx)
+                for f, p, hx in zip(pdf["__fmt"], pdf["payload"], pdf["__hex"])
             ]
             yield pdf.drop(columns=["__fmt", "__hex"])
 
@@ -768,33 +696,20 @@ def resize_images(assets: DataFrame, width: int = 64, height: int = 64) -> DataF
 
 def sample_frames(assets: DataFrame, every: int = 5) -> DataFrame:
     """Video frame sampling as a flat-map: one output row per sampled frame
-    index (0, every, 2*every, ... < n_frames). Animated-GIF payloads get
-    REAL frame content (r7: frame_sha = sha256 of the decoded frame's raw
-    RGB via gif_parse_frames — the stdlib video-decode branch); anything
-    else falls back per row to the deterministic stub sha of
-    (payload, frame_idx), the same declared-stub policy as images/audio."""
+    index (0, every, 2*every, ... < n_frames). No video container is
+    decoded, so frame_sha is the deterministic stub sha256 of
+    (payload, frame_idx)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .gif_codec import gif_parse_frames
-
         for pdf in batches:
             rows = []
             for aid, payload, n_frames in zip(
                 pdf["asset_id"], pdf["payload"], pdf["n_frames"]
             ):
-                decoded = None
-                if payload and bytes(payload)[:6] in (b"GIF87a", b"GIF89a"):
-                    try:
-                        _, _, decoded = gif_parse_frames(bytes(payload))
-                    except NotImplementedError:
-                        _stub_fallback("sample_frames")
                 for idx in range(0, int(n_frames), every):
-                    if decoded is not None and idx < len(decoded):
-                        sha = hashlib.sha256(decoded[idx]).hexdigest()
-                    else:
-                        sha = hashlib.sha256(
-                            (payload or b"") + idx.to_bytes(4, "big")
-                        ).hexdigest()
+                    sha = hashlib.sha256(
+                        (payload or b"") + idx.to_bytes(4, "big")
+                    ).hexdigest()
                     rows.append((aid, idx, sha))
             yield pd.DataFrame(rows, columns=["asset_id", "frame_idx", "frame_sha"])
 

@@ -141,6 +141,11 @@ def connected_components(
       neighbor -> (m, v) edges via one groupBy + one join.
     - small-star: every node links its smaller-or-equal neighbors to the
       minimum of that set -> (m, a) + (m, b) edges, same shape.
+
+    Executor loss: every round is ``localCheckpoint()``ed, so its blocks
+    live only in executor storage and the truncated lineage cannot
+    recompute them. Losing an executor that holds them fails the call; it
+    never returns wrong labels. Re-run the operator from its inputs.
     """
     nodes = (
         edges.select(F.col(src).alias("node"))

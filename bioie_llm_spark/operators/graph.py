@@ -54,7 +54,13 @@ def pagerank_fixed_point(
 ) -> DataFrame:
     """(node, rank_int) after ``iterations`` rounds of damped (0.85)
     PageRank over the symmetrized graph, in 1/scale fixed-point units.
-    Bit-identical at any parallelism and reproducible in plain SQL."""
+    Bit-identical at any parallelism and reproducible in plain SQL.
+
+    Executor loss: the symmetrized graph and the ranks (every third round
+    and the last) are ``localCheckpoint()``ed, so their blocks live only
+    in executor storage and the truncated lineage cannot recompute them.
+    Losing an executor that holds them fails the call; it never returns
+    wrong ranks. Re-run the operator from its inputs."""
     sym = symmetrize(edges, src, dst).localCheckpoint()
     n_nodes = sym.select("a").distinct().count()
     if n_nodes == 0:

@@ -174,25 +174,16 @@ def _kg_root(sf_dir: str) -> str:
 
 def _stream_equiv_root(sf_dir: str) -> str:
     """Deterministic scratch root for st_stream_batch_equiv's drained stream
-    sinks, keyed by sf + streaming/dedup module sources + the IDENTITY of
-    the input tables (path, size, mtime of documents/events parquet) — so
-    regenerated or swapped testdata can never be compared against sinks
-    drained from the previous data (the sf number alone wouldn't roll)."""
-    import os
-
+    sinks, keyed by sf + streaming/dedup module sources + the
+    ``_table_ident`` of the documents and events tables — so regenerated
+    or swapped testdata can never be compared against sinks drained from
+    the previous data (the sf number alone wouldn't roll)."""
     from .operators import dedup as _dedup_mod
     from .streaming import incremental as _inc_mod
 
-    ident = [sf_dir.rstrip("/")]
-    for t in ("documents", "events"):
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        try:
-            st = os.stat(p)
-            ident.append(f"{t}:{st.st_size}:{int(st.st_mtime)}")
-        except OSError:
-            ident.append(f"{t}:missing")
+    ident = "|".join(_table_ident(sf_dir, t) for t in ("documents", "events"))
     return _source_hashed_root(
-        "bioie_stream_equiv", sf_dir, (_inc_mod, _dedup_mod), extra="|".join(ident)
+        "bioie_stream_equiv", sf_dir, (_inc_mod, _dedup_mod), extra=ident
     )
 
 
@@ -3747,17 +3738,28 @@ _PACK_MAX_TOKENS = 200
 
 
 def _table_ident(sf_dir: str, table: str) -> str:
-    """Identity string for a driver parquet table (size + mtime): scratch
-    roots keyed on it can never serve results computed from swapped or
-    regenerated testdata."""
+    """Identity string for an input parquet table: its real path plus the
+    (relative name, size, mtime in ns) of every file under it, so a
+    single file and a Spark-written directory table alike roll the key
+    when the data is swapped, regenerated or read from another directory.
+    Scratch roots keyed on it can never serve results computed from other
+    data."""
     import os
 
-    p = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        st = os.stat(p)
-        return f"{table}:{st.st_size}:{int(st.st_mtime)}"
-    except OSError:
-        return f"{table}:missing"
+    p = os.path.realpath(os.path.join(sf_dir, f"{table}.parquet"))
+    if os.path.isfile(p):
+        files = [p]
+    else:
+        files = sorted(
+            os.path.join(d, f) for d, _, names in os.walk(p) for f in names
+        )
+    if not files:
+        return f"{p}:missing"
+    parts = []
+    for f in files:
+        st = os.stat(f)
+        parts.append(f"{os.path.relpath(f, p)}:{st.st_size}:{st.st_mtime_ns}")
+    return p + "|" + ";".join(parts)
 
 
 def _docs_ident(sf_dir: str) -> str:
@@ -4072,311 +4074,6 @@ def dd_fuzzy_dedup(spark, sf_dir):
     return (
         digest.crossJoin(viol.agg((F.count("*") == 0).alias("closure_ok")))
         .withColumn("clusters_eq_keepers", F.col("n_clusters") == F.col("n_keepers"))
-    )
-
-
-# Multimodal binary pipeline under the hard driver signal (VERDICT r2 #3):
-# synth_assets -> Arrow-batched extract_features -> resize_images ->
-# sample_frames. HYBRID oracle since r5: every stage output is
-# materialized to parquet and DuckDB independently recomputes the counts,
-# the per-format real-decode classification (payload byte-prefix checks
-# via hex()), and the coverage invariants from those bytes; only the
-# three xxhash64 content hashes stay pinned. This is the
-# mapInPandas-over-binary path end to end.
-def _mm_root(sf_dir: str) -> str:
-    from .multimodal import binary_ops as _mm_mod
-    from .multimodal import jpeg_codec as _jpg_mod
-
-    return _source_hashed_root("bioie_mm", sf_dir, (_mm_mod, _jpg_mod))
-
-
-def _mm_parquet(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the four multimodal stage outputs once (assets,
-    features, resized, frames) — downstream stages consume the WRITTEN
-    assets so both engines digest exactly the same bytes."""
-    import os
-
-    from .multimodal.binary_ops import (
-        extract_features,
-        resize_images,
-        sample_frames,
-        synth_assets,
-    )
-
-    def build(scr: str) -> None:
-        synth_assets(spark, 64).repartition(8).write.parquet(
-            os.path.join(scr, "assets")
-        )
-        assets = spark.read.parquet(os.path.join(scr, "assets"))
-        extract_features(assets).write.parquet(os.path.join(scr, "features"))
-        resize_images(assets, 64, 64).write.parquet(os.path.join(scr, "resized"))
-        sample_frames(assets, every=5).write.parquet(os.path.join(scr, "frames"))
-
-    return materialize_once(_mm_root(sf_dir), build)
-
-
-_MM_PPM_HDR_HEX = "50360A36342036340A3235350A"  # "P6\n64 64\n255\n"
-_MM_PNG_HDR_HEX = (
-    "89504E470D0A1A0A"  # PNG signature
-    "0000000D49484452"  # IHDR length + tag
-    "0000004000000040"  # width 64, height 64
-    "0802000000"        # depth 8, RGB, non-interlaced
-)
-# 54-byte 24-bit BI_RGB bottom-up header for a 64x64 resize target — fully
-# determined by the geometry, so both engines can classify by byte prefix
-_MM_BMP_HDR_HEX = (
-    "424D" + "36300000" + "00000000" + "36000000"  # 'BM', size 12342, offset 54
-    + "28000000" + "40000000" + "40000000"          # BITMAPINFOHEADER, w=h=64
-    + "0100" + "1800" + "00000000" + "00300000"     # 1 plane, 24 bpp, BI_RGB
-    + "130B0000" + "130B0000" + "00000000" + "00000000"
-)
-# RIFF....WAVE sniff for real-audio classification (offsets 0-3 and 8-11)
-_MM_RIFF_HEX, _MM_WAVE_HEX = "52494646", "57415645"
-# "GIF89a" + 64x64 LE screen descriptor — the writer's content-independent
-# resized-GIF prefix (palette bytes beyond this vary with content)
-_MM_GIF64_HDR_HEX = "47494638396140004000"
-
-
-def _mm_jpg_hdr_hex() -> str:
-    """Byte-exact SOI..SOS prefix of a 64x64 re-encoded baseline JPEG —
-    content-independent because the writer's tables are fixed, so both
-    engines classify real resized JPEGs by prefix (r6; the entropy-coded
-    body varies with content, unlike the fixed-size PPM/BMP rasters)."""
-    from .multimodal.jpeg_codec import jpeg_header_hex
-
-    return jpeg_header_hex(64, 64)
-
-
-def _mm_prog_hdr_hex() -> str:
-    """Byte-exact content-independent prefix (SOI..DHT + first SOS header)
-    of an 8x8 progressive fixture — classifies which SOURCE assets carry
-    the SOF2 container (r7; half the JPEG fixtures)."""
-    from .multimodal.jpeg_codec import jpeg_prog_header_hex
-
-    return jpeg_prog_header_hex(8, 8)
-
-
-def _mm_binary_pipeline_oracle() -> str | None:
-    import os
-
-    pinned = golden_sql("mm_binary_pipeline")
-    if pinned is None:
-        return None
-    root = _mm_root(_oracle_sf_dir())
-    jpg_hdr = _mm_jpg_hdr_hex()
-
-    def glob(stage):
-        return os.path.join(root, stage, "*.parquet")
-
-    return f"""
-    WITH assets AS (SELECT * FROM read_parquet('{glob("assets")}')),
-    f AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_assets
-      FROM read_parquet('{glob("features")}')
-    ),
-    k AS (
-      SELECT CAST(sum(CASE WHEN kind = 'image' THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_images,
-             CAST(sum(CASE WHEN kind = 'video' THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_videos,
-             CAST(sum(CASE WHEN kind = 'audio' THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_audio,
-             CAST(sum(CASE WHEN kind = 'audio'
-                            AND left(hex(payload), 8) = '{_MM_RIFF_HEX}'
-                            AND substr(hex(payload), 17, 8) = '{_MM_WAVE_HEX}'
-                           THEN 1 ELSE 0 END) AS BIGINT) AS n_audio_real,
-             CAST(sum(CASE WHEN kind = 'image'
-                            AND left(hex(payload), {len(_mm_prog_hdr_hex())})
-                                = '{_mm_prog_hdr_hex()}'
-                           THEN 1 ELSE 0 END) AS BIGINT) AS n_src_jpeg_prog
-      FROM assets
-    ),
-    rz AS (
-      SELECT kind, width, height,
-             (left(hex(payload), {len(_MM_PPM_HDR_HEX)}) = '{_MM_PPM_HDR_HEX}'
-              AND octet_length(payload) = {13 + 64 * 64 * 3}) AS is_ppm,
-             left(hex(payload), {len(_MM_PNG_HDR_HEX)}) = '{_MM_PNG_HDR_HEX}'
-               AS is_png,
-             (left(hex(payload), {len(_MM_BMP_HDR_HEX)}) = '{_MM_BMP_HDR_HEX}'
-              AND octet_length(payload) = {54 + 64 * 64 * 3}) AS is_bmp,
-             left(hex(payload), {len(jpg_hdr)}) = '{jpg_hdr}' AS is_jpg,
-             left(hex(payload), {len(_MM_GIF64_HDR_HEX)}) = '{_MM_GIF64_HDR_HEX}'
-               AS is_gif,
-             octet_length(payload) = {64 * 64} AS is_stub
-      FROM read_parquet('{glob("resized")}')
-    ),
-    r AS (
-      SELECT CAST(sum(CASE WHEN kind = 'image' AND width = 64 AND height = 64
-                            AND (is_ppm OR is_png OR is_bmp OR is_jpg OR is_gif
-                                 OR is_stub)
-                           THEN 1 ELSE 0 END) AS BIGINT) AS n_resized_ok,
-             CAST(sum(CASE WHEN kind = 'image' AND is_ppm THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_resized_real,
-             CAST(sum(CASE WHEN kind = 'image' AND is_png THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_resized_real_png,
-             CAST(sum(CASE WHEN kind = 'image' AND is_bmp THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_resized_real_bmp,
-             CAST(sum(CASE WHEN kind = 'image' AND is_jpg THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_resized_real_jpeg,
-             CAST(sum(CASE WHEN kind = 'image' AND is_gif THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_resized_real_gif
-      FROM rz
-    ),
-    fr AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_frames,
-             CAST(count(DISTINCT asset_id) AS BIGINT) AS n_frame_videos
-      FROM read_parquet('{glob("frames")}')
-    ),
-    gv AS (
-      SELECT asset_id FROM assets
-      WHERE kind = 'video' AND left(hex(payload), 8) = '47494638'
-    ),
-    frr AS (
-      SELECT CAST(count(*) AS BIGINT) AS n_frames_real
-      FROM read_parquet('{glob("frames")}') f JOIN gv USING (asset_id)
-    )
-    SELECT f.n_assets, g.features_hash, k.n_images, k.n_videos,
-           k.n_audio, k.n_audio_real, k.n_src_jpeg_prog,
-           r.n_resized_ok, r.n_resized_real, r.n_resized_real_png,
-           r.n_resized_real_bmp, r.n_resized_real_jpeg, r.n_resized_real_gif,
-           g.resize_hash, fr.n_frames, fr.n_frame_videos, frr.n_frames_real,
-           g.frames_hash,
-           (r.n_resized_ok = k.n_images) AS resize_covers_images,
-           (fr.n_frame_videos = k.n_videos) AS frames_cover_videos
-    FROM f, k, r, fr, frr, ({pinned}) AS g
-    """
-
-
-@register("mm_binary_pipeline", _mm_binary_pipeline_oracle)
-def mm_binary_pipeline(spark, sf_dir):
-    root = _mm_parquet(spark, sf_dir)
-    assets = spark.read.parquet(f"{root}/assets")
-    f_dig = spark.read.parquet(f"{root}/features").agg(
-        F.count("*").cast("long").alias("n_assets"),
-        F.bit_xor(
-            F.xxhash64(
-                "asset_id",
-                "kind",
-                "n_bytes",
-                F.concat_ws(
-                    ",", F.transform("features", lambda x: F.round(x, 4).cast("string"))
-                ),
-            )
-        ).alias("features_hash"),
-    )
-    kinds = assets.agg(
-        F.sum((F.col("kind") == "image").cast("int")).cast("long").alias("n_images"),
-        F.sum((F.col("kind") == "video").cast("int")).cast("long").alias("n_videos"),
-        F.sum((F.col("kind") == "audio").cast("int")).cast("long").alias("n_audio"),
-        # real-audio classification: RIFF....WAVE container sniff — the
-        # rows whose features rode the real WAV-PCM decode branch
-        F.sum(
-            (
-                (F.col("kind") == "audio")
-                & (F.substring("payload", 1, 4) == F.unhex(F.lit(_MM_RIFF_HEX)))
-                & (F.substring("payload", 9, 4) == F.unhex(F.lit(_MM_WAVE_HEX)))
-            ).cast("int")
-        ).cast("long").alias("n_audio_real"),
-        # progressive-source classification (r7): half the JPEG fixtures
-        # carry the SOF2 container; their features/resize rows ride the
-        # progressive decode, so the pinned features_hash/resize_hash
-        # drift if that path breaks
-        F.sum(
-            (
-                (F.col("kind") == "image")
-                & (
-                    F.substring("payload", 1, len(_mm_prog_hdr_hex()) // 2)
-                    == F.unhex(F.lit(_mm_prog_hdr_hex()))
-                )
-            ).cast("int")
-        ).cast("long").alias("n_src_jpeg_prog"),
-    )
-    # a resized image payload is valid in either branch: REAL decode emits
-    # a P6/PNG/BMP at the target box, the stub emits its byte-per-pixel
-    # stand-in (w*h bytes). n_resized_real{,_png,_bmp} count how many rode
-    # each real path — classifications the oracle recomputes from the same
-    # payload bytes via hex-prefix checks.
-    ppm_hdr = F.unhex(F.lit(_MM_PPM_HDR_HEX))
-    is_real_ppm = (F.substring("payload", 1, 13) == ppm_hdr) & (
-        F.length("payload") == 13 + 64 * 64 * 3
-    )
-    # a real resized PNG: signature + IHDR at the fixed offset declaring
-    # 64x64 8-bit RGB non-interlaced (bytes 1-29 of a minimal writer)
-    png_hdr = F.unhex(F.lit(_MM_PNG_HDR_HEX))
-    is_real_png = F.substring("payload", 1, 29) == png_hdr
-    # a real resized BMP: the geometry-determined 54-byte header + raster
-    bmp_hdr = F.unhex(F.lit(_MM_BMP_HDR_HEX))
-    is_real_bmp = (F.substring("payload", 1, 54) == bmp_hdr) & (
-        F.length("payload") == 54 + 64 * 64 * 3
-    )
-    # a real resized JPEG: the writer's content-independent SOI..SOS
-    # prefix for the 64x64 geometry (entropy body varies with content)
-    jpg_hdr_hex = _mm_jpg_hdr_hex()
-    is_real_jpg = F.substring("payload", 1, len(jpg_hdr_hex) // 2) == F.unhex(
-        F.lit(jpg_hdr_hex)
-    )
-    # a real resized GIF: GIF89a signature + the 64x64 screen descriptor
-    is_real_gif = F.substring("payload", 1, 10) == F.unhex(F.lit(_MM_GIF64_HDR_HEX))
-    is_real = is_real_ppm | is_real_png | is_real_bmp | is_real_jpg | is_real_gif
-    is_stub = F.length("payload") == 64 * 64
-    r_dig = spark.read.parquet(f"{root}/resized").agg(
-        F.sum(
-            (
-                (F.col("kind") == "image")
-                & (F.col("width") == 64)
-                & (F.col("height") == 64)
-                & (is_real | is_stub)
-            ).cast("int")
-        ).cast("long").alias("n_resized_ok"),
-        F.sum(((F.col("kind") == "image") & is_real_ppm).cast("int"))
-        .cast("long")
-        .alias("n_resized_real"),
-        F.sum(((F.col("kind") == "image") & is_real_png).cast("int"))
-        .cast("long")
-        .alias("n_resized_real_png"),
-        F.sum(((F.col("kind") == "image") & is_real_bmp).cast("int"))
-        .cast("long")
-        .alias("n_resized_real_bmp"),
-        F.sum(((F.col("kind") == "image") & is_real_jpg).cast("int"))
-        .cast("long")
-        .alias("n_resized_real_jpeg"),
-        F.sum(((F.col("kind") == "image") & is_real_gif).cast("int"))
-        .cast("long")
-        .alias("n_resized_real_gif"),
-        F.bit_xor(
-            F.xxhash64(
-                "asset_id", F.sha2("payload", 256), F.col("meta.width"), F.col("meta.height")
-            )
-        ).alias("resize_hash"),
-    )
-    # real-video classification (r7): frames of animated-GIF-carrying
-    # videos rode the real frame decode (frame_sha = sha of actual RGB);
-    # the oracle recomputes the count from the same two parquets, and the
-    # pinned frames_hash gates the decoded pixel content itself
-    gif_vids = assets.filter(
-        (F.col("kind") == "video")
-        & (F.substring("payload", 1, 4) == F.unhex(F.lit("47494638")))
-    ).select("asset_id", F.lit(True).alias("__gif"))
-    fr_dig = (
-        spark.read.parquet(f"{root}/frames")
-        .join(F.broadcast(gif_vids), "asset_id", "left")
-        .agg(
-            F.count("*").cast("long").alias("n_frames"),
-            F.countDistinct("asset_id").alias("n_frame_videos"),
-            F.sum(F.coalesce(F.col("__gif"), F.lit(False)).cast("int"))
-            .cast("long")
-            .alias("n_frames_real"),
-            F.bit_xor(F.xxhash64("asset_id", "frame_idx", "frame_sha")).alias(
-                "frames_hash"
-            ),
-        )
-    )
-    return (
-        f_dig.crossJoin(kinds)
-        .crossJoin(r_dig)
-        .crossJoin(fr_dig)
-        .withColumn("resize_covers_images", F.col("n_resized_ok") == F.col("n_images"))
-        .withColumn("frames_cover_videos", F.col("n_frame_videos") == F.col("n_videos"))
     )
 
 

@@ -153,8 +153,8 @@ def _viridis(x: float) -> tuple[int, int, int]:
 
 def png_encode(w: int, h: int, rgb: bytes, level: int = 6) -> bytes:
     """Encode raw RGB bytes as a minimal PNG (8-bit RGB, filter 0 rows,
-    one IDAT). The matching stdlib decoder lives in
-    multimodal/binary_ops.py:_png_parse — round-trip property-tested."""
+    one IDAT). Round-trip property-tested against an independent decoder
+    in tests/test_report.py::test_png_roundtrip_property."""
     raw = b"".join(b"\x00" + rgb[y * w * 3 : (y + 1) * w * 3] for y in range(h))
 
     def chunk(tag: bytes, data: bytes) -> bytes:

@@ -51,7 +51,6 @@ CARTESIAN_OK = {
     "dd_fuzzy_dedup",
     "cur_source_mixing",  # mixing rows x 1-row packing-invariant digest (r5)
     "p5_p6_fanout_filter",  # degree rows x broadcast 1-row quartile band (r6)
-    "mm_binary_pipeline",
     "st_stream_batch_equiv",
     "a6_a10_confusion",   # 5-row pivot x 1-row full-match summary
     # negative pairs over a 25-row DIMENSION table: the oracle-matched

@@ -569,3 +569,34 @@ def test_ngram_lm_pretrained_matches_selftrain(spark, tmp_path):
     }
     assert pre == self_t
     assert len(pre) == docs.count()
+
+
+def test_lm_artifact_keyed_per_document_table(spark, tmp_path):
+    """Two Spark-written document tables in two directories, with the same
+    file count and the same directory mtime, each get their own persisted
+    LM: the scratch key covers the table's real path and every file under
+    it, not the directory's size and mtime alone."""
+    import os
+    import shutil
+
+    from bioie_llm_spark import queries as Q
+    from bioie_llm_spark.operators.curation import load_ngram_lm, train_ngram_lm
+
+    dirs = {"alpha beta gamma": str(tmp_path / "a"), "delta epsilon": str(tmp_path / "b")}
+    for text, sf_dir in dirs.items():
+        table = f"{sf_dir}/documents.parquet"
+        spark.createDataFrame([(1, text)], "doc_id long, text string").coalesce(
+            1
+        ).write.parquet(table)
+        os.utime(table, ns=(1_700_000_000 * 10**9,) * 2)
+    roots = []
+    try:
+        roots = [Q._lm_parquet(spark, sf_dir) for sf_dir in dirs.values()]
+        assert roots[0] != roots[1]
+        for sf_dir, root in zip(dirs.values(), roots):
+            uni, _ = load_ngram_lm(spark, root)
+            own, _ = train_ngram_lm(Q.load(spark, sf_dir, "documents"))
+            assert sorted(uni.collect()) == sorted(own.collect())
+    finally:
+        for root in roots:
+            shutil.rmtree(root, ignore_errors=True)

@@ -133,3 +133,10 @@ def test_iterative_loops_leave_session_shuffle_conf_alone(spark, monkeypatch, fn
         assert spark.conf.get(key) == "13" and probe_parts() == {13}
     finally:
         spark.conf.set(key, orig)
+
+
+def test_pagerank_empty_edges_returns_empty(spark):
+    """An empty or all-self-loop edge set yields an empty (node, rank_int)
+    frame, not ZeroDivisionError."""
+    empty = spark.createDataFrame([("a", "a")], "src string, dst string")
+    assert pagerank_fixed_point(empty).count() == 0

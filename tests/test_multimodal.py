@@ -2,8 +2,6 @@
 and the pure-stdlib real-decode branches — PPM (VERDICT r3 #6), PNG
 (VERDICT r4 #5), BMP and PCM WAV (r5)."""
 
-import warnings
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,7 +13,6 @@ from bioie_llm_spark.multimodal.binary_ops import (
     _fake_features,
     _image_features,
     _nn_resample,
-    _png_encode,
     _png_parse,
     _ppm_encode,
     _ppm_parse,
@@ -49,14 +46,6 @@ def _is_wav(payload: bytes) -> bool:
     return p[:4] == b"RIFF" and p[8:12] == b"WAVE"
 
 
-def _is_jpg(payload: bytes) -> bool:
-    return bytes(payload).startswith(b"\xff\xd8")
-
-
-def _is_gif(payload: bytes) -> bool:
-    return bytes(payload)[:6] in (b"GIF87a", b"GIF89a")
-
-
 def test_synth_assets_shape(spark):
     a = synth_assets(spark, 64)
     assert a.count() == 64
@@ -80,36 +69,18 @@ def test_synth_assets_shape(spark):
             sr, nch, samples = _wav_parse(p)
             assert (sr, nch, len(samples)) == (16000, 1, 64)
             assert row["kind"] == "audio"
-        elif _is_jpg(p):
-            from bioie_llm_spark.multimodal.jpeg_codec import jpeg_parse
-
-            assert jpeg_parse(p)[:2] == (8, 8)
-            assert row["kind"] == "image"
-        elif _is_gif(p):
-            from bioie_llm_spark.multimodal.gif_codec import gif_parse_frames
-
-            w, h, frames = gif_parse_frames(p)
-            assert (w, h) == (8, 8)
-            # still GIFs are images; animated GIFs are the video fixtures
-            if row["kind"] == "video":
-                assert len(frames) == row["meta"]["n_frames"]
-            else:
-                assert row["kind"] == "image" and len(frames) == 1
         else:
             assert len(p) == JUNK_LEN
     kinds = {r["kind"] for r in rows}
     assert kinds <= {"image", "audio", "video"}
-    # all seven payload branches must be represented in the standard corpus
+    # all five payload branches must be represented in the standard corpus
     payloads = [bytes(r["payload"]) for r in rows]
     assert any(_is_ppm(p) for p in payloads)
     assert any(_is_png(p) for p in payloads)
     assert any(_is_bmp(p) for p in payloads)
-    assert any(_is_jpg(p) for p in payloads)
-    assert any(_is_gif(p) for p in payloads)
     assert any(_is_wav(p) for p in payloads)
     assert any(
-        not (_is_ppm(p) or _is_png(p) or _is_bmp(p) or _is_jpg(p) or _is_gif(p)
-             or _is_wav(p))
+        not (_is_ppm(p) or _is_png(p) or _is_bmp(p) or _is_wav(p))
         for p in payloads
     )
 
@@ -146,18 +117,6 @@ def test_extract_features_real_vs_stub_dispatch(spark):
             n_real += 1
         elif _is_bmp(p):
             w, h, rgb = _bmp_parse(p)
-            expect = _image_features(w, h, rgb, FEATURE_DIM)
-            n_real += 1
-        elif _is_jpg(p):
-            from bioie_llm_spark.multimodal.jpeg_codec import jpeg_parse
-
-            w, h, rgb = jpeg_parse(p)
-            expect = _image_features(w, h, rgb, FEATURE_DIM)
-            n_real += 1
-        elif _is_gif(p):
-            from bioie_llm_spark.multimodal.gif_codec import gif_parse
-
-            w, h, rgb = gif_parse(p)
             expect = _image_features(w, h, rgb, FEATURE_DIM)
             n_real += 1
         elif _is_wav(p):
@@ -242,29 +201,6 @@ def test_resize_images(spark):
                 assert (w, h) == (32, 16)
                 sw, sh, srgb = _bmp_parse(orig[aid])
                 assert rgb == _nn_resample(sw, sh, srgb, 32, 16)
-            elif _is_jpg(orig[aid]):
-                # REAL branch, JPEG in -> JPEG out (format preserved).
-                # JPEG is lossy: the re-encoded pixels must be WITHIN the
-                # flat-table error bound of the NN resample of the decoded
-                # source, not bit-equal
-                from bioie_llm_spark.multimodal.jpeg_codec import jpeg_parse
-
-                assert _is_jpg(bytes(r["payload"]))
-                w, h, rgb = jpeg_parse(bytes(r["payload"]))
-                assert (w, h) == (32, 16)
-                sw, sh, srgb = jpeg_parse(orig[aid])
-                want = _nn_resample(sw, sh, srgb, 32, 16)
-                assert max(abs(a - b) for a, b in zip(rgb, want)) <= 4
-            elif _is_gif(orig[aid]):
-                # REAL branch, GIF in -> GIF out (format preserved; GIF is
-                # lossless so the resample round-trips bit-exactly)
-                from bioie_llm_spark.multimodal.gif_codec import gif_parse
-
-                assert _is_gif(bytes(r["payload"]))
-                w, h, rgb = gif_parse(bytes(r["payload"]))
-                assert (w, h) == (32, 16)
-                sw, sh, srgb = gif_parse(orig[aid])
-                assert rgb == _nn_resample(sw, sh, srgb, 32, 16)
             else:
                 # stub branch: byte-per-pixel hash-derived stand-in
                 assert len(r["payload"]) == 32 * 16
@@ -319,26 +255,6 @@ def _rgb_of(seed: int, n: int) -> bytes:
         buf.extend(hashlib.md5(f"{seed}|{i}".encode()).digest())
         i += 1
     return bytes(buf[:n])
-
-
-def test_png_roundtrip_property():
-    """Hypothesis (VERDICT r4 #5): report.py's stdlib PNG ENCODER (deflate
-    level 6) round-trips through binary_ops' stdlib DECODER for any
-    (w, h, rgb), as does the stored-block re-encoder the resize path
-    emits — the two halves of the codec pin each other."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from bioie_llm_spark.report import png_encode
-
-    @settings(max_examples=150, deadline=None)
-    @given(w=st.integers(1, 12), h=st.integers(1, 12), seed=st.integers(0, 2**32 - 1))
-    def check(w, h, seed):
-        rgb = _rgb_of(seed, w * h * 3)
-        assert _png_parse(png_encode(w, h, rgb)) == (w, h, rgb)
-        assert _png_parse(_png_encode(w, h, rgb)) == (w, h, rgb)
-
-    check()
 
 
 def test_png_parse_all_filters():
@@ -546,599 +462,3 @@ def test_png_parse_rejects_unsupported():
     ):
         with _pytest.raises(NotImplementedError):
             _png_parse(bad)
-
-
-class TestJpegCodec:
-    """Baseline JPEG codec (r6, VERDICT r5 #6): round-trip bounds,
-    subsampling, geometry padding, and the NotImplementedError contract
-    for everything outside the baseline-sequential path."""
-
-    def test_roundtrip_444_noise_bound(self):
-        import hashlib
-
-        from bioie_llm_spark.multimodal.jpeg_codec import jpeg_encode, jpeg_parse
-
-        rgb = b"".join(hashlib.md5(f"px{j}|7".encode()).digest() for j in range(12))
-        enc = jpeg_encode(8, 8, rgb, "444")
-        w, h, dec = jpeg_parse(enc)
-        assert (w, h) == (8, 8)
-        # flat quant tables: the only loss is DCT float rounding
-        assert max(abs(a - b) for a, b in zip(rgb, dec)) <= 2
-        # deterministic both ways
-        assert jpeg_encode(8, 8, rgb, "444") == enc
-        assert jpeg_parse(enc)[2] == dec
-
-    def test_roundtrip_420_smooth(self):
-        from bioie_llm_spark.multimodal.jpeg_codec import jpeg_encode, jpeg_parse
-
-        # constant color survives 2x2 chroma subsampling nearly exactly
-        rgb = bytes([120, 200, 64] * (16 * 16))
-        _, _, dec = jpeg_parse(jpeg_encode(16, 16, rgb, "420"))
-        assert max(abs(a - b) for a, b in zip(rgb, dec)) <= 2
-        # a smooth gradient stays within a moderate bound
-        grad = bytearray()
-        for y in range(16):
-            for x in range(16):
-                grad += bytes([x * 16, 255 - x * 16, 128])
-        _, _, dec2 = jpeg_parse(jpeg_encode(16, 16, bytes(grad), "420"))
-        assert max(abs(a - b) for a, b in zip(grad, dec2)) <= 16
-
-    def test_non_multiple_of_8_geometry(self):
-        import hashlib
-
-        from bioie_llm_spark.multimodal.jpeg_codec import jpeg_encode, jpeg_parse
-
-        raw = b"".join(hashlib.md5(f"q{j}".encode()).digest() for j in range(100))
-        for w, h, sub in ((21, 13, "444"), (21, 13, "420"), (1, 1, "444")):
-            rgb = raw[: w * h * 3]
-            dw, dh, dec = jpeg_parse(jpeg_encode(w, h, rgb, sub))
-            assert (dw, dh) == (w, h)
-            assert len(dec) == w * h * 3
-
-    def test_header_prefix_is_content_independent(self):
-        import hashlib
-
-        from bioie_llm_spark.multimodal.jpeg_codec import jpeg_encode, jpeg_header_hex
-
-        hdr = bytes.fromhex(jpeg_header_hex(8, 8))
-        for seed in ("a", "b"):
-            rgb = b"".join(
-                hashlib.md5(f"{seed}{j}".encode()).digest() for j in range(12)
-            )
-            assert jpeg_encode(8, 8, rgb).startswith(hdr)
-        # a different geometry changes the prefix (SOF dims)
-        assert jpeg_header_hex(8, 8) != jpeg_header_hex(16, 8)
-
-    def test_unsupported_variants_raise_not_implemented(self):
-        import struct
-
-        import pytest as _pytest
-
-        from bioie_llm_spark.multimodal.jpeg_codec import jpeg_parse
-
-        cases = {
-            "not jpeg": b"BM\x00\x00",
-            "truncated SOF2": b"\xff\xd8\xff\xc2\x00\x06\x08\x00\x08\x00",
-            "arithmetic": b"\xff\xd8\xff\xc9\x00\x06\x08\x00\x08\x00",
-            "dri with no scan": b"\xff\xd8\xff\xdd\x00\x04\x00\x10",
-            "truncated": b"\xff\xd8\xff\xdb\x00\x43\x00" + bytes(64),
-            "empty": b"",
-        }
-        for label, payload in cases.items():
-            with _pytest.raises(NotImplementedError):
-                jpeg_parse(payload)
-        # 12-bit precision SOF0
-        sof12 = b"\xff\xd8" + b"\xff\xc0" + struct.pack(">HBHHB", 17, 12, 8, 8, 3) + bytes(9)
-        with _pytest.raises(NotImplementedError):
-            jpeg_parse(sof12)
-
-    def test_restart_interval_roundtrip(self):
-        """DRI/RSTn streams (what real web JPEGs carry) decode exactly
-        like the marker-free stream: same pixels, predictor reset and
-        byte realign at each restart."""
-        import hashlib
-
-        from bioie_llm_spark.multimodal.jpeg_codec import jpeg_encode, jpeg_parse
-
-        raw = b"".join(hashlib.md5(f"r{j}".encode()).digest() for j in range(200))
-        # 32x24 444 -> 12 MCUs; interval 2 -> 5 restart markers
-        rgb = raw[: 32 * 24 * 3]
-        plain = jpeg_encode(32, 24, rgb, "444")
-        rst = jpeg_encode(32, 24, rgb, "444", restart_interval=2)
-        assert rst != plain and b"\xff\xdd" in rst
-        assert jpeg_parse(rst) == jpeg_parse(plain)
-        # 420: MCU = 16x16 -> 4 MCUs at 32x24, interval 1 hits every MCU
-        rst420 = jpeg_encode(32, 24, rgb, "420", restart_interval=1)
-        assert jpeg_parse(rst420) == jpeg_parse(jpeg_encode(32, 24, rgb, "420"))
-        # a stream whose DRI promises restarts that never appear must
-        # fall back, not crash
-        import pytest as _pytest
-
-        broken = rst.replace(b"\xff\xd0", b"\x00\x00", 1)
-        with _pytest.raises(NotImplementedError):
-            jpeg_parse(broken)
-
-    def test_grayscale_single_component_decode(self):
-        """1-component JPEGs (the decoder's grayscale path) decode to
-        replicated-RGB; the stream is hand-framed since the fixture
-        writer only emits 3-component YCbCr."""
-        import struct
-
-        from bioie_llm_spark.multimodal.jpeg_codec import (
-            _DC_LUM,
-            _AC_LUM,
-            _Q_FLAT,
-            _BitWriter,
-            _encode_block,
-            _huff_codes,
-            jpeg_parse,
-        )
-
-        # constant gray 100 over one 8x8 block
-        samples = [100.0] * 64
-        bw = _BitWriter()
-        _encode_block(
-            bw, samples, _Q_FLAT, _huff_codes(*_DC_LUM), _huff_codes(*_AC_LUM), 0
-        )
-        bw.flush()
-        out = bytearray(b"\xff\xd8")
-        out += b"\xff\xdb" + struct.pack(">HB", 67, 0) + bytes(_Q_FLAT)
-        out += b"\xff\xc0" + struct.pack(">HBHHB", 11, 8, 8, 8, 1)
-        out += struct.pack(">BBB", 1, 0x11, 0)
-        for cls, tid, (bits, vals) in ((0, 0, _DC_LUM), (1, 0, _AC_LUM)):
-            out += b"\xff\xc4" + struct.pack(">HB", 19 + len(vals), (cls << 4) | tid)
-            out += bytes(bits) + bytes(vals)
-        out += b"\xff\xda" + struct.pack(">HB", 8, 1) + struct.pack(">BB", 1, 0x00)
-        out += struct.pack(">BBB", 0, 63, 0)
-        out += bytes(bw.buf) + b"\xff\xd9"
-        w, h, rgb = jpeg_parse(bytes(out))
-        assert (w, h) == (8, 8)
-        assert len(rgb) == 8 * 8 * 3
-        # constant gray: every channel equals the input within rounding,
-        # and R == G == B exactly (replication)
-        assert all(abs(b - 100) <= 1 for b in rgb)
-        assert all(rgb[i] == rgb[i + 1] == rgb[i + 2] for i in range(0, len(rgb), 3))
-
-
-class TestJpegProgressive:
-    """r7: SOF2 progressive decode (T.81 Annex G — spectral selection +
-    successive approximation). The encoder twin carries the SAME
-    quantized coefficients as the baseline writer, so every fixture pins
-    progressive decode == baseline decode BIT-FOR-BIT."""
-
-    @staticmethod
-    def _pix(tag, w, h):
-        import hashlib
-
-        out = b""
-        i = 0
-        while len(out) < w * h * 3:
-            out += hashlib.md5(f"{tag}|{i}".encode()).digest()
-            i += 1
-        return out[: w * h * 3]
-
-    def test_matches_baseline_noise_and_geometries(self):
-        from bioie_llm_spark.multimodal.jpeg_codec import (
-            jpeg_encode,
-            jpeg_encode_progressive,
-            jpeg_parse,
-        )
-
-        # non-multiple-of-8/16 dims exercise the padded-MCU-grid vs
-        # non-padded-component-grid split between interleaved DC scans
-        # and per-component AC scans
-        for w, h, sub in [(8, 8, "444"), (13, 11, "444"), (24, 21, "420"), (33, 17, "420")]:
-            rgb = self._pix(f"{w}x{h}{sub}", w, h)
-            base = jpeg_parse(jpeg_encode(w, h, rgb, subsampling=sub))
-            prog = jpeg_parse(jpeg_encode_progressive(w, h, rgb, subsampling=sub))
-            assert base == prog, f"progressive != baseline at {w}x{h} {sub}"
-
-    def test_matches_baseline_smooth_eob_runs(self):
-        """Smooth gradients leave most AC coefficients zero — the encoder
-        accumulates multi-block EOB runs and the decoder's EOBRUN skip +
-        carried-correction-bit paths are what reconstructs them."""
-        from bioie_llm_spark.multimodal.jpeg_codec import (
-            jpeg_encode,
-            jpeg_encode_progressive,
-            jpeg_parse,
-        )
-
-        w, h = 32, 24
-        rgb = bytes(
-            min(255, (x + y) // 2) for y in range(h) for x in range(w) for _ in range(3)
-        )
-        for sub in ("444", "420"):
-            base = jpeg_parse(jpeg_encode(w, h, rgb, subsampling=sub))
-            prog = jpeg_parse(jpeg_encode_progressive(w, h, rgb, subsampling=sub))
-            assert base == prog
-
-    def test_matches_baseline_sparse_zrl_refine(self):
-        """Near-flat pixels with scattered ±1 bumps produce blocks whose
-        band has >16 zero-history coefficients before a newly-nonzero one
-        — the ZRL-inside-refinement path with interleaved correction
-        bits."""
-        import hashlib
-
-        from bioie_llm_spark.multimodal.jpeg_codec import (
-            jpeg_encode,
-            jpeg_encode_progressive,
-            jpeg_parse,
-        )
-
-        w, h = 40, 32
-        base_v = 120
-        px = bytearray()
-        for y in range(h):
-            for x in range(w):
-                bump = hashlib.md5(f"z|{x}|{y}".encode()).digest()[0] % 11 == 0
-                v = base_v + (3 if bump else 0)
-                px += bytes((v, v, v))
-        base = jpeg_parse(jpeg_encode(w, h, bytes(px)))
-        prog = jpeg_parse(jpeg_encode_progressive(w, h, bytes(px)))
-        assert base == prog
-
-    def test_grayscale_progressive(self):
-        from bioie_llm_spark.multimodal.jpeg_codec import (
-            jpeg_encode_progressive,
-            jpeg_parse,
-        )
-
-        rgb = bytes(100 for _ in range(8 * 8 * 3))
-        w, h, out = jpeg_parse(jpeg_encode_progressive(8, 8, rgb, grayscale=True))
-        assert (w, h) == (8, 8)
-        assert all(abs(b - 100) <= 1 for b in out)
-        assert all(out[i] == out[i + 1] == out[i + 2] for i in range(0, len(out), 3))
-
-    def test_prog_header_prefix_is_content_independent(self):
-        from bioie_llm_spark.multimodal.jpeg_codec import (
-            jpeg_encode_progressive,
-            jpeg_prog_header_hex,
-        )
-
-        hdr = jpeg_prog_header_hex(8, 8)
-        for tag in ("a", "b", "c"):
-            p = jpeg_encode_progressive(8, 8, self._pix(tag, 8, 8))
-            assert p.hex().upper().startswith(hdr)
-        assert jpeg_prog_header_hex(16, 8) != hdr  # geometry-dependent
-
-    def test_roundtrip_property(self):
-        """Hypothesis sweep: random geometry + subsampling + pixels, the
-        progressive twin always reproduces the baseline decode."""
-        from hypothesis import given, settings
-        from hypothesis import strategies as st
-
-        from bioie_llm_spark.multimodal.jpeg_codec import (
-            jpeg_encode,
-            jpeg_encode_progressive,
-            jpeg_parse,
-        )
-
-        @settings(max_examples=8, deadline=None)
-        @given(
-            w=st.integers(min_value=4, max_value=24),
-            h=st.integers(min_value=4, max_value=24),
-            sub=st.sampled_from(["444", "420"]),
-            seed=st.integers(min_value=0, max_value=2**31),
-        )
-        def check(w, h, sub, seed):
-            rgb = self._pix(f"hyp{seed}", w, h)
-            base = jpeg_parse(jpeg_encode(w, h, rgb, subsampling=sub))
-            prog = jpeg_parse(jpeg_encode_progressive(w, h, rgb, subsampling=sub))
-            assert base == prog
-
-        check()
-
-    def test_mm_fixtures_real_decode_progressive(self, spark):
-        """The graded fixture set carries progressive-container JPEGs;
-        resize must route them through the REAL decode (output = the
-        baseline writer's 64x64 re-encode, not the stub raster)."""
-        from pyspark.sql import functions as F
-
-        from bioie_llm_spark.multimodal.binary_ops import resize_images, synth_assets
-        from bioie_llm_spark.multimodal.jpeg_codec import (
-            jpeg_header_hex,
-            jpeg_prog_header_hex,
-        )
-
-        assets = synth_assets(spark, 64)
-        prog_hdr = jpeg_prog_header_hex(8, 8)
-        prog_ids = {
-            r["asset_id"]
-            for r in assets.filter(
-                F.substring("payload", 1, len(prog_hdr) // 2)
-                == F.unhex(F.lit(prog_hdr))
-            ).collect()
-        }
-        assert len(prog_ids) >= 2, "fixture must contain progressive sources"
-        out_hdr = jpeg_header_hex(64, 64)
-        resized = {
-            r["asset_id"]: bytes(r["payload"])
-            for r in resize_images(assets, 64, 64).collect()
-        }
-        for aid in prog_ids:
-            assert resized[aid].hex().upper().startswith(out_hdr), (
-                f"progressive asset {aid} fell back to the stub"
-            )
-
-    def test_restart_intervals_in_progressive_scans(self):
-        """DRI/RSTn inside progressive scans (late r7): predictors and
-        the EOB run (with carried correction bits) reset at every
-        restart marker in every scan; decode must still equal the
-        baseline decode bit-for-bit, including when a smooth image's
-        multi-block EOB runs are forcibly truncated at each boundary."""
-        from bioie_llm_spark.multimodal.jpeg_codec import (
-            jpeg_encode,
-            jpeg_encode_progressive,
-            jpeg_parse,
-        )
-
-        for w, h, sub, ri in [(24, 21, "444", 2), (33, 17, "420", 1), (40, 32, "444", 5)]:
-            rgb = self._pix(f"rst{w}{h}{sub}{ri}", w, h)
-            base = jpeg_parse(jpeg_encode(w, h, rgb, subsampling=sub))
-            prog = jpeg_parse(
-                jpeg_encode_progressive(w, h, rgb, subsampling=sub, restart_interval=ri)
-            )
-            assert base == prog, f"restart mismatch at {w}x{h} {sub} ri={ri}"
-        w, h = 48, 32
-        smooth = bytes(
-            min(255, (x + y) // 2) for y in range(h) for x in range(w) for _ in range(3)
-        )
-        for ri in (1, 2, 4):
-            base = jpeg_parse(jpeg_encode(w, h, smooth))
-            prog = jpeg_parse(jpeg_encode_progressive(w, h, smooth, restart_interval=ri))
-            assert base == prog
-
-
-class TestGifCodec:
-    """Stdlib GIF87a/89a LZW codec (r7): lossless round-trips incl.
-    interlace and width-growth, real-file decode from independent
-    encoders when available, and declared-stub behavior on malformed
-    payloads."""
-
-    @staticmethod
-    def _pix(tag, w, h):
-        import hashlib
-
-        out = b""
-        i = 0
-        while len(out) < w * h * 3:
-            out += hashlib.md5(f"{tag}|{i}".encode()).digest()
-            i += 1
-        return out[: w * h * 3]
-
-    def test_roundtrip_lossless(self):
-        from bioie_llm_spark.multimodal.gif_codec import gif_encode, gif_parse
-
-        palsrc = self._pix("gifpal", 199, 1)  # 199*3 bytes of palette colors
-        pal = [palsrc[3 * i : 3 * i + 3] for i in range(199)]
-        for w, h in [(1, 1), (8, 8), (13, 7), (31, 29)]:
-            raw = self._pix(f"g{w}x{h}", w, h)
-            # quantize to the 199-color palette: GIF holds <= 256 colors
-            rgb = b"".join(pal[raw[3 * i] % 199] for i in range(w * h))
-            for il in (False, True):
-                assert gif_parse(gif_encode(w, h, rgb, interlace=il)) == (w, h, rgb)
-
-    def test_width_growth_and_kwkwk(self):
-        from bioie_llm_spark.multimodal.gif_codec import gif_encode, gif_parse
-
-        # grayscale gradient: up to 256 palette entries, forces several
-        # LZW width bumps; uniform image forces the KwKwK chain
-        w = h = 48
-        grad = bytes((x * 7 + y * 13) % 256 for y in range(h) for x in range(w) for _ in range(3))
-        assert gif_parse(gif_encode(w, h, grad))[2] == grad
-        flat = b"\x10\x20\x30" * (w * h)
-        assert gif_parse(gif_encode(w, h, flat))[2] == flat
-
-    def test_palette_boundary_256_colors(self):
-        import pytest
-
-        from bioie_llm_spark.multimodal.gif_codec import gif_encode, gif_parse
-
-        rgb = b"".join(bytes([c, 255 - c, c ^ 0x5A]) for c in range(256))
-        assert gif_parse(gif_encode(16, 16, rgb))[2] == rgb
-        over = rgb + b"\x01\x02\x03" + rgb[3:]  # 512 pixels, 257 distinct colors
-        with pytest.raises(NotImplementedError):
-            gif_encode(16, 32, over)
-
-    def test_malformed_payloads_take_declared_stub(self):
-        import pytest
-
-        from bioie_llm_spark.multimodal.gif_codec import gif_encode, gif_parse
-
-        ok = gif_encode(8, 8, self._pix("t", 8, 8))
-        for bad in (b"", b"GIF89a", ok[:20], ok[:-10], b"NOTAGIF" + ok):
-            with pytest.raises(NotImplementedError):
-                gif_parse(bad)
-
-    def test_real_gifs_from_independent_encoders(self):
-        """Decode GIFs written by third-party encoders (tk/Tix/idlelib
-        ship with the interpreter install) — validates the variable-width
-        LZW synchronization against the ecosystem, not just our own
-        writer. Skipped when no interpreter GIFs exist on the box."""
-        import glob
-
-        import pytest
-
-        from bioie_llm_spark.multimodal.gif_codec import gif_parse
-
-        paths = sorted(
-            glob.glob("/mnt/sandboxing/model_tools_env/*/python/install/lib/**/*.gif",
-                      recursive=True)
-        )[:12]
-        if not paths:
-            pytest.skip("no third-party GIFs on this box")
-        decoded = 0
-        for p in paths:
-            try:
-                w, h, rgb = gif_parse(open(p, "rb").read())
-            except NotImplementedError:
-                continue  # truncated/animated files take the declared stub
-            assert len(rgb) == w * h * 3
-            decoded += 1
-        assert decoded >= max(1, len(paths) // 2)
-
-    def test_dispatch_routes_gif(self):
-        from bioie_llm_spark.multimodal.binary_ops import _image_parse
-        from bioie_llm_spark.multimodal.gif_codec import gif_encode
-
-        rgb = self._pix("disp", 8, 8)
-        fmt, w, h, got = _image_parse(gif_encode(8, 8, rgb, interlace=True))
-        assert (fmt, w, h, got) == ("gif", 8, 8, rgb)
-
-    def test_resize_keeps_gif_container(self):
-        from bioie_llm_spark.multimodal.binary_ops import _real_decode
-        from bioie_llm_spark.multimodal.gif_codec import gif_encode, gif_parse
-
-        src = gif_encode(8, 8, self._pix("rz", 8, 8))
-        out = _real_decode("resize_image_row", src, 64, 64)
-        w, h, rgb = gif_parse(out)
-        assert (w, h) == (64, 64) and len(rgb) == 64 * 64 * 3
-
-
-class TestAnimatedGif:
-    """Animated-GIF video branch (r7): multi-frame round-trips, the
-    composition cases the decoder deliberately refuses, and sample_frames'
-    real-vs-stub per-row dispatch."""
-
-    @staticmethod
-    def _frames(tag, n, w=8, h=8):
-        import hashlib
-
-        src = b"".join(
-            hashlib.md5(f"{tag}p|{i}".encode()).digest() for i in range(13)
-        )
-        pal = [src[3 * i : 3 * i + 3] for i in range(64)]
-        out = []
-        for k in range(n):
-            sel = hashlib.md5(f"{tag}f|{k}".encode()).digest()
-            while len(sel) < w * h:
-                sel += hashlib.md5(sel).digest()
-            out.append(b"".join(pal[sel[i] % 64] for i in range(w * h)))
-        return out
-
-    def test_animated_roundtrip(self):
-        from bioie_llm_spark.multimodal.gif_codec import (
-            gif_encode_animated,
-            gif_parse,
-            gif_parse_frames,
-        )
-
-        for n in (1, 2, 7, 30):
-            frames = self._frames(f"a{n}", n)
-            enc = gif_encode_animated(8, 8, frames)
-            assert gif_parse_frames(enc) == (8, 8, frames)
-            assert gif_parse(enc) == (8, 8, frames[0])  # first frame only
-
-    def test_subrect_and_transparent_animations_take_stub(self):
-        import struct
-
-        import pytest
-
-        from bioie_llm_spark.multimodal.gif_codec import (
-            gif_encode_animated,
-            gif_parse_frames,
-        )
-
-        enc = bytearray(gif_encode_animated(8, 8, self._frames("sr", 2)))
-        # corrupt the SECOND image descriptor into a sub-rectangle
-        second = enc.index(b"\x2c", enc.index(b"\x2c") + 1)
-        sub = bytearray(enc)
-        sub[second + 1 : second + 9] = struct.pack("<HHHH", 1, 1, 4, 4)
-        with pytest.raises(NotImplementedError):
-            gif_parse_frames(bytes(sub))
-        # set the transparency flag in the SECOND frame's GCE
-        tr = bytearray(enc)
-        gce2 = tr.index(b"\x21\xf9", tr.index(b"\x21\xf9") + 1)
-        tr[gce2 + 3] |= 0x01
-        with pytest.raises(NotImplementedError):
-            gif_parse_frames(bytes(tr))
-
-    def test_sample_frames_real_vs_stub(self, spark):
-        import hashlib
-
-        from bioie_llm_spark.multimodal.gif_codec import gif_parse_frames
-
-        assets = synth_assets(spark, 64)
-        vids = {
-            r["asset_id"]: (bytes(r["payload"]), r["meta"]["n_frames"])
-            for r in assets.collect()
-            if r["kind"] == "video"
-        }
-        real_ids = {a for a, (p, _) in vids.items() if _is_gif(p)}
-        assert len(real_ids) >= 2, "fixture must carry real animated GIFs"
-        got = {}
-        for r in sample_frames(assets, every=5).collect():
-            got[(r["asset_id"], r["frame_idx"])] = r["frame_sha"]
-        for aid, (p, n) in vids.items():
-            if aid in real_ids:
-                w, h, frames = gif_parse_frames(p)
-                assert len(frames) == n  # writer emits exactly meta.n_frames
-                for idx in range(0, n, 5):
-                    assert got[(aid, idx)] == hashlib.sha256(frames[idx]).hexdigest()
-            else:
-                for idx in range(0, n, 5):
-                    want = hashlib.sha256(p + idx.to_bytes(4, "big")).hexdigest()
-                    assert got[(aid, idx)] == want
-
-
-def test_gif_malformed_payload_raises_not_implemented():
-    """ADVICE r7: truncated/garbled GIF bytes must surface as
-    NotImplementedError (the stub-routing signal the per-row dispatch
-    catches), never a bare struct.error/IndexError that would hard-fail
-    the Spark task."""
-    import pytest
-
-    from bioie_llm_spark.multimodal.gif_codec import gif_encode, gif_parse_frames
-
-    good = gif_encode(4, 3, bytes(range(36)))
-    # a truncated payload either raises NotImplementedError (stub route)
-    # or still decodes a complete prefix (e.g. missing trailer after a
-    # full image block) — any OTHER exception class is the task-killing
-    # bug this guards against
-    for cut in range(0, len(good)):
-        try:
-            gif_parse_frames(good[:cut])
-        except NotImplementedError:
-            pass
-    # garbled interior bytes (bad signature/labels/sizes): same contract
-    for i in range(6, min(len(good), 40)):
-        bad = bytearray(good)
-        bad[i] ^= 0xFF
-        try:
-            gif_parse_frames(bytes(bad))
-        except NotImplementedError:
-            pass  # the only acceptable failure mode
-    # and at least the header truncations must actually stub-route
-    with pytest.raises(NotImplementedError):
-        gif_parse_frames(good[:8])
-
-
-def test_gif_transparent_first_frame_animation_rejected():
-    """ADVICE r7: an animation whose FIRST frame carries the transparency
-    flag must take the declared stub (previously frame 0 silently decoded
-    the transparent index as an opaque color)."""
-    import pytest
-
-    from bioie_llm_spark.multimodal.gif_codec import (
-        gif_encode_animated,
-        gif_parse_frames,
-    )
-
-    rgb = bytes(12)
-    anim = bytearray(gif_encode_animated(2, 2, [rgb, rgb]))
-    # inject a Graphic Control Extension with transparency set before the
-    # FIRST image descriptor (0x2C)
-    first_img = anim.index(0x2C, 13)
-    gce = bytes([0x21, 0xF9, 0x04, 0x01, 0x00, 0x00, 0x00, 0x00])
-    patched = bytes(anim[:first_img]) + gce + bytes(anim[first_img:])
-    with pytest.raises(NotImplementedError, match="transparent"):
-        gif_parse_frames(patched)
-
-
-def test_pagerank_empty_edges_returns_empty(spark):
-    """ADVICE r7: an empty / all-self-loop edge set must yield an empty
-    (node, rank_int) frame, not ZeroDivisionError."""
-    from bioie_llm_spark.operators.graph import pagerank_fixed_point
-
-    empty = spark.createDataFrame([("a", "a")], "src string, dst string")
-    assert pagerank_fixed_point(empty).count() == 0

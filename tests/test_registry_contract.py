@@ -1,5 +1,12 @@
 """Registry-level contract the driver harness depends on."""
 
+import os
+import sys
+
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
+
+from audit_plans import CARTESIAN_OK  # noqa: E402
+
 from bioie_llm_spark.golden import GOLDEN_QUERIES, HYBRID_PINNED, load_golden
 from bioie_llm_spark.queries import REGISTRY
 
@@ -42,6 +49,20 @@ def test_golden_file_complete():
         assert [c for c, _ in g[name]["columns"]] == cols, name
 
 
+def test_golden_keys_are_pinned_rows():
+    """The reverse of test_golden_file_complete: every golden entry belongs
+    to a GOLDEN_QUERIES / HYBRID_PINNED row, so a deleted row leaves no
+    orphaned key behind."""
+    orphans = set(load_golden()) - set(GOLDEN_QUERIES) - set(HYBRID_PINNED)
+    assert not orphans, sorted(orphans)
+
+
+def test_cartesian_allow_list_names_registry_rows():
+    """Every CARTESIAN_OK name is a registry row, so removing a row
+    cannot leave its plan-audit exemption behind."""
+    assert CARTESIAN_OK <= set(REGISTRY), sorted(CARTESIAN_OK - set(REGISTRY))
+
+
 def test_golden_invariants_hold():
     """Every self-check boolean left the golden file in r5: the last two
     fully-pinned rows (sim_ann_recall, sim_near_dup_lsh) went hybrid, so
@@ -73,6 +94,3 @@ def test_golden_invariants_hold():
     # idempotent_ok and keeper_is_min_ok/clusters_eq_keepers are now
     # RECOMPUTED by the DuckDB oracle from materialized parquet (closure_ok
     # stays an engine-side check the oracle expects literal true).
-    # mm_binary_pipeline went hybrid in r5: resize_covers_images /
-    # frames_cover_videos and every count are recomputed by the oracle
-    # from the materialized stage parquet; only the three hashes pin.

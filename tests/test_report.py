@@ -3,10 +3,14 @@
 import struct
 import zlib
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from bioie_llm_spark.report import (
     confusion_png,
     confusion_pivot,
     model_comparison,
+    png_encode,
     render_confusion,
 )
 
@@ -19,6 +23,29 @@ M3 = [("s1", "a", "a"), ("s2", "a", "a"), ("s3", "a", "b"), ("s4", "a", "b")]
 def _frames(spark):
     mk = lambda rows: spark.createDataFrame(rows, "src string, pred string, true string")
     return {"m1": mk(M1), "m2": mk(M2), "m3": mk(M3)}
+
+
+def _png_decode(blob: bytes) -> tuple[int, int, bytes]:
+    """Minimal decoder for the PNGs ``png_encode`` writes: checks the
+    signature, every chunk's CRC and an 8-bit RGB IHDR, inflates the IDAT
+    stream and requires filter byte 0 on every row."""
+    assert blob[:8] == b"\x89PNG\r\n\x1a\n"
+    pos, chunks = 8, []
+    while pos < len(blob):
+        (n,) = struct.unpack(">I", blob[pos : pos + 4])
+        tag, data = blob[pos + 4 : pos + 8], blob[pos + 8 : pos + 8 + n]
+        (crc,) = struct.unpack(">I", blob[pos + 8 + n : pos + 12 + n])
+        assert crc == zlib.crc32(tag + data) & 0xFFFFFFFF, tag
+        chunks.append((tag, data))
+        pos += 12 + n
+    assert chunks[0][0] == b"IHDR" and chunks[-1] == (b"IEND", b"")
+    w, h, depth, color, comp, filt, interlace = struct.unpack(">IIBBBBB", chunks[0][1])
+    assert (depth, color, comp, filt, interlace) == (8, 2, 0, 0, 0)
+    raw = zlib.decompress(b"".join(d for t, d in chunks if t == b"IDAT"))
+    stride = 1 + w * 3
+    assert len(raw) == h * stride
+    assert all(raw[y * stride] == 0 for y in range(h))
+    return w, h, b"".join(raw[y * stride + 1 : (y + 1) * stride] for y in range(h))
 
 
 def test_model_comparison(spark):
@@ -65,20 +92,14 @@ def test_confusion_png(spark, tmp_path):
     path = str(tmp_path / "cm.png")
     vocab = confusion_png(df, path, labels=["A", "B", "zzz"])
     assert vocab == ["a", "b"]  # lowercased; 'zzz' absent from the data
-    blob = open(path, "rb").read()
-    assert blob[:8] == b"\x89PNG\r\n\x1a\n"
-    w, h = struct.unpack(">II", blob[16:24])
+    w, h, rgb = _png_decode(open(path, "rb").read())
     cell, margin = 48, 24
     assert (w, h) == (margin + 2 * cell, margin + 2 * cell)
-    # decode IDAT and spot-check cell-center colors
-    idat_off = blob.index(b"IDAT") + 4
-    idat_len = struct.unpack(">I", blob[idat_off - 8 : idat_off - 4])[0]
-    raw = zlib.decompress(blob[idat_off : idat_off + idat_len])
-    stride = 1 + 3 * w
 
+    # spot-check cell-center colors
     def px(x, y):
-        base = y * stride + 1 + 3 * x
-        return tuple(raw[base : base + 3])
+        base = (y * w + x) * 3
+        return tuple(rgb[base : base + 3])
 
     # (true=a, pred=a) holds the max count 2 -> viridis(1.0) = bright yellow
     cx, cy = margin + cell // 4, margin + cell // 4
@@ -123,3 +144,17 @@ def test_cross_family_task_report(spark, tiny_spec):
     assert rep["galactica"]["accuracy"] == rep["mpt"]["accuracy"]
     assert rep["galactica"]["n_correct_unique"] == 0
     assert rep["galactica"]["n_correct_all"] == rep["galactica"]["n_consensus_correct"]
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    w=st.integers(1, 12),
+    h=st.integers(1, 12),
+    pixels=st.binary(min_size=12 * 12 * 3, max_size=12 * 12 * 3),
+)
+def test_png_roundtrip_property(w, h, pixels):
+    """``png_encode`` round-trips any (w, h, rgb) through an independent
+    decoder, at the default and the stored (level 0) deflate levels."""
+    rgb = pixels[: w * h * 3]
+    assert _png_decode(png_encode(w, h, rgb)) == (w, h, rgb)
+    assert _png_decode(png_encode(w, h, rgb, level=0)) == (w, h, rgb)
