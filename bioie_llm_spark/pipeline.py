@@ -38,7 +38,7 @@ from .operators.metrics import (
 )
 from .operators.sampling import seeded_sample, stratified_sample
 from .operators.setops import sort_and_pad
-from .sources.checkpoint import materialize, resume_by_key
+from .sources.checkpoint import delta_snapshot, materialize, resume_by_key, stage_path
 
 INDRA_LABELS = sorted(INDRA_VERBS.values())
 
@@ -387,15 +387,23 @@ def incremental_triples(
     miss_per_mille: int = 20,
     hallu_per_mille: int = 10,
 ) -> DataFrame:
-    """Snapshot-incremental triple build: the Iceberg-append flow. Each
-    call sees the CURRENT corpus snapshot; extraction + linking run only
-    for source files whose (repo, path, commit) key has never been
-    processed (key-granular resume over a cumulative linked store —
-    sources.checkpoint.resume_by_key), then the deduped triple table for
-    this snapshot is materialized from the cumulative store. Unchanged
-    files cost one anti-join probe, never a re-extraction; a snapshot that
-    adds 0.1% of files does ~0.1% of the UDF work. Interrupted runs resume
-    at file granularity (at-least-once; the dedup agg absorbs replays)."""
+    """Snapshot-incremental triple build over a delta chain. Each call sees
+    the CURRENT corpus snapshot; extraction + linking run only for source
+    files whose (repo, path, commit) key has never been processed
+    (key-granular resume over a cumulative linked store —
+    sources.checkpoint.resume_by_key). Unchanged files cost one anti-join
+    probe, never a re-extraction; a snapshot that adds 0.1% of files does
+    ~0.1% of the UDF work.
+
+    The triple stage follows the same rule (sources.checkpoint
+    .delta_snapshot): ``triples/snapshot=X`` holds only the partial
+    aggregate ``(count(*) AS n_sources, min(source_sha256))`` per
+    (subj, pred, obj) of the linked-store files no earlier snapshot
+    consumed, and X's table is one ``sum(n_sources), min(source_sha256)``
+    merge over the deltas of X's chain, with the columns of a full build's
+    triple table. Interrupted runs resume at file granularity
+    (at-least-once): a replayed file keeps the triple set and
+    ``source_sha256`` exact, but its rows count again in ``n_sources``."""
 
     def compute(todo: DataFrame) -> DataFrame:
         return link_entities(
@@ -406,11 +414,24 @@ def incremental_triples(
         corpus, out_dir, "linked_incr", "cumulative",
         ["repo", "path", "commit"], compute,
     )
-    triples = linked.groupBy("subj", "pred", "obj").agg(
-        F.count("*").alias("n_sources"),
-        F.min("source_sha256").alias("source_sha256"),
+    return delta_snapshot(
+        linked,
+        stage_path(out_dir, "linked_incr", "cumulative"),
+        out_dir,
+        "triples",
+        snapshot,
+        partial=lambda rows: rows.groupBy("subj", "pred", "obj").agg(
+            F.count("*").alias("n_sources"),
+            F.min("source_sha256").alias("source_sha256"),
+        ),
+        merge=lambda deltas: deltas.groupBy("subj", "pred", "obj")
+        .agg(
+            F.sum("n_sources").alias("n_sources"),
+            F.min("source_sha256").alias("source_sha256"),
+        )
+        .select(*deltas.columns),
+        partition_by=["pred"],
     )
-    return materialize(triples, out_dir, "triples", snapshot, partition_by=["pred"])
 
 
 def run_end_to_end(

@@ -13,6 +13,10 @@ snapshot-keyed Parquet stage materialization:
   (snapshot, stage, partition_id, n_rows, content_hash) under
   ``{root}/_lineage`` — the audit trail that lets an operator prove which
   partitions of which snapshot produced which triples.
+- ``resume_by_key`` appends to one cumulative store at key granularity, and
+  ``delta_snapshot`` keeps a per-snapshot aggregate over that store as a
+  chain of deltas: each snapshot writes only the partial aggregate of the
+  store files no earlier snapshot consumed, and its read merges the chain.
 
 The content hash is ``bit_xor(xxhash64(all columns))`` — order-insensitive,
 so it is stable no matter how rows land in partitions, and cheap (one
@@ -40,9 +44,13 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 # parquet codec of every checkpoint-layer write (see module docstring)
 CODEC = "zstd"
+
+# infix of _write_atomic's scratch sibling directories
+_TMP = ".__tmp-"
 
 LINEAGE_SCHEMA = (
     "snapshot string, stage string, partition_id int, n_rows long, content_hash long"
@@ -88,7 +96,7 @@ def _write_atomic(df: DataFrame, path: str, partition_by: list[str] | None) -> N
     A _SUCCESS-less corpse from a pre-atomic crash is cleared first."""
     if os.path.exists(path) and not os.path.exists(os.path.join(path, "_SUCCESS")):
         shutil.rmtree(path, ignore_errors=True)
-    tmp = f"{path}.__tmp-{uuid.uuid4().hex[:12]}"
+    tmp = f"{path}{_TMP}{uuid.uuid4().hex[:12]}"
     writer = df.write.mode("overwrite").option("compression", CODEC)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -97,6 +105,15 @@ def _write_atomic(df: DataFrame, path: str, partition_by: list[str] | None) -> N
         os.rename(tmp, path)
     except OSError:
         shutil.rmtree(tmp, ignore_errors=True)  # lost the race — winner is complete
+
+
+def _stored_schema(df: DataFrame, partition_by: list[str] | None) -> StructType:
+    """The schema ``df`` reads back with after a write partitioned by
+    ``partition_by``: the partition columns move to the end."""
+    parts = partition_by or []
+    return StructType(
+        [f for f in df.schema if f.name not in parts] + [df.schema[c] for c in parts]
+    )
 
 
 def materialize(
@@ -125,7 +142,11 @@ def materialize(
     if not is_materialized(root, stage, snapshot):
         _write_atomic(df, path, partition_by)
     # one read (one schema-inference job) serves the lineage and the caller
-    out = df.sparkSession.read.parquet(path)
+    reader = df.sparkSession.read
+    if not _data_files(path):
+        # a partitioned write of an empty frame leaves no file to infer from
+        reader = reader.schema(_stored_schema(df, partition_by))
+    out = reader.parquet(path)
     lin = lineage_path(root, stage, snapshot)
     if not os.path.exists(os.path.join(lin, "_SUCCESS")):
         _write_atomic(
@@ -160,8 +181,10 @@ def resume_by_key(
       exactly-once file tracking).
     - completed keys live in ``{root}/{stage}__keys/snapshot=...`` —
       appended AFTER the output append commits, so a crash between the two
-      reprocesses a key (at-least-once) and the downstream dedup agg
-      absorbs the duplicates (idempotent triples).
+      reprocesses a key (at-least-once): the replayed key's rows land in
+      the output twice. A downstream dedup keeps the same triple set and
+      ``min(source_sha256)``, but ``count(*)`` (``n_sources``) counts the
+      replayed rows again.
     """
     spark = inputs.sparkSession
     out_path = stage_path(root, stage, snapshot)
@@ -199,10 +222,116 @@ def resume_by_key(
     return spark.read.parquet(out_path)
 
 
+def _committed_snapshots(root: str, stage: str) -> list[str]:
+    """The snapshots of a stage whose write committed: their directory has
+    ``_SUCCESS`` and is not the scratch sibling of an unfinished
+    ``_write_atomic``."""
+    d = os.path.join(root, stage)
+    if not os.path.isdir(d):
+        return []
+    return sorted(
+        n[len("snapshot="):]
+        for n in os.listdir(d)
+        if n.startswith("snapshot=")
+        and _TMP not in n
+        and os.path.exists(os.path.join(d, n, "_SUCCESS"))
+    )
+
+
+def _chain_record(root: str, stage: str, snapshot: str) -> tuple[list[str], list[str]]:
+    # a few hundred bytes: read on the driver, no Spark job
+    import pyarrow.parquet as pq
+
+    row = pq.read_table(stage_path(root, stage + "__chain", snapshot)).to_pylist()[0]
+    return row["consumed"], row["chain"]
+
+
+def delta_snapshot(
+    store: DataFrame,
+    store_path: str,
+    root: str,
+    stage: str,
+    snapshot: str,
+    partial,
+    merge,
+    partition_by: list[str] | None = None,
+) -> DataFrame:
+    """Snapshot ``snapshot`` of an aggregate over an append-only store
+    (a ``resume_by_key`` output read as ``store`` from ``store_path``),
+    kept as a chain of deltas that share storage.
+
+    - ``{root}/{stage}/snapshot=X`` holds ``partial(rows)`` (materialized)
+      over only the store files that no earlier snapshot consumed. Store
+      files are append-only, so "consumed" is well defined.
+    - ``{root}/{stage}__chain/snapshot=X`` records, write-once and BEFORE
+      the delta, the store files X consumed and the earlier snapshots whose
+      deltas make up X's chain (every snapshot recorded before X).
+    - X's table is ``merge(deltas)`` over the deltas of its chain and its
+      own, or its own delta alone when the chain is empty. ``partial`` must
+      therefore be a mergeable aggregate (count -> sum, min -> min) and
+      ``merge`` must keep the delta's columns and their order.
+
+    Re-calling X after later snapshots returns X's rows unchanged: its
+    record is fixed. A crash between the store append and the record leaves
+    the appended files unconsumed, so the next snapshot takes them; a crash
+    between the record and the delta rebuilds the delta from the recorded
+    files, which never change. A store with no records counts every file as
+    unconsumed, and a stage written with no record is a whole table from
+    before chains, returned as it is."""
+    spark = store.sparkSession
+    records = {
+        s: _chain_record(root, stage, s)
+        for s in _committed_snapshots(root, stage + "__chain")
+    }
+    if snapshot not in records:
+        if is_materialized(root, stage, snapshot):
+            return spark.read.parquet(stage_path(root, stage, snapshot))
+        consumed = set().union(*(files for files, _ in records.values()))
+        stored = {os.path.relpath(f, store_path) for f in _data_files(store_path)}
+        fresh, chain = sorted(stored - consumed), sorted(records)
+        record = spark.range(1, numPartitions=1).select(
+            F.lit(fresh).cast("array<string>").alias("consumed"),
+            F.lit(chain).cast("array<string>").alias("chain"),
+        )
+        _write_atomic(record, stage_path(root, stage + "__chain", snapshot), None)
+        records[snapshot] = (fresh, chain)
+
+    def delta(snap: str) -> DataFrame:
+        files = [os.path.join(store_path, f) for f in records[snap][0]]
+        rows = (
+            spark.read.schema(store.schema).option("basePath", store_path).parquet(*files)
+            if files
+            else store.limit(0)
+        )
+        return materialize(partial(rows), root, stage, snap, partition_by)
+
+    own = delta(snapshot)
+    chain = records[snapshot][1]
+    if not chain:
+        return own
+    for snap in chain:
+        if not is_materialized(root, stage, snap):
+            delta(snap)
+    paths = [stage_path(root, stage, s) for s in (*chain, snapshot)]
+    # one scan over all deltas: the snapshot directories are read as
+    # partitions of the stage root, with no schema-inference job
+    deltas = (
+        spark.read.schema(StructType([*own.schema, StructField("snapshot", StringType())]))
+        .option("basePath", os.path.join(root, stage))
+        .parquet(*paths)
+        .drop("snapshot")
+    )
+    return merge(deltas)
+
+
 def _data_files(path: str) -> set[str]:
-    """All parquet data files under a stage output path (any partition depth)."""
+    """All parquet data files under a stage output path (any partition
+    depth), except an unfinished write's uncommitted ``_temporary`` files,
+    which readers skip too."""
     out: set[str] = set()
-    for dirpath, _dirs, files in os.walk(path):
+    for dirpath, dirs, files in os.walk(path):
+        if "_temporary" in dirs:
+            dirs.remove("_temporary")
         out.update(
             os.path.join(dirpath, f)
             for f in files

@@ -146,36 +146,123 @@ def test_skew_operators(spark):
 
 
 def test_incremental_snapshots(spark, tiny_spec, tmp_path):
-    """Iceberg-append flow: snapshot B adds files on top of snapshot A —
-    only the delta runs through extraction, and B's triple table equals a
-    from-scratch build over the full corpus."""
+    """A delta chain of three snapshots (about 1/3, 2/3 and all files):
+    only each snapshot's new files run through extraction, each later
+    snapshot's stage holds only its delta, and each snapshot's table equals
+    a from-scratch build over its corpus, on all five columns. Both crash
+    windows lose nothing: store files appended with no delta committed are
+    picked up by the next call, and a chain record whose delta never
+    committed has its delta rebuilt."""
+    import shutil
+
     from bioie_llm_spark.datagen.corpus import build_corpus, build_gazetteer
     from bioie_llm_spark.extraction import extract_triples, link_entities
     from bioie_llm_spark.pipeline import incremental_triples
+    from bioie_llm_spark.sources.checkpoint import resume_by_key
 
     root = str(tmp_path / "incr")
     corpus = build_corpus(spark, tiny_spec).cache()
     gaz = build_gazetteer(spark, tiny_spec)
-    snap_a = corpus.filter(F.col("path") < "src/file_3")  # ~1/3 of files
+    snaps = {
+        "snap-a": corpus.filter(F.col("path") < "src/file_3"),
+        "snap-b": corpus.filter(F.col("path") < "src/file_5"),
+        "snap-c": corpus,
+    }
+    cols = ["subj", "obj", "n_sources", "source_sha256", "pred"]
 
-    t_a = incremental_triples(spark, snap_a, gaz, root, "snap-a")
-    assert t_a.count() > 0
+    def rows(df):
+        return sorted(df.select(cols).collect())
 
-    t_b = incremental_triples(spark, corpus, gaz, root, "snap-b")
-    # only the delta was extracted: the cumulative key log covers all files
+    want = {
+        s: rows(
+            link_entities(extract_triples(c), gaz).groupBy("subj", "pred", "obj").agg(
+                F.count("*").alias("n_sources"), F.min("source_sha256").alias("source_sha256")
+            )
+        )
+        for s, c in snaps.items()
+    }
+    tables = {"snap-a": incremental_triples(spark, snaps["snap-a"], gaz, root, "snap-a")}
+    # a crash after snapshot B's store append and before its delta commits
+    resume_by_key(
+        snaps["snap-b"], root, "linked_incr", "cumulative", ["repo", "path", "commit"],
+        lambda todo: link_entities(extract_triples(todo), gaz),
+    )
+    # and an append that crashed before its commit: its task files stay
+    # under _temporary, which no snapshot may consume
+    store = stage_path(root, "linked_incr", "cumulative")
+    uncommitted = os.path.join(store, "_temporary", "0", "task_0")
+    os.makedirs(uncommitted)
+    for f in os.listdir(store):
+        if f.endswith(".parquet"):
+            shutil.copy(os.path.join(store, f), uncommitted)
+    for s in ("snap-b", "snap-c"):
+        tables[s] = incremental_triples(spark, snaps[s], gaz, root, s)
+    for s in snaps:
+        assert tables[s].columns == cols
+        assert rows(tables[s]) == want[s], s
+    # only the deltas were extracted: the cumulative key log covers all files
     keys = spark.read.parquet(os.path.join(root, "linked_incr__keys", "snapshot=cumulative"))
     assert keys.count() == corpus.count()
+    # the first snapshot's stage is its whole table; later stages are deltas
+    stage = lambda s: spark.read.parquet(stage_path(root, "triples", s))
+    assert rows(stage("snap-a")) == want["snap-a"]
+    assert 0 < stage("snap-b").count() < tables["snap-b"].count()
+    # re-calling an earlier snapshot after later ones returns its own rows
+    assert rows(incremental_triples(spark, snaps["snap-a"], gaz, root, "snap-a")) == want["snap-a"]
+    # a crash after B's chain record and before its delta: the delta is
+    # rebuilt from the record, by B itself or by any snapshot chained on B
+    shutil.rmtree(stage_path(root, "triples", "snap-b"))
+    assert rows(incremental_triples(spark, corpus, gaz, root, "snap-c")) == want["snap-c"]
+    assert is_materialized(root, "triples", "snap-b")
+    assert rows(incremental_triples(spark, corpus, gaz, root, "snap-b")) == want["snap-b"]
 
-    oneshot = (
-        link_entities(extract_triples(corpus), gaz)
-        .groupBy("subj", "pred", "obj")
-        .count()
+
+def test_incremental_recall_of_unchained_snapshot(spark, tiny_spec, tmp_path):
+    """A triple table written with no chain record (a full aggregate, as
+    builds before delta chains wrote it) is returned as it is when its
+    snapshot is called again, and no later snapshot counts it."""
+    from bioie_llm_spark.datagen.corpus import build_corpus, build_gazetteer
+    from bioie_llm_spark.extraction import extract_triples, link_entities
+    from bioie_llm_spark.pipeline import incremental_triples
+
+    root = str(tmp_path / "unchained")
+    corpus = build_corpus(spark, tiny_spec).cache()
+    gaz = build_gazetteer(spark, tiny_spec)
+    snap_a = corpus.filter(F.col("path") < "src/file_3")
+    cols = ["subj", "obj", "n_sources", "source_sha256", "pred"]
+
+    def full(df):
+        return df.groupBy("subj", "pred", "obj").agg(
+            F.count("*").alias("n_sources"), F.min("source_sha256").alias("source_sha256")
+        )
+
+    def rows(df):
+        return sorted(df.select(cols).collect())
+
+    # snapshot A as an unchained build lays it out: store, key log, full table
+    linked_a = link_entities(extract_triples(snap_a), gaz)
+    linked_a.write.parquet(stage_path(root, "linked_incr", "cumulative"))
+    snap_a.select("repo", "path", "commit").write.parquet(
+        stage_path(root, "linked_incr__keys", "cumulative")
     )
-    got = {(r["subj"], r["pred"], r["obj"]) for r in t_b.collect()}
-    want = {(r["subj"], r["pred"], r["obj"]) for r in oneshot.collect()}
-    assert got == want
-    # snapshot A's table is still readable and smaller
-    assert spark.read.parquet(stage_path(root, "triples", "snap-a")).count() == t_a.count()
+    table_a = rows(materialize(full(linked_a), root, "triples", "snap-a", ["pred"]))
+    want = rows(full(link_entities(extract_triples(corpus), gaz)))
+    assert rows(incremental_triples(spark, corpus, gaz, root, "snap-b")) == want
+    assert rows(incremental_triples(spark, snap_a, gaz, root, "snap-a")) == table_a
+    assert rows(incremental_triples(spark, corpus, gaz, root, "snap-c")) == want
+
+
+def test_materialize_empty_partitioned(spark, tmp_path):
+    """An empty frame partitioned on write leaves no data file: the stage
+    reads back empty with the frame's schema, partition columns last, on
+    the first and on every later call."""
+    root = str(tmp_path)
+    df = spark.createDataFrame([], "subj string, pred string, obj string, n long")
+    for _ in range(2):
+        out = materialize(df, root, "triples", "s0", partition_by=["pred"])
+        assert out.columns == ["subj", "obj", "n", "pred"]
+        assert out.count() == 0
+        assert dict(out.dtypes)["n"] == "bigint"
 
 
 def _n_jobs(spark, fn) -> int:
