@@ -157,60 +157,53 @@ def ngram_array(col: Column, n: int = 3) -> Column:
     return F.slice(out, 1, F.greatest(F.size(toks) - (n - 1), F.lit(1)))
 
 
-def repetition_ratio(col: Column, n: int = 3) -> Column:
-    """Gopher-style repetition signal: fraction of word n-gram occurrences
-    claimed by the single most frequent n-gram (1.0 for a fully-looped
-    document, ~1/num_ngrams for diverse text; 0.0 when no n-gram exists).
-    Aggregated with expression-only array ops. The per-row count is
-    O(distinct x total) over one document's n-grams — fine for
-    web-document lengths; for book-length rows use
-    ``repetition_ratio_grouped`` (same values, linear work)."""
-    grams = ngram_array(col, n)
-    top = F.array_max(
-        F.transform(
-            F.array_distinct(grams),
-            lambda g: F.size(F.filter(grams, lambda x: x == g)),
+def _sorted_runs(arr: Column, zero: dict, step, finish) -> Column:
+    """One ``aggregate`` fold over ``array_sort(arr)`` (a string array):
+    equal values sit in adjacent runs, so per-value counts need no inner
+    scan. The state starts
+    as ``zero`` plus ``prev`` (last value) and ``run`` (length of the
+    current run); ``step(acc, x, run)`` returns the other fields and
+    ``finish(acc)`` the result. ``arr`` appears once, outside any lambda,
+    so Catalyst builds it once per row; a ``filter(arr, ..)`` inside a
+    lambda over ``arr`` would rebuild the whole expression per element."""
+
+    def merge(acc, x):
+        run = F.when(acc["prev"] == x, acc["run"] + 1).otherwise(F.lit(1))
+        fields = step(acc, x, run)
+        return F.struct(
+            x.alias("prev"), run.alias("run"),
+            *[fields[k].alias(k) for k in zero],
         )
+
+    init = F.struct(
+        F.lit(None).cast("string").alias("prev"), F.lit(0).alias("run"),
+        *[v.alias(k) for k, v in zero.items()],
     )
+    return F.aggregate(F.array_sort(arr), init, merge, finish)
+
+
+def _ratio(num: Column, den: Column) -> Column:
+    """``round(num / den, 4)``, 0.0 when ``den`` is 0 or NULL."""
     return F.coalesce(
-        F.round(
-            F.try_divide(top.cast("double"), F.size(grams).cast("double")), 4
-        ),
+        F.round(F.try_divide(num.cast("double"), den.cast("double")), 4),
         F.lit(0.0),
     )
 
 
-def repetition_ratio_grouped(
-    df, id_col: str = "doc_id", text_col: str = "text", n: int = 3,
-    out_col: str = "repetition",
-):
-    """Book-length twin of ``repetition_ratio`` (VERDICT r3 #4): explode the
-    SAME gram array (identical multiset by construction) and compute
-    max(count)/sum(count) per document with two hash aggregates. Work is
-    linear in total grams and the widest state any executor holds is a
-    partition of (doc, gram) pairs — not one row's distinct-set x total
-    product, which for a 500-page document makes the per-row form
-    quadratic-ish in the row. Shuffle key (id, gram) also spreads a single
-    huge document across reducers. Returns df + out_col (0.0 when the
-    document yields no grams, matching the per-row coalesce).
-
-    REQUIRES ``id_col`` to be unique per row: the per-doc ratio is joined
-    back on it, so duplicate ids would fan out rows (ADVICE r4). Callers
-    with non-unique ids should pre-assign one, e.g.
-    ``df.withColumn("rid", F.monotonically_increasing_id())``."""
-    g = df.select(id_col, F.explode(ngram_array(F.col(text_col), n)).alias("__gram"))
-    counts = g.groupBy(id_col, "__gram").agg(F.count("*").alias("__c"))
-    per = counts.groupBy(id_col).agg(
-        F.round(
-            F.try_divide(
-                F.max("__c").cast("double"), F.sum("__c").cast("double")
-            ),
-            4,
-        ).alias(out_col)
+def repetition_ratio(col: Column, n: int = 3) -> Column:
+    """Gopher-style repetition signal: fraction of word n-gram occurrences
+    claimed by the single most frequent n-gram (1.0 for a fully-looped
+    document, ~1/num_ngrams for diverse text; 0.0 when no n-gram exists).
+    The top count is the longest run of the sorted gram array, so the
+    per-row work is one sort and one pass."""
+    grams = ngram_array(col, n)
+    top = _sorted_runs(
+        grams,
+        {"best": F.lit(0)},
+        lambda acc, x, run: {"best": F.greatest(acc["best"], run)},
+        lambda acc: acc["best"],
     )
-    return df.join(per, id_col, "left").withColumn(
-        out_col, F.coalesce(F.col(out_col), F.lit(0.0))
-    )
+    return _ratio(top, F.size(grams))
 
 
 def duplicate_line_stats(col: Column, sep: str = "\n") -> Column:
@@ -220,10 +213,8 @@ def duplicate_line_stats(col: Column, sep: str = "\n") -> Column:
     fraction of non-empty lines that are repeats of an earlier line and
     dup_char_frac the fraction of line characters living in duplicated
     lines (all occurrences of any line that appears more than once).
-    Pure Catalyst; per-row O(distinct x total) over LINES — documents
-    have at most a few thousand lines, so unlike word n-grams this needs
-    no grouped twin. NULL text behaves like empty text (0 lines, 0.0
-    fractions)."""
+    Pure Catalyst: one sort and one fold over the lines per row. NULL
+    text behaves like empty text (0 lines, 0.0 fractions)."""
     import re as _re
 
     # F.split takes a Java regex; escape so `sep` is always literal (same
@@ -236,35 +227,23 @@ def duplicate_line_stats(col: Column, sep: str = "\n") -> Column:
         ),
         lambda l: l != "",
     )
-    n = F.size(lines)
-    n_dist = F.size(F.array_distinct(lines))
-    occurrences = F.transform(
-        lines, lambda l: F.size(F.filter(lines, lambda x: x == l))
-    )
-    dup_chars = F.aggregate(
-        F.zip_with(
-            lines,
-            occurrences,
-            lambda l, c: F.when(c > 1, F.length(l)).otherwise(F.lit(0)),
+    # a run reaching 2 makes both copies duplicated chars; each further
+    # copy adds its own length
+    return _sorted_runs(
+        lines,
+        {"n": F.lit(0), "distinct": F.lit(0), "total": F.lit(0), "dup": F.lit(0)},
+        lambda acc, x, run: {
+            "n": acc["n"] + 1,
+            "distinct": acc["distinct"] + F.when(run == 1, 1).otherwise(0),
+            "total": acc["total"] + F.length(x),
+            "dup": acc["dup"]
+            + F.when(run == 2, 2 * F.length(x))
+            .when(run > 2, F.length(x))
+            .otherwise(0),
+        },
+        lambda acc: F.struct(
+            acc["n"].alias("n_lines"),
+            _ratio(acc["n"] - acc["distinct"], acc["n"]).alias("dup_line_frac"),
+            _ratio(acc["dup"], acc["total"]).alias("dup_char_frac"),
         ),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    total_chars = F.aggregate(
-        F.transform(lines, lambda l: F.length(l)),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    return F.struct(
-        n.alias("n_lines"),
-        F.coalesce(
-            F.round(F.try_divide((n - n_dist).cast("double"), n.cast("double")), 4),
-            F.lit(0.0),
-        ).alias("dup_line_frac"),
-        F.coalesce(
-            F.round(
-                F.try_divide(dup_chars.cast("double"), total_chars.cast("double")), 4
-            ),
-            F.lit(0.0),
-        ).alias("dup_char_frac"),
     )

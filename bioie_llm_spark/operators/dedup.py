@@ -569,8 +569,7 @@ def substring_dup_stats(
     map-side combinable) + one per-doc agg; no joins wider than the
     window index.
 
-    REQUIRES ``id_col`` unique per row (same contract as
-    ``repetition_ratio_grouped``): stats join back on it, and the
+    REQUIRES ``id_col`` unique per row: stats join back on it, and the
     first-occurrence rule orders occurrences by (id, pos)."""
     wins = substring_windows(df, id_col, text_col, w=w)
     marked = _window_firsts(wins, id_col).withColumn("__dup", ~F.col("__is_first"))

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.cleaning import extract_choice_expr
@@ -2910,6 +2910,26 @@ def _txt_profile_oracle() -> str:
     """
 
 
+def _two_token_lines(text: Column) -> Column:
+    """``txt_profile``'s synthesized multi-line view of single-line text:
+    line k joins space-split tokens 2k and 2k+1, lines joined on the unit
+    separator. An odd last token stands alone (``zip_with`` pads with NULL,
+    which ``concat_ws`` skips). The two index filters keep the token array
+    outside every lambda, so it is split once per row."""
+    toks = F.split(text, " ")
+    # join/split on the unit separator, not '\n': a future corpus whose
+    # text contains literal newlines would otherwise make Spark re-split
+    # chunks the oracle treats as atomic (code-review r5)
+    return F.array_join(
+        F.zip_with(
+            F.filter(toks, lambda t, i: i % 2 == 0),
+            F.filter(toks, lambda t, i: i % 2 == 1),
+            lambda a, b: F.concat_ws(" ", a, b),
+        ),
+        "\x1f",
+    )
+
+
 @register("txt_profile", _txt_profile_oracle)
 def txt_profile(spark, sf_dir):
     from .functions.text import (
@@ -2929,19 +2949,7 @@ def txt_profile(spark, sf_dir):
     # synthesized in-query (2-token lines; 181/500 sf0.01 docs then carry
     # real duplicate lines) and the oracle recomputes both fractions from
     # the same construction — same pattern as cur_paragraph_dedup's corpus.
-    toks = F.split(F.col("text"), " ")
-    n_lines_raw = F.ceil(F.size(toks) / F.lit(2.0)).cast("int")
-    # join/split on the unit separator, not '\n': a future corpus whose
-    # text contains literal newlines would otherwise make Spark re-split
-    # chunks the oracle treats as atomic (code-review r5)
-    lined = F.array_join(
-        F.transform(
-            F.sequence(F.lit(0), n_lines_raw - 1),
-            lambda i: F.array_join(F.slice(toks, i * 2 + 1, 2), " "),
-        ),
-        "\x1f",
-    )
-    dls = duplicate_line_stats(lined, sep="\x1f")
+    dls = duplicate_line_stats(_two_token_lines(F.col("text")), sep="\x1f")
     # PII is injected deterministically into every 11th doc so the scrub
     # pass has real work whose mask count the oracle recomputes (the
     # synthetic corpus itself contains no emails/URLs/IPs)

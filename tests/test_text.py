@@ -1,14 +1,22 @@
 """Text-analysis functions: token counts, quality, language ID, fingerprint."""
 
+import re
+
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from bioie_llm_spark.functions.text import (
     bpe_ish_token_count,
+    duplicate_line_stats,
     fingerprint,
     language_id,
+    ngram_array,
     quality_score,
+    repetition_ratio,
     token_count,
 )
+from bioie_llm_spark.queries import _two_token_lines
 
 
 def _one(spark, text, col):
@@ -77,41 +85,125 @@ def test_repetition_ratio(spark):
     assert got[3] <= 1.0         # no crash on empty text
 
 
-def test_repetition_ratio_grouped_equivalence(spark):
-    """VERDICT r3 #4: the exploded-groupBy book-length form must produce
-    bit-identical ratios to the per-row array form — on real sf0.001 docs
-    AND the degenerate corners (empty, single word, fully looped)."""
-    from bioie_llm_spark.functions.text import (
-        repetition_ratio,
-        repetition_ratio_grouped,
+# The quadratic forms the sorted-run folds replaced, kept as twins: each
+# uses its array inside a lambda over the same array.
+def _old_repetition_ratio(col, n=3):
+    grams = ngram_array(col, n)
+    top = F.array_max(
+        F.transform(
+            F.array_distinct(grams),
+            lambda g: F.size(F.filter(grams, lambda x: x == g)),
+        )
+    )
+    return F.coalesce(
+        F.round(F.try_divide(top.cast("double"), F.size(grams).cast("double")), 4),
+        F.lit(0.0),
     )
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
+
+def _old_duplicate_line_stats(col, sep="\n"):
+    lines = F.filter(
+        F.transform(
+            F.split(F.coalesce(col, F.lit("")), re.escape(sep)), lambda l: F.trim(l)
+        ),
+        lambda l: l != "",
     )
-    edges = spark.createDataFrame(
-        [
-            (100001, ""),
-            (100002, "word"),
-            (100003, "spam ham eggs " * 50),
-            (100004, "a b"),  # fewer tokens than n
-        ],
-        "doc_id long, text string",
+    n = F.size(lines)
+    n_dist = F.size(F.array_distinct(lines))
+    occurrences = F.transform(lines, lambda l: F.size(F.filter(lines, lambda x: x == l)))
+    dup_chars = F.aggregate(
+        F.zip_with(
+            lines, occurrences, lambda l, c: F.when(c > 1, F.length(l)).otherwise(F.lit(0))
+        ),
+        F.lit(0),
+        lambda acc, v: acc + v,
     )
-    df = docs.unionByName(edges)
-    per_row = {
-        r["doc_id"]: r["r"]
-        for r in df.select(
-            "doc_id", repetition_ratio(F.col("text")).alias("r")
-        ).collect()
+    total_chars = F.aggregate(
+        F.transform(lines, lambda l: F.length(l)), F.lit(0), lambda acc, v: acc + v
+    )
+    return F.struct(
+        n.alias("n_lines"),
+        F.coalesce(
+            F.round(F.try_divide((n - n_dist).cast("double"), n.cast("double")), 4),
+            F.lit(0.0),
+        ).alias("dup_line_frac"),
+        F.coalesce(
+            F.round(F.try_divide(dup_chars.cast("double"), total_chars.cast("double")), 4),
+            F.lit(0.0),
+        ).alias("dup_char_frac"),
+    )
+
+
+def _old_two_token_lines(text):
+    toks = F.split(text, " ")
+    n_lines_raw = F.ceil(F.size(toks) / F.lit(2.0)).cast("int")
+    return F.array_join(
+        F.transform(
+            F.sequence(F.lit(0), n_lines_raw - 1),
+            lambda i: F.array_join(F.slice(toks, i * 2 + 1, 2), " "),
+        ),
+        "\x1f",
+    )
+
+
+_EDGE_DOCS = [
+    None,
+    "",
+    " ",
+    "word",
+    "same " * 40,
+    "spam ham eggs " * 300,
+    "a|b|a|b|b",
+    "x\nx\n\ny\n x \n",
+    "one two three four five six seven",
+]
+
+
+def test_sorted_run_folds_match_quadratic_twins(spark):
+    """repetition_ratio, duplicate_line_stats and txt_profile's line view
+    equal their old quadratic forms row for row on drawn documents and on
+    the corners: empty, NULL, one token, all tokens equal, long loops and
+    a regex-metacharacter separator."""
+    word = st.sampled_from(["a", "b", "ab", "The", "x|y", "é", "  ", "\n", "|"])
+    doc = st.one_of(
+        st.none(),
+        st.text(alphabet="ab |\n.", max_size=60),
+        st.lists(word, max_size=80).map("".join),
+        st.builds(lambda u, k: u * k, st.lists(word, min_size=1, max_size=4).map(" ".join),
+                  st.integers(1, 120)),
+    )
+    docs = list(_EDGE_DOCS)
+
+    @settings(max_examples=150, deadline=None, suppress_health_check=list(HealthCheck))
+    @given(doc)
+    def collect(d):
+        docs.append(d)
+
+    collect()
+    df = spark.createDataFrame(list(enumerate(docs)), "id int, text string")
+    t = F.col("text")
+    pairs = {
+        "lines": (_two_token_lines(t), _old_two_token_lines(t)),
+        "lined_stats": (
+            duplicate_line_stats(_two_token_lines(t), sep="\x1f"),
+            _old_duplicate_line_stats(_old_two_token_lines(t), sep="\x1f"),
+        ),
+        "nl_stats": (duplicate_line_stats(t), _old_duplicate_line_stats(t)),
+        "pipe_stats": (
+            duplicate_line_stats(t, sep="|"),
+            _old_duplicate_line_stats(t, sep="|"),
+        ),
     }
-    grouped = {
-        r["doc_id"]: r["repetition"]
-        for r in repetition_ratio_grouped(df).select("doc_id", "repetition").collect()
-    }
-    assert per_row.keys() == grouped.keys()
-    mism = {k: (per_row[k], grouped[k]) for k in per_row if per_row[k] != grouped[k]}
-    assert not mism, f"first mismatches: {dict(list(mism.items())[:5])}"
+    for n in (1, 2, 3):
+        pairs[f"rep{n}"] = (repetition_ratio(t, n), _old_repetition_ratio(t, n))
+    cols = [F.col("id")]
+    for name, (new, old) in pairs.items():
+        cols += [new.alias(f"{name}_new"), old.alias(f"{name}_old")]
+    rows = df.select(*cols).orderBy("id").collect()
+    assert len(rows) == len(docs)
+    for r in rows:
+        for name in pairs:
+            assert r[f"{name}_new"] == r[f"{name}_old"], (name, docs[r["id"]])
 
 
 def test_duplicate_line_stats(spark):
