@@ -49,7 +49,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 # parquet codec of every checkpoint-layer write (see module docstring)
 CODEC = "zstd"
 
-# infix of _write_atomic's scratch sibling directories
+# infix of write_once's scratch sibling directories
 _TMP = ".__tmp-"
 
 LINEAGE_SCHEMA = (
@@ -87,24 +87,44 @@ def lineage_path(root: str, stage: str, snapshot: str) -> str:
     return os.path.join(root, "_lineage", f"stage={stage}", f"snapshot={snapshot}")
 
 
-def _write_atomic(df: DataFrame, path: str, partition_by: list[str] | None) -> None:
-    """Write a stage directory atomically: write to a scratch sibling, then
-    one ``os.rename`` into place. Two processes racing to materialize the
-    same stage can never expose a half-written directory to each other —
-    the loser's rename fails and its scratch copy is discarded (the
-    winner's copy is complete by construction; rename is atomic on POSIX).
-    A _SUCCESS-less corpse from a pre-atomic crash is cleared first."""
-    if os.path.exists(path) and not os.path.exists(os.path.join(path, "_SUCCESS")):
+def write_once(path: str, build) -> str:
+    """The one write-once protocol of the engine, for stage checkpoints and
+    scratch artifacts alike: unless ``path/_SUCCESS`` exists, run
+    ``build(scratch)`` into a scratch sibling, stamp the marker, and
+    ``os.rename`` the sibling into place. Readers see a complete directory
+    or none: a build that raises removes its sibling, and of two processes
+    racing on one path the loser's rename fails and its copy is discarded
+    (rename is atomic on POSIX; the winner's copy is complete). A
+    marker-less directory left by a crash from before this protocol is
+    cleared first. Returns ``path``."""
+    marker = os.path.join(path, "_SUCCESS")
+    if os.path.exists(marker):
+        return path
+    if os.path.exists(path):
         shutil.rmtree(path, ignore_errors=True)
     tmp = f"{path}{_TMP}{uuid.uuid4().hex[:12]}"
-    writer = df.write.mode("overwrite").option("compression", CODEC)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
     try:
+        build(tmp)
+        open(os.path.join(tmp, "_SUCCESS"), "a").close()
         os.rename(tmp, path)
     except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the race — winner is complete
+        if not os.path.exists(marker):  # not a lost race
+            raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return path
+
+
+def _write_stage(df: DataFrame, path: str, partition_by: list[str] | None) -> None:
+    """``write_once`` of one checkpoint-layer parquet directory."""
+
+    def build(tmp: str) -> None:
+        writer = df.write.option("compression", CODEC)
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(tmp)
+
+    write_once(path, build)
 
 
 def _stored_schema(df: DataFrame, partition_by: list[str] | None) -> StructType:
@@ -128,7 +148,7 @@ def materialize(
     restarts O(remaining stages)).
 
     Both the stage data and its lineage are written atomically (scratch dir
-    + rename — see _write_atomic), so concurrent builders of the same stage
+    + rename — see write_once), so concurrent builders of the same stage
     root are safe: one wins the rename, the other reads the winner's
     complete copy.
 
@@ -139,19 +159,18 @@ def materialize(
     call — the lineage is recomputed from the already-materialized parquet
     instead of being lost forever behind the _SUCCESS guard."""
     path = stage_path(root, stage, snapshot)
-    if not is_materialized(root, stage, snapshot):
-        _write_atomic(df, path, partition_by)
+    _write_stage(df, path, partition_by)
     # one read (one schema-inference job) serves the lineage and the caller
     reader = df.sparkSession.read
     if not _data_files(path):
         # a partitioned write of an empty frame leaves no file to infer from
         reader = reader.schema(_stored_schema(df, partition_by))
     out = reader.parquet(path)
-    lin = lineage_path(root, stage, snapshot)
-    if not os.path.exists(os.path.join(lin, "_SUCCESS")):
-        _write_atomic(
-            lineage_of(out, stage, snapshot).drop("stage", "snapshot"), lin, None
-        )
+    _write_stage(
+        lineage_of(out, stage, snapshot).drop("stage", "snapshot"),
+        lineage_path(root, stage, snapshot),
+        None,
+    )
     return out
 
 
@@ -225,7 +244,7 @@ def resume_by_key(
 def _committed_snapshots(root: str, stage: str) -> list[str]:
     """The snapshots of a stage whose write committed: their directory has
     ``_SUCCESS`` and is not the scratch sibling of an unfinished
-    ``_write_atomic``."""
+    ``write_once``."""
     d = os.path.join(root, stage)
     if not os.path.isdir(d):
         return []
@@ -293,7 +312,7 @@ def delta_snapshot(
             F.lit(fresh).cast("array<string>").alias("consumed"),
             F.lit(chain).cast("array<string>").alias("chain"),
         )
-        _write_atomic(record, stage_path(root, stage + "__chain", snapshot), None)
+        _write_stage(record, stage_path(root, stage + "__chain", snapshot), None)
         records[snapshot] = (fresh, chain)
 
     def delta(snap: str) -> DataFrame:

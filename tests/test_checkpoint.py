@@ -376,3 +376,73 @@ def test_incremental_on_snappy_store(spark, tiny_spec, tmp_path):
     )
     cols = ["subj", "pred", "obj", "n_sources", "source_sha256"]
     assert sorted(t_b.select(cols).collect()) == sorted(oneshot.select(cols).collect())
+
+
+def test_write_once_failed_build_leaves_nothing(tmp_path):
+    """A build that raises midway leaves no complete-looking directory and
+    no scratch sibling; the next call builds."""
+    import pytest
+
+    from bioie_llm_spark.sources.checkpoint import write_once
+
+    path = str(tmp_path / "art")
+
+    def broken(out):
+        os.makedirs(out)
+        with open(os.path.join(out, "half"), "w") as f:
+            f.write("x")
+        raise RuntimeError("build died")
+
+    with pytest.raises(RuntimeError):
+        write_once(path, broken)
+    assert os.listdir(tmp_path) == []
+
+    calls = []
+
+    def good(out):
+        calls.append(out)
+        os.makedirs(out)
+        with open(os.path.join(out, "data"), "w") as f:
+            f.write("ok")
+
+    assert write_once(path, good) == path
+    assert write_once(path, good) == path
+    assert len(calls) == 1
+    assert sorted(os.listdir(path)) == ["_SUCCESS", "data"]
+    assert os.listdir(tmp_path) == ["art"]
+
+
+def test_write_once_race_keeps_one_complete_copy(tmp_path):
+    """Two builds of one path that both finish before either renames: the
+    first rename wins, the loser discards its copy, and neither raises."""
+    import threading
+
+    from bioie_llm_spark.sources.checkpoint import write_once
+
+    path = str(tmp_path / "art")
+    both_built = threading.Barrier(2)
+    errors = []
+
+    def builder(owner):
+        def build(out):
+            os.makedirs(out)
+            for name in ("a", "b"):
+                with open(os.path.join(out, name), "w") as f:
+                    f.write(owner)
+            both_built.wait(timeout=30)
+
+        try:
+            write_once(path, build)
+        except Exception as e:  # noqa: BLE001 - surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=builder, args=(o,)) for o in ("x", "y")]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors
+    assert os.listdir(tmp_path) == ["art"]
+    assert sorted(os.listdir(path)) == ["_SUCCESS", "a", "b"]
+    owners = {open(os.path.join(path, n)).read() for n in ("a", "b")}
+    assert len(owners) == 1 and owners <= {"x", "y"}

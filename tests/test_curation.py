@@ -589,14 +589,15 @@ def test_lm_artifact_keyed_per_document_table(spark, tmp_path):
             1
         ).write.parquet(table)
         os.utime(table, ns=(1_700_000_000 * 10**9,) * 2)
-    roots = []
+    aliases = []
     try:
-        roots = [Q._lm_parquet(spark, sf_dir) for sf_dir in dirs.values()]
-        assert roots[0] != roots[1]
-        for sf_dir, root in zip(dirs.values(), roots):
-            uni, _ = load_ngram_lm(spark, root)
+        aliases = [Q._lm_parquet(spark, sf_dir) for sf_dir in dirs.values()]
+        assert os.path.realpath(aliases[0]) != os.path.realpath(aliases[1])
+        for sf_dir, alias in zip(dirs.values(), aliases):
+            uni, _ = load_ngram_lm(spark, alias)
             own, _ = train_ngram_lm(Q.load(spark, sf_dir, "documents"))
             assert sorted(uni.collect()) == sorted(own.collect())
     finally:
-        for root in roots:
-            shutil.rmtree(root, ignore_errors=True)
+        for alias in aliases:
+            shutil.rmtree(os.path.realpath(alias), ignore_errors=True)
+            os.remove(alias)

@@ -1,23 +1,18 @@
 """Multimodal plumbing: asset synthesis, feature extraction, frame sampling,
-and the pure-stdlib real-decode branches — PPM (VERDICT r3 #6), PNG
-(VERDICT r4 #5), BMP and PCM WAV (r5)."""
+and the pure-stdlib real-decode branches — PPM (VERDICT r3 #6) and PNG
+(VERDICT r4 #5)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from bioie_llm_spark.multimodal.binary_ops import (
     FEATURE_DIM,
-    _audio_features,
-    _bmp_encode,
-    _bmp_parse,
     _fake_features,
     _image_features,
     _nn_resample,
     _png_parse,
     _ppm_encode,
     _ppm_parse,
-    _wav_encode,
-    _wav_parse,
     extract_features,
     sample_frames,
     synth_assets,
@@ -25,8 +20,6 @@ from bioie_llm_spark.multimodal.binary_ops import (
 
 JUNK_LEN = 48  # 3 md5 digests
 PPM_LEN = len(b"P6\n8 8\n255\n") + 8 * 8 * 3  # header + RGB bytes
-BMP_LEN = 54 + 8 * 8 * 3  # 54-byte header + raster (8*3 stride, no padding)
-WAV_LEN = 44 + 64 * 2  # canonical 44-byte header + 64 16-bit mono samples
 
 
 def _is_ppm(payload: bytes) -> bool:
@@ -35,15 +28,6 @@ def _is_ppm(payload: bytes) -> bool:
 
 def _is_png(payload: bytes) -> bool:
     return bytes(payload).startswith(b"\x89PNG\r\n\x1a\n")
-
-
-def _is_bmp(payload: bytes) -> bool:
-    return bytes(payload).startswith(b"BM")
-
-
-def _is_wav(payload: bytes) -> bool:
-    p = bytes(payload)
-    return p[:4] == b"RIFF" and p[8:12] == b"WAVE"
 
 
 def test_synth_assets_shape(spark):
@@ -58,31 +42,15 @@ def test_synth_assets_shape(spark):
         elif _is_png(p):
             assert _png_parse(p)[:2] == (8, 8)
             assert row["kind"] == "image"
-        elif _is_bmp(p):
-            assert len(p) == BMP_LEN
-            assert _bmp_parse(p)[:2] == (8, 8)
-            assert row["kind"] == "image"
-        elif _is_wav(p):
-            # 16-bit PCM (WAV_LEN bytes) or mu-law (44 + 64 bytes) — both
-            # real decode branches as of r7
-            assert len(p) in (WAV_LEN, 44 + 64)
-            sr, nch, samples = _wav_parse(p)
-            assert (sr, nch, len(samples)) == (16000, 1, 64)
-            assert row["kind"] == "audio"
         else:
             assert len(p) == JUNK_LEN
     kinds = {r["kind"] for r in rows}
     assert kinds <= {"image", "audio", "video"}
-    # all five payload branches must be represented in the standard corpus
+    # all three payload branches must be represented in the standard corpus
     payloads = [bytes(r["payload"]) for r in rows]
     assert any(_is_ppm(p) for p in payloads)
     assert any(_is_png(p) for p in payloads)
-    assert any(_is_bmp(p) for p in payloads)
-    assert any(_is_wav(p) for p in payloads)
-    assert any(
-        not (_is_ppm(p) or _is_png(p) or _is_bmp(p) or _is_wav(p))
-        for p in payloads
-    )
+    assert any(not (_is_ppm(p) or _is_png(p)) for p in payloads)
 
 
 def test_extract_features(spark):
@@ -114,14 +82,6 @@ def test_extract_features_real_vs_stub_dispatch(spark):
         elif _is_png(p):
             w, h, rgb = _png_parse(p)
             expect = _image_features(w, h, rgb, FEATURE_DIM)
-            n_real += 1
-        elif _is_bmp(p):
-            w, h, rgb = _bmp_parse(p)
-            expect = _image_features(w, h, rgb, FEATURE_DIM)
-            n_real += 1
-        elif _is_wav(p):
-            sr, nch, samples = _wav_parse(p)
-            expect = _audio_features(sr, nch, samples, FEATURE_DIM)
             n_real += 1
         else:
             expect = _fake_features(p)
@@ -194,18 +154,11 @@ def test_resize_images(spark):
                 assert (w, h) == (32, 16)
                 sw, sh, srgb = _png_parse(orig[aid])
                 assert rgb == _nn_resample(sw, sh, srgb, 32, 16)
-            elif _is_bmp(orig[aid]):
-                # REAL branch, BMP in -> BMP out (format preserved)
-                assert _is_bmp(bytes(r["payload"]))
-                w, h, rgb = _bmp_parse(bytes(r["payload"]))
-                assert (w, h) == (32, 16)
-                sw, sh, srgb = _bmp_parse(orig[aid])
-                assert rgb == _nn_resample(sw, sh, srgb, 32, 16)
             else:
                 # stub branch: byte-per-pixel hash-derived stand-in
                 assert len(r["payload"]) == 32 * 16
         else:
-            # non-images pass through untouched (junk AND real WAV audio)
+            # non-images pass through untouched
             assert bytes(r["payload"]) == orig[aid]
             assert r["meta"]["width"] == r["width"]
     # deterministic at any parallelism
@@ -314,137 +267,6 @@ def test_png_parse_all_filters():
         + chunk(b"IEND", b"")
     )
     assert _png_parse(png) == (w, h, rgb)
-
-
-def test_bmp_roundtrip_property():
-    """Hypothesis (r5): the stdlib BMP codec round-trips for any (w, h,
-    rgb) — including odd widths where the 4-byte row padding and the
-    BGR/bottom-up raster order are both exercised."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    @settings(max_examples=150, deadline=None)
-    @given(w=st.integers(1, 12), h=st.integers(1, 12), seed=st.integers(0, 2**32 - 1))
-    def check(w, h, seed):
-        rgb = _rgb_of(seed, w * h * 3)
-        enc = _bmp_encode(w, h, rgb)
-        assert _bmp_parse(enc) == (w, h, rgb)
-        # stride is padded to 4 bytes; file size is header + stride*h
-        assert len(enc) == 54 + ((w * 3 + 3) & ~3) * h
-
-    check()
-
-
-def test_bmp_parse_rejects_unsupported():
-    good = _bmp_encode(4, 4, _rgb_of(3, 48))
-    for bad in (
-        None,
-        b"",
-        b"BM" + b"\x00" * 20,                       # too short for headers
-        good[:-8],                                   # truncated raster
-        good.replace(b"\x18\x00", b"\x20\x00", 1),   # 32 bpp
-    ):
-        with pytest.raises(NotImplementedError):
-            _bmp_parse(bad)
-
-
-def test_bmp_top_down_rows():
-    """Negative height means top-down row order per the BMP spec — the
-    parser must honor it (a minimal writer never emits it, but real-world
-    files do)."""
-    import struct
-
-    rgb = _rgb_of(11, 4 * 2 * 3)
-    enc = bytearray(_bmp_encode(4, 2, rgb))
-    # flip height to -2 and re-order the raster rows to top-down
-    enc[22:26] = struct.pack("<i", -2)
-    stride = 12
-    r0, r1 = bytes(enc[54 : 54 + stride]), bytes(enc[54 + stride : 54 + 2 * stride])
-    enc[54 : 54 + stride], enc[54 + stride : 54 + 2 * stride] = r1, r0
-    assert _bmp_parse(bytes(enc)) == (4, 2, rgb)
-
-
-def test_wav_roundtrip_property():
-    """Hypothesis (r5): the stdlib WAV codec round-trips any 16-bit PCM
-    stream (mono and stereo, full sample range), and the audio features
-    stay bounded in [-1, 1]."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    @settings(max_examples=150, deadline=None)
-    @given(
-        sr=st.sampled_from([8000, 16000, 44100, 48000]),
-        nch=st.integers(1, 2),
-        samples=st.lists(st.integers(-32768, 32767), min_size=1, max_size=256),
-    )
-    def check(sr, nch, samples):
-        enc = _wav_encode(sr, nch, samples)
-        assert _wav_parse(enc) == (sr, nch, samples)
-        feats = _audio_features(sr, nch, samples, FEATURE_DIM)
-        assert len(feats) == FEATURE_DIM
-        assert all(-1.0 <= v <= 1.0 for v in feats)
-
-    check()
-
-
-def test_wav_parse_rejects_unsupported():
-    good = _wav_encode(16000, 1, [0, 100, -100, 32767])
-    # r7: 8-bit PCM and mu-law are now REAL decode branches; the rejects
-    # are the genuinely unmodeled variants (IEEE float, 24-bit, >2 ch)
-    ieee_float = good.replace(
-        b"fmt \x10\x00\x00\x00\x01\x00", b"fmt \x10\x00\x00\x00\x03\x00", 1
-    )
-    bits24 = good.replace(b"\x10\x00data", b"\x18\x00data", 1)
-    three_ch = good.replace(
-        b"fmt \x10\x00\x00\x00\x01\x00\x01\x00", b"fmt \x10\x00\x00\x00\x01\x00\x03\x00", 1
-    )
-    for bad in (None, b"", b"RIFF\x00\x00\x00\x00WAVE", good[:-4],
-                ieee_float, bits24, three_ch):
-        with pytest.raises(NotImplementedError):
-            _wav_parse(bad)
-
-
-def test_wav_mulaw_and_pcm8_branches():
-    """r7: G.711 mu-law round-trips value-faithfully (0x7F/0xFF are the
-    standard two-zeros alias) and 8-bit PCM scales to the 16-bit range."""
-    import struct
-
-    from bioie_llm_spark.multimodal.binary_ops import (
-        _mulaw_decode_byte,
-        _mulaw_encode_sample,
-        _wav_encode_mulaw,
-    )
-
-    assert all(
-        _mulaw_decode_byte(_mulaw_encode_sample(_mulaw_decode_byte(b)))
-        == _mulaw_decode_byte(b)
-        for b in range(256)
-    )
-    assert sum(_mulaw_encode_sample(_mulaw_decode_byte(b)) != b for b in range(256)) == 1
-    samples = [_mulaw_decode_byte(b) for b in range(0, 256, 4)]
-    assert _wav_parse(_wav_encode_mulaw(8000, 1, samples)) == (8000, 1, samples)
-    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
-    data = bytes(range(0, 256, 4))
-    body = (b"WAVE" + b"fmt " + struct.pack("<I", 16) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data)
-    sr, nch, s8 = _wav_parse(b"RIFF" + struct.pack("<I", len(body)) + body)
-    assert s8 == [(b - 128) << 8 for b in data]
-
-
-def test_audio_features_discriminate():
-    """Silence, a square wave and white-ish noise produce distinct feature
-    vectors — the features reflect the decoded samples, not the container
-    bytes."""
-    import struct
-
-    silence = _audio_features(16000, 1, [0] * 64)
-    square = _audio_features(16000, 1, [20000 if i % 8 < 4 else -20000 for i in range(64)])
-    noise = _audio_features(16000, 1, list(struct.unpack("<64h", _rgb_of(5, 128))))
-    assert silence != square != noise
-    # RMS (index 1) orders as silence < square; zero-crossing rate (index 4)
-    # orders square (period 8) < noise (~every other sample)
-    assert silence[1] < square[1]
-    assert square[4] < noise[4]
 
 
 def test_png_parse_rejects_unsupported():

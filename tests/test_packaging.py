@@ -13,6 +13,7 @@ def test_package_zip_complete():
         "bioie_llm_spark/extraction.py",
         "bioie_llm_spark/pipeline.py",
         "bioie_llm_spark/queries.py",
+        "bioie_llm_spark/artifacts.py",
         "bioie_llm_spark/operators/setops.py",
         "bioie_llm_spark/operators/canonical.py",
         "bioie_llm_spark/functions/cleaning.py",
