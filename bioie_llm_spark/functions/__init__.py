@@ -1,7 +1,7 @@
 from .cleaning import (
     extract_choice_expr,
     extract_choice_kbase_expr,
-    match_mentions_udf,
+    match_mentions_expr,
     py_extract_choice,
     py_match_mentions,
 )
@@ -9,7 +9,7 @@ from .cleaning import (
 __all__ = [
     "extract_choice_expr",
     "extract_choice_kbase_expr",
-    "match_mentions_udf",
+    "match_mentions_expr",
     "py_extract_choice",
     "py_match_mentions",
 ]

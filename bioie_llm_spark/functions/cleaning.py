@@ -14,20 +14,20 @@ engine's correctness-critical kernel):
 - F3 kbase variant (base_processor.py:1309-1332): lowercase, remove the
   query entity, accept iff exactly one choice is a substring.
 
-F1 needs per-value regex quoting (gold names like ``PSD-95``), so it is a
-vectorized pandas UDF (Arrow-batched; ``re`` scan in C via compiled
-patterns). F2/F3 are pure Catalyst expressions — whole-stage-codegen'd,
-no Python in the hot path.
+All three are pure Catalyst expressions — whole-stage-codegen'd, no
+Python worker in the hot path. F1 builds one Java regex per gold inside
+``filter(golds, g -> regexp(response, pattern(g)))``: the gold is quoted
+the way ``Pattern.quote`` quotes (``\\Q..\\E``, with any ``\\E`` inside
+the gold split out), and the pattern walks the gold's occurrences
+left to right without overlap, as the reference's ``re.finditer`` does.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType
 
 _WORD = set("abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789-_")
 
@@ -50,32 +50,40 @@ def py_match_mentions(response: str, golds: list[str]) -> list[str]:
     return out
 
 
-@F.pandas_udf(ArrayType(StringType()))
-def match_mentions_udf(response: pd.Series, golds: pd.Series) -> pd.Series:
-    """Vectorized mention matcher: (response, array<gold>) -> array<matched>.
+_WORD_CLASS = r"[A-Za-z0-9_\-]"  # _WORD as a Java regex class
 
-    Matched golds keep gold-list order (the reference appends in gold
-    iteration order). Compiled-regex scan per (response, gold) pair; the
-    boundary test uses a zero-width guard pattern instead of char peeking —
-    equivalent to the reference's adjacent-char check.
+
+def _quote(g: Column) -> Column:
+    """Java ``Pattern.quote``: the gold between ``\\Q`` and ``\\E``; a
+    ``\\E`` inside the gold ends the quote, is matched as an escaped
+    backslash plus ``E``, and the quote reopens."""
+    return F.concat(
+        F.lit(r"\Q"), F.replace(g, F.lit(r"\E"), F.lit(r"\E\\E\Q")), F.lit(r"\E")
+    )
+
+
+def match_mentions_expr(response: Column, golds: Column) -> Column:
+    """Mention matcher: (response, array<gold>) -> array<matched>, pure
+    Catalyst. Matched golds keep gold-list order (the reference appends in
+    gold iteration order); a NULL response or NULL gold list gives ``[]``.
+
+    Per gold the pattern is
+    ``\\A(?>.*?G)*?(?>.*?G)(?<![W]G)(?![W])`` with G the quoted gold:
+    each atomic ``(?>.*?G)`` jumps to the next occurrence that does not
+    overlap the previous one and cannot back off to a later one, so the
+    lazy repeat tries the reference's ``finditer`` occurrences in order,
+    and the two lookarounds are its adjacent-character check.
     """
 
-    from functools import lru_cache
-
-    @lru_cache(maxsize=65536)
-    def _pat(g: str):
-        # gold vocabularies repeat across rows — compile each gold's
-        # boundary pattern once per executor, not once per (row, gold)
-        return re.compile(
-            r"(?<![A-Za-z0-9_\-])" + re.escape(g) + r"(?![A-Za-z0-9_\-])"
+    def mentioned(g: Column) -> Column:
+        q = _quote(g)
+        pattern = F.concat(
+            F.lit(r"(?s)\A(?>.*?"), q, F.lit(r")*?(?>.*?"), q,
+            F.lit(f")(?<!{_WORD_CLASS}"), q, F.lit(f")(?!{_WORD_CLASS})"),
         )
+        return (F.length(g) > 0) & F.regexp(response, pattern)
 
-    def one(resp: str, gs) -> list[str]:
-        if resp is None or gs is None:
-            return []
-        return [g for g in gs if g and _pat(g).search(resp)]
-
-    return pd.Series([one(r, g) for r, g in zip(response, golds)])
+    return F.coalesce(F.filter(golds, mentioned), F.array().cast("array<string>"))
 
 
 # ---------------------------------------------------------------- F2

@@ -10,21 +10,22 @@ replacement: ~10 bits/key at 1% false positives, ZERO false negatives by
 construction (a Bloom never misses a true member, so a screen built on
 it can only over-flag, never leak).
 
-Execution shape, Spark-first:
-- both base hashes are computed JVM-side (`xxhash64` twice — stable
-  across sessions and engines), so the Python side never hashes;
-- build: mapInPandas sets bits into one local bitmap per PARTITION
-  (numpy-vectorized Kirsch-Mitzenmacher double hashing: pos_i =
-  (h1 + i*h2) mod m), then the ≤ num_partitions partial bitmaps —
-  bounded by construction at partitions × m/8 bytes — OR-merge on the
-  driver (the same declared bounded-collect pattern as the ANN client
-  split, similarity.py). OR is commutative/associative, so partition
-  count and row order cannot change the result;
-- probe: the finished bitmap travels to executors inside the UDF
-  closure (a real multi-executor deploy passes it through
-  ``spark.sparkContext.broadcast`` instead — same plan, one copy per
-  executor) and membership is a map-side vectorized bit test; no
-  shuffle, no join.
+Execution shape, pure Catalyst (no Python worker is started):
+- positions: Kirsch-Mitzenmacher double hashing over two JVM-side base
+  hashes, ``a = pmod(xxhash64(v), m)`` and ``b = pmod(xxhash64(v, 1), m)``,
+  then ``pos_i = pmod(a + i*b, m)`` for ``i`` in ``0..k-1``. Reducing
+  modulo m first keeps ``a + i*b`` below ``k*m``, so the arithmetic
+  cannot overflow a long (Spark 4 runs with ANSI on and would raise);
+- build: explode the k positions, ``bit_or`` one ``1L << (pos & 63)``
+  per 64-bit word ``pos >> 6``, and collect the at most m/64 words —
+  bounded by construction. OR is commutative and associative, so
+  partition count and row order cannot change the result. The driver
+  packs the words little-endian into the ``bytes`` bitmap: bit ``pos``
+  is byte ``pos >> 3``, bit ``pos & 7``;
+- probe: the bitmap's words become one literal ``array<bigint>`` in the
+  plan (a real multi-executor deploy ships it with the task like any
+  literal), and membership is ``forall`` over the k positions — a
+  map-side bit test; no shuffle, no join.
 
 No reference analog — engine extension alongside the curation screens.
 """
@@ -33,11 +34,8 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
 __all__ = ["bloom_parameters", "bloom_build", "bloom_probe"]
 
@@ -54,47 +52,40 @@ def bloom_parameters(n_items: int, fpp: float = 0.01) -> tuple[int, int]:
     return m, k
 
 
-def _base_hashes(col: Column) -> tuple[Column, Column]:
-    return F.xxhash64(col), F.xxhash64(col, F.lit(_H2_SEED))
+def _positions(col: Column, m_bits: int, k: int) -> Column:
+    """array<bigint> of the k bit positions of ``col``'s value."""
+    m = F.lit(m_bits).cast("long")
+    a = F.pmod(F.xxhash64(col), m)
+    b = F.pmod(F.xxhash64(col, F.lit(_H2_SEED)), m)
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(k - 1)), lambda i: F.pmod(a + i * b, m)
+    )
 
 
-def _positions(h1: np.ndarray, h2: np.ndarray, i: int, m_bits: int) -> np.ndarray:
-    # uint64 arithmetic wraps mod 2^64 — identical in build and probe, so
-    # overflow is consistent, not a correctness hazard.
-    return (h1 + np.uint64(i) * h2) % np.uint64(m_bits)
+def _shift(name: str, word: Column, pos: Column) -> Column:
+    """``word`` shifted by ``pos & 63`` bits (``F.shiftleft`` and
+    ``F.shiftright`` take only an int shift, not a column)."""
+    return F.call_function(name, word, pos.bitwiseAND(63).cast("int"))
 
 
 def bloom_build(df: DataFrame, col: str, m_bits: int, k: int) -> bytes:
     """One pass over ``df[col]`` -> the filter's bitmap (m_bits/8 bytes).
 
-    Each partition emits one partial bitmap; the driver ORs them. The
-    collect is bounded by construction: num_partitions × m_bits/8 bytes.
+    One ``bit_or`` per 64-bit word; the collect is bounded by
+    construction at m_bits/64 rows.
     """
     assert m_bits % 8 == 0 and m_bits > 0, "m_bits must be a positive multiple of 8"
-    h1c, h2c = _base_hashes(F.col(col))
-    hashed = df.where(F.col(col).isNotNull()).select(h1c.alias("h1"), h2c.alias("h2"))
-
-    def build_partition(batches):
-        bm = np.zeros(m_bits // 8, dtype=np.uint8)
-        saw = False
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            saw = True
-            h1 = pdf["h1"].to_numpy(np.int64).view(np.uint64)
-            h2 = pdf["h2"].to_numpy(np.int64).view(np.uint64)
-            for i in range(k):
-                pos = _positions(h1, h2, i, m_bits)
-                np.bitwise_or.at(bm, (pos >> np.uint64(3)).astype(np.int64),
-                                 np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8))
-        if saw:
-            yield pd.DataFrame({"bm": [bm.tobytes()]})
-
-    partials = hashed.mapInPandas(build_partition, "bm binary").collect()
-    out = np.zeros(m_bits // 8, dtype=np.uint8)
-    for row in partials:
-        out |= np.frombuffer(row["bm"], dtype=np.uint8)
-    return out.tobytes()
+    pos = (
+        df.where(F.col(col).isNotNull())
+        .select(F.explode(_positions(F.col(col), m_bits, k)).alias("pos"))
+    )
+    words = pos.groupBy(F.shiftright("pos", 6).alias("w")).agg(
+        F.bit_or(_shift("shiftleft", F.lit(1).cast("long"), F.col("pos"))).alias("bits")
+    )
+    out = bytearray((m_bits + 63) // 64 * 8)
+    for row in words.collect():
+        out[row["w"] * 8 : row["w"] * 8 + 8] = row["bits"].to_bytes(8, "little", signed=True)
+    return bytes(out[: m_bits // 8])
 
 
 def bloom_probe(
@@ -107,25 +98,19 @@ def bloom_probe(
     """Adds boolean ``out_col``: True iff all k bit positions of ``col``'s
     value are set (map-side, no shuffle). NULL values probe as False."""
     m_bits = len(bloom) * 8
-    bm = np.frombuffer(bloom, dtype=np.uint8)
-
-    @F.pandas_udf(BooleanType())
-    def probe(h1s: pd.Series, h2s: pd.Series) -> pd.Series:
-        if not len(h1s):
-            return pd.Series([], dtype=bool)
-        h1 = h1s.to_numpy(np.int64).view(np.uint64)
-        h2 = h2s.to_numpy(np.int64).view(np.uint64)
-        ok = np.ones(len(h1), dtype=bool)
-        for i in range(k):
-            pos = _positions(h1, h2, i, m_bits)
-            bits = bm[(pos >> np.uint64(3)).astype(np.int64)]
-            ok &= (bits & (np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8))) != 0
-        return pd.Series(ok)
-
+    padded = bloom + bytes(-len(bloom) % 8)
+    words = F.lit([
+        int.from_bytes(padded[i : i + 8], "little", signed=True)
+        for i in range(0, len(padded), 8)
+    ]).cast("array<bigint>")
+    hit = F.forall(
+        _positions(F.col(col), m_bits, k),
+        lambda p: _shift("shiftright", F.get(words, F.shiftright(p, 6).cast("int")), p)
+        .bitwiseAND(1)
+        == 1,
+    )
     # xxhash64(NULL) is the hash of zero inputs (a constant), which could
     # spuriously probe True — gate NULL values expression-side instead.
-    h1c, h2c = _base_hashes(F.col(col))
     return df.withColumn(
-        out_col,
-        F.when(F.col(col).isNull(), F.lit(False)).otherwise(probe(h1c, h2c)),
+        out_col, F.when(F.col(col).isNull(), F.lit(False)).otherwise(hit)
     )

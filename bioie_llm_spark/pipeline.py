@@ -28,7 +28,7 @@ from .datagen.corpus import (
     build_gazetteer,
 )
 from .extraction import extract_triples, link_entities
-from .functions.cleaning import extract_choice_expr, match_mentions_udf
+from .functions.cleaning import extract_choice_expr, match_mentions_expr
 from .operators.adjacency import negative_pairs, symmetric_adjacency
 from .operators.metrics import (
     classification_metrics,
@@ -188,7 +188,7 @@ def entity_task(
             "response", strip_prompt(F.col("generated"), F.col("prompt"))
         )
         .withColumnRenamed("entity", "node")
-        .withColumn("matched", match_mentions_udf(F.col("response"), F.col("true_arr")))
+        .withColumn("matched", match_mentions_expr(F.col("response"), F.col("true_arr")))
     )
     p_out, t_out = sort_and_pad(F.col("matched"), F.col("true_arr"), k)
     aligned = matched.select(
@@ -356,7 +356,7 @@ def kegg_entity_task(
     flat_aliases = F.flatten(
         F.transform("true_arr", lambda g: F.array(F.concat(g, F.lit("A1")), g))
     )
-    matched_aliases = match_mentions_udf(F.col("response"), flat_aliases)
+    matched_aliases = match_mentions_expr(F.col("response"), flat_aliases)
     matched = joined.withColumn(
         "matched",
         F.array_distinct(

@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .artifacts import artifact, scale_factor
-from .functions.cleaning import extract_choice_expr
+from .functions.cleaning import extract_choice_expr, match_mentions_expr
 from .golden import golden_sql
 from .operators.sampling import hash_order_key, seeded_sample, stratified_sample, top_k
 from .operators.setops import sort_and_pad
@@ -1250,14 +1250,7 @@ _F1_TERMS = ["spark", "vector", "query", "batch"]
 )
 def f1_u1_match_pad(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
-    terms = F.array(*[F.lit(t) for t in _F1_TERMS])
-    matched = F.filter(
-        terms,
-        lambda t: F.regexp_like(
-            F.col("text"),
-            F.concat(F.lit("(^|[^A-Za-z0-9_-])"), t, F.lit("([^A-Za-z0-9_-]|$)")),
-        ),
-    )
+    matched = match_mentions_expr(F.col("text"), F.lit(_F1_TERMS))
     # separate projection: `m` is referenced by mentions AND sort_and_pad —
     # a multi-use non-trivial alias must be its own projection (CollapseProject)
     arrs = d.select(
@@ -3559,8 +3552,8 @@ def cur_contamination(spark, sf_dir):
     # hits within 3x the nominal 1% rate, broadcast 1-row crossJoin).
     from .operators.curation import contamination_check_bloom
 
-    # fan out: the shingle scan + Arrow-batched Bloom probe otherwise run
-    # on the single-row-group scan's 1-2 tasks (see load_fanout)
+    # fan out: the shingle scan + the Bloom probe's k bit tests per gram
+    # otherwise run on the single-row-group scan's 1-2 tasks (see load_fanout)
     docs = load_fanout(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 17 == 0).select("text")
     # localCheckpoint: the fp-bound digest below re-reads the screen, and

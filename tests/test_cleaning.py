@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from bioie_llm_spark.functions.cleaning import (
     extract_choice_expr,
     extract_choice_kbase_expr,
-    match_mentions_udf,
+    match_mentions_expr,
     py_extract_choice,
     py_match_mentions,
 )
@@ -26,6 +26,12 @@ BOUNDARY_CASES = [
     ("pre-EB1 hyphen blocks", ["EB1"], []),
     ("", ["EB1"], []),
     ("AKT1 and AKT", ["AKT", "AKT1"], ["AKT", "AKT1"]),
+    # regex metacharacters and quoting escapes are literal text
+    ("(EB1)* binds", ["(EB1)*", "EB1*", "EB1"], ["(EB1)*", "EB1"]),
+    ("x a\\Eb\\Q y", ["a\\Eb\\Q", "\\E"], ["a\\Eb\\Q"]),
+    # occurrences are scanned without overlap: the valid '..' at 2 overlaps
+    # the invalid one at 1, so it is never tried
+    ("a...", [".."], []),
 ]
 
 
@@ -38,7 +44,7 @@ def test_match_mentions_udf_matches_python(spark):
     rows = [(r, g) for r, g, _ in BOUNDARY_CASES]
     df = spark.createDataFrame(rows, "response string, golds array<string>")
     got = (
-        df.withColumn("m", match_mentions_udf("response", "golds"))
+        df.withColumn("m", match_mentions_expr(F.col("response"), F.col("golds")))
         .select("response", "m")
         .collect()
     )
@@ -48,7 +54,7 @@ def test_match_mentions_udf_matches_python(spark):
 
 
 def test_match_mentions_property(spark):
-    """Random-ish fuzz: UDF == pure-Python twin on generated cases."""
+    """Random-ish fuzz: expression == pure-Python twin on generated cases."""
     import random
 
     rng = random.Random(42)
@@ -61,7 +67,7 @@ def test_match_mentions_property(spark):
         )
         cases.append((" ".join(words), golds))
     df = spark.createDataFrame(cases, "response string, golds array<string>")
-    got = df.withColumn("m", match_mentions_udf("response", "golds")).collect()
+    got = df.withColumn("m", match_mentions_expr(F.col("response"), F.col("golds"))).collect()
     for row, (resp, golds) in zip(got, cases):
         assert row["m"] == py_match_mentions(resp, golds), (resp, golds)
 

@@ -19,7 +19,6 @@ def test_package_zip_complete():
         "bioie_llm_spark/functions/cleaning.py",
         "bioie_llm_spark/sources/checkpoint.py",
         "bioie_llm_spark/streaming/incremental.py",
-        "bioie_llm_spark/multimodal/binary_ops.py",
         "bioie_llm_spark/datagen/corpus.py",
     ]:
         assert mod in names, mod

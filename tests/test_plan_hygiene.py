@@ -73,10 +73,10 @@ def test_curation_plan_shapes(spark):
 
 def test_scored_task_metrics_run_each_udf_once(spark, tmp_path_factory):
     """Each scored task's metrics frame plans exactly one evaluation of
-    each Python UDF it uses — the generate (MapInPandas) and, where the
-    task matches mentions, the matcher (ArrowEvalPython) — and no
-    cartesian product. Every extra reference to the task's pairs would
-    re-run the whole generate -> match chain in a branch of its own."""
+    each Python UDF it uses — the generate (MapInPandas); the mention
+    matcher is a Catalyst expression, so no task plans an ArrowEvalPython
+    — and no cartesian product. Every extra reference to the task's pairs
+    would re-run the whole generate -> match chain in a branch of its own."""
     from bioie_llm_spark.datagen.corpus import CorpusSpec
     from bioie_llm_spark.pipeline import (
         build_triples,
@@ -98,10 +98,10 @@ def test_scored_task_metrics_run_each_udf_once(spark, tmp_path_factory):
         "cartesian": FEATURES["cartesian"],
     }
     want = {
-        "entity": (entity_task, 1),
+        "entity": (entity_task, 0),
         "relation": (relation_task, 0),
         "relation_type": (relation_type_task, 0),
-        "kegg_entity": (kegg_entity_task, 1),
+        "kegg_entity": (kegg_entity_task, 0),
     }
     got = {
         name: plan_stats(task(triples, facts)["metrics"], udfs)
@@ -111,3 +111,36 @@ def test_scored_task_metrics_run_each_udf_once(spark, tmp_path_factory):
         name: {"generate": 1, "matcher": n_matcher, "python": 1 + n_matcher, "cartesian": 0}
         for name, (_, n_matcher) in want.items()
     }
+
+
+def test_contamination_bloom_starts_no_python(spark):
+    """The Bloom screen's build and probe are Catalyst: no Python node in
+    the screen's plan (the bitmap build runs eagerly while planning)."""
+    from pyspark.sql import functions as F
+
+    from bioie_llm_spark.operators.curation import contamination_check_bloom
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    bench = docs.filter(F.col("doc_id") % 17 == 0).select("text")
+    assert plan_stats(contamination_check_bloom(docs, bench))["python"] == 0
+
+
+def test_catalyst_modules_import_no_numpy_or_pandas():
+    """membership (Bloom) and cleaning (matchers) are pure Catalyst; an
+    import of numpy or pandas there would bring the Python worker stack
+    back. Read from the source, so another module's imports cannot mask it."""
+    import ast
+
+    import bioie_llm_spark
+
+    root = os.path.dirname(bioie_llm_spark.__file__)
+    for rel in ("operators/membership.py", "functions/cleaning.py"):
+        with open(os.path.join(root, rel)) as f:
+            tree = ast.parse(f.read())
+        imported = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                imported |= {a.name.split(".")[0] for a in node.names}
+            elif isinstance(node, ast.ImportFrom) and node.module:
+                imported.add(node.module.split(".")[0])
+        assert not imported & {"numpy", "pandas"}, (rel, imported)

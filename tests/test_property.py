@@ -61,14 +61,24 @@ def test_sort_and_pad_invariants(spark):
                 assert p[i] in common or p[i] == "NONE"
 
 
-def test_match_mentions_property_batched(spark):
-    from bioie_llm_spark.functions.cleaning import match_mentions_udf
+# matcher alphabet: word and boundary characters, every regex metacharacter,
+# and the Java quoting escapes \Q / \E as whole pieces
+_MATCH_PIECES = list("ABXY19-_ .(),\\^$|?*+[]{}") + ["\\E", "\\Q"]
 
-    text_st = st.text(alphabet="ABXY19-_ .(),", min_size=0, max_size=40)
+
+def _pieces(max_size):
+    return st.lists(st.sampled_from(_MATCH_PIECES), max_size=max_size).map("".join)
+
+
+def test_match_mentions_property_batched(spark):
+    from bioie_llm_spark.functions.cleaning import match_mentions_expr
+
+    text_st = st.none() | _pieces(40)
+    golds_st = st.none() | st.lists(st.none() | _pieces(6), min_size=1, max_size=5)
     cases = []
 
-    @settings(max_examples=80, deadline=None, suppress_health_check=list(HealthCheck))
-    @given(text_st, st.lists(name_st, min_size=1, max_size=5))
+    @settings(max_examples=200, deadline=None, suppress_health_check=list(HealthCheck))
+    @given(text_st, golds_st)
     def collect(resp, golds):
         cases.append((resp, golds))
 
@@ -78,7 +88,7 @@ def test_match_mentions_property_batched(spark):
         "id int, response string, golds array<string>",
     )
     rows = (
-        df.withColumn("m", match_mentions_udf("response", "golds"))
+        df.withColumn("m", match_mentions_expr(F.col("response"), F.col("golds")))
         .orderBy("id")
         .collect()
     )
