@@ -412,7 +412,7 @@ def run_once(cpus: int, sf_dir: str) -> dict:
 
     # --- sequence packing (registry-external: FFD has no SQL oracle —
     # correctness lives in test_curation's invariants): docs into 512-token
-    # bins, hash-salted groups, one applyInPandas pass.
+    # bins, hash-salted groups, one Catalyst fold per group.
     from bioie_llm_spark.operators.curation import pack_sequences
 
     pack_sequences(w_docs, max_tokens=512, n_groups=64).count()  # warm

@@ -18,13 +18,16 @@ engine:
 - pack_sequences: first-fit-decreasing packing of documents into
   max_tokens bins, parallelized by hash-salting docs into independent
   groups packed locally (packing is sequential only WITHIN a group, and
-  group count scales with the cluster). Deterministic: group assignment
-  and within-group order are hash-derived, not partition-derived.
+  group count scales with the cluster). Each group is one sorted
+  collect_list and one ``aggregate`` fold, so packing starts no Python
+  worker. Deterministic: group assignment and within-group order are
+  hash- and value-derived, not partition-derived.
+
+No operator here starts a Python worker; the module imports no pandas.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
@@ -460,12 +463,14 @@ def pack_sequences(
     Packing is inherently sequential, so the distributed shape is
     group-local: group = xxhash64(id) % n_groups (hash-derived, NOT
     partition-derived — bit-identical at any parallelism), then one
-    applyInPandas pass packs each group with FFD over (tokens desc, id).
-    Bin ids are globally unique as group * 2^32 + local bin index. A doc
-    longer than the budget gets a dedicated oversize bin (flagged, never
-    silently truncated). Size n_groups to the cluster: bins never cross
-    groups, so utilization converges to the single-machine packing as
-    group populations grow.
+    groupBy collects each group's docs sorted by (tokens desc, id) and an
+    ``aggregate`` fold packs them first-fit (pure Catalyst: one exchange,
+    no Python worker). Bin ids are globally unique as group * 2^32 + local
+    bin index. A doc longer than the budget gets a dedicated oversize bin
+    (flagged, never silently truncated). A NULL text counts 0 tokens, the
+    same as ''. Size n_groups to the cluster: bins never cross groups, so
+    utilization converges to the single-machine packing as group
+    populations grow.
 
     Returns (id, group, bin_id, n_tokens, oversize).
     """
@@ -474,50 +479,68 @@ def pack_sequences(
     sized = docs.select(
         F.col(id_col).alias("id"),
         F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_groups)).alias("group"),
-        token_count(F.col(text_col)).alias("n_tokens"),
+        F.coalesce(token_count(F.col(text_col)), F.lit(0)).alias("n_tokens"),
+    )
+    # struct order = sort order: tokens desc, then id
+    items = sized.groupBy("group").agg(
+        F.array_sort(
+            F.collect_list(F.struct((-F.col("n_tokens")).alias("neg"), "id", "n_tokens"))
+        ).alias("items")
     )
 
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            ["n_tokens", "id"], ascending=[False, True]
-        ).reset_index(drop=True)
-        group = int(pdf["group"].iloc[0])
-        bins: list[int] = []  # remaining capacity per local bin
-        assign: list[int] = []
-        oversize: list[bool] = []
-        for tok in pdf["n_tokens"]:
-            tok = int(tok)
-            if tok > max_tokens:
-                bins.append(-1)  # dedicated, closed bin
-                assign.append(len(bins) - 1)
-                oversize.append(True)
-                continue
-            for b, cap in enumerate(bins):
-                if cap >= tok:
-                    bins[b] = cap - tok
-                    assign.append(b)
-                    break
-            else:
-                bins.append(max_tokens - tok)
-                assign.append(len(bins) - 1)
-            oversize.append(False)
-        pdf["bin_id"] = [group * (1 << 32) + b for b in assign]
-        pdf["oversize"] = oversize
-        return pdf[["id", "group", "bin_id", "n_tokens", "oversize"]]
+    def step(acc, item):
+        # bins: remaining capacity per local bin, -1 = closed oversize bin
+        bins, tok = acc["bins"], item["n_tokens"]
+        n = F.size(bins)
+        # first bin with room; 0 = open a new one. The array_max guard
+        # skips the search when no bin can fit.
+        fit = F.when(
+            (tok <= max_tokens) & (F.array_max(bins) >= tok),
+            F.array_position(F.transform(bins, lambda c: c >= tok), True).cast("int"),
+        ).otherwise(0)
 
-    id_type = sized.schema["id"].dataType.simpleString()
-    schema = f"id {id_type}, group bigint, bin_id bigint, n_tokens int, oversize boolean"
-    return sized.groupBy("group").applyInPandas(pack, schema=schema)
+        def place(f):
+            new_bin = F.when(tok > max_tokens, -1).otherwise(max_tokens - tok)
+            filled = F.concat(
+                F.slice(bins, 1, f - 1),
+                F.array(F.element_at(bins, f) - tok),
+                F.slice(bins, f + 1, n - f),
+            )
+            return F.struct(
+                F.when(f == 0, F.concat(bins, F.array(new_bin))).otherwise(filled).alias("bins"),
+                F.concat(acc["assign"], F.array(F.when(f == 0, n).otherwise(f - 1))).alias("assign"),
+            )
+
+        # a lambda binds fit once; Catalyst does not share a subexpression
+        # used several times inside the fold, so each use would search again
+        return F.element_at(F.transform(F.array(fit), place), 1)
+
+    empty = F.array().cast("array<int>")
+    folded = items.select(
+        "group",
+        "items",
+        F.aggregate(
+            "items", F.struct(empty.alias("bins"), empty.alias("assign")), step
+        )["assign"].alias("assign"),
+    )
+    z = F.explode(F.arrays_zip("items", "assign")).alias("z")
+    return folded.select("group", z).select(
+        F.col("z.items.id").alias("id"),
+        "group",
+        (F.col("group") * F.lit(1 << 32) + F.col("z.assign")).alias("bin_id"),
+        F.col("z.items.n_tokens").alias("n_tokens"),
+        (F.col("z.items.n_tokens") > max_tokens).alias("oversize"),
+    )
 
 
 def py_pack_ffd(
-    items: list[tuple[int, int]], max_tokens: int
-) -> dict[int, int]:
+    items: list[tuple], max_tokens: int
+) -> dict:
     """Pure-Python twin of pack_sequences' per-group FFD (property tests):
     items = [(id, n_tokens)], returns id -> local bin index. Must mirror
-    the applyInPandas kernel exactly — (tokens desc, id) order, first fit,
+    the Catalyst fold exactly — (tokens desc, id) order, first fit,
     oversize docs in dedicated closed bins."""
-    out: dict[int, int] = {}
+    out: dict = {}
     bins: list[int] = []
     for i, tok in sorted(items, key=lambda t: (-t[1], t[0])):
         if tok > max_tokens:

@@ -138,6 +138,16 @@ def test_pack_oversize_isolated(spark):
     assert stats["n_oversize_bins"] == 1 and stats["n_violations"] == 0
 
 
+def test_pack_null_text_counts_zero_tokens(spark):
+    """A NULL text packs as 0 tokens, the same as '' — not a task failure."""
+    docs = spark.createDataFrame(
+        [(1, "a b c"), (2, None), (3, "")], "doc_id bigint, text string"
+    )
+    rows = {r["id"]: r for r in pack_sequences(docs, max_tokens=10, n_groups=1).collect()}
+    assert rows[2]["n_tokens"] == 0 and rows[2]["oversize"] is False
+    assert rows[2]["bin_id"] == rows[1]["bin_id"] == rows[3]["bin_id"]
+
+
 @pytest.mark.parametrize("budget", [16, 64, 256])
 def test_pack_ffd_beats_singletons(spark, budget):
     """FFD must never use more bins than one-doc-per-bin, and must STRICTLY
@@ -214,6 +224,11 @@ def test_paragraph_dedup_drop_all_and_invariance(spark):
 
 # -------------------------------------------------- FFD property (hypothesis)
 def test_pack_ffd_matches_python_twin(spark):
+    """pack_sequences == py_pack_ffd run per salt group: hypothesis sizes at
+    1 and 4 groups, zero-token and oversize docs, a string doc_id, and one
+    2000-doc group (a long fold)."""
+    import random
+
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
@@ -227,18 +242,35 @@ def test_pack_ffd_matches_python_twin(spark):
         cases.append(sizes)
 
     collect()
-    budget = 50
-    for sizes in cases[:12]:  # one tiny Spark job per case; cap runtime
+
+    def check(items, budget, n_groups, id_type="bigint"):
         docs = spark.createDataFrame(
-            [(i, "w " * k) for i, k in enumerate(sizes)],
-            "doc_id bigint, text string",
+            [(i, "w " * k) for i, k in items], f"doc_id {id_type}, text string"
         )
         got = {
             r["id"]: r["bin_id"]
-            for r in pack_sequences(docs, max_tokens=budget, n_groups=1).collect()
+            for r in pack_sequences(docs, max_tokens=budget, n_groups=n_groups).collect()
         }
-        want = py_pack_ffd(list(enumerate(sizes)), budget)
-        assert got == want, (sizes, got, want)
+        salt = dict(  # = pack's salt
+            docs.select("doc_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_groups))).collect()
+        )
+        want = {}
+        for g in set(salt.values()):
+            local = py_pack_ffd([t for t in items if salt[t[0]] == g], budget)
+            want.update({i: (g << 32) + b for i, b in local.items()})
+        assert got == want, (items, budget, n_groups, got, want)
+
+    budget = 50
+    for sizes in cases[:12]:  # one tiny Spark job per case; cap runtime
+        check(list(enumerate(sizes)), budget, n_groups=1)
+    for sizes in cases[12:18]:
+        check(list(enumerate(sizes)), budget, n_groups=4)
+    # zero-token docs ('' text), oversize docs and exact fits, 4 groups
+    edge = [0, 0, 51, 80, 50, 0, 25, 25, 1, 49, 0, 100, 50, 24, 26, 0]
+    check(list(enumerate(edge)), budget, n_groups=4)
+    check([(f"doc-{i}", k) for i, k in enumerate(edge)], budget, n_groups=4, id_type="string")
+    rng = random.Random(7)
+    check([(i, rng.randint(0, 60)) for i in range(2000)], budget, n_groups=1)
 
 
 # ------------------------------------------------------------------ chunking

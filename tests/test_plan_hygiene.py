@@ -43,7 +43,8 @@ def test_curation_plan_shapes(spark):
     """Round-3 curation operators keep their documented physical shapes
     (PLANS.md): contamination joins the benchmark by BROADCAST only;
     chunking is a pure zero-exchange map; the mixing draw pays exactly one
-    (window) exchange; packing repartitions once into its salt groups."""
+    (window) exchange; packing repartitions once into its salt groups and
+    folds each group in Catalyst, with no Python node."""
     from pyspark.sql import functions as F
 
     from bioie_llm_spark.operators.curation import (
@@ -68,7 +69,7 @@ def test_curation_plan_shapes(spark):
     assert st["exchanges"] == 1 and st["window"] == 1 and st["cartesian"] == 0
 
     st = plan_stats(pack_sequences(docs, max_tokens=256))
-    assert st["exchanges"] == 1 and st["python"] == 1
+    assert st["exchanges"] == 1 and st["python"] == 0
 
 
 def test_scored_task_metrics_run_each_udf_once(spark, tmp_path_factory):
@@ -126,15 +127,16 @@ def test_contamination_bloom_starts_no_python(spark):
 
 
 def test_catalyst_modules_import_no_numpy_or_pandas():
-    """membership (Bloom) and cleaning (matchers) are pure Catalyst; an
-    import of numpy or pandas there would bring the Python worker stack
-    back. Read from the source, so another module's imports cannot mask it."""
+    """membership (Bloom), cleaning (matchers) and curation (packing) are
+    pure Catalyst; an import of numpy or pandas there would bring the
+    Python worker stack back. Read from the source, so another module's
+    imports cannot mask it."""
     import ast
 
     import bioie_llm_spark
 
     root = os.path.dirname(bioie_llm_spark.__file__)
-    for rel in ("operators/membership.py", "functions/cleaning.py"):
+    for rel in ("operators/membership.py", "functions/cleaning.py", "operators/curation.py"):
         with open(os.path.join(root, rel)) as f:
             tree = ast.parse(f.read())
         imported = set()
