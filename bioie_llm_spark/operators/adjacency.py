@@ -28,21 +28,6 @@ def symmetric_adjacency(
     )
 
 
-def pair_explode(adjacency: DataFrame) -> DataFrame:
-    """EP2 prep: adjacency -> directed (subj, obj) pair set
-    (string_processor.py:169-173)."""
-    return adjacency.select(
-        F.col("node").alias("subj"), F.explode("interactors").alias("obj")
-    )
-
-
-def anti_join_pairs(pool: DataFrame, exclude: DataFrame, on: list[str]) -> DataFrame:
-    """J3: remove few-shot exemplars (or any exclusion set) from an eval
-    pool — `left_anti` replaces the reference's `not in set` filters
-    (string_processor.py:249-250)."""
-    return pool.join(exclude.select(on), on, "left_anti")
-
-
 def negative_pairs(
     nodes: DataFrame, positives: DataFrame, n: int, node_col: str = "node", seed: int = 42
 ) -> DataFrame:

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import _list_pairs
+
 
 def normalize_name(col: Column) -> Column:
     """Canonical string key: uppercase, strip all non-alphanumerics
@@ -59,9 +61,9 @@ def jaccard_pairs(
     Physical shape (capped path, same as dedup.ngram_jaccard_pairs): ONE
     evaluation of the n-gram subtree and ONE shuffle on the gram key —
     bounded posting lists via collect_list with the cap as a HAVING (so no
-    group exceeds max_df members), pairs expanded per list; the join
-    formulation (kept for max_df=None) evaluates the normalize+gram map
-    three times."""
+    group exceeds max_df members), pairs expanded per list
+    (``dedup._list_pairs``); the join formulation (kept for max_df=None)
+    evaluates the normalize+gram map three times."""
     grams = names.select(
         F.col(name_col).alias("name"), char_ngrams(F.col(name_col), n).alias("grams")
     ).withColumn("n_grams", F.size("grams"))
@@ -75,28 +77,14 @@ def jaccard_pairs(
             )
             .filter((F.col("__df") >= 2) & (F.col("__df") <= max_df))
         )
-        pairs = members.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "ms",
-                        lambda x: F.filter(
-                            F.transform(
-                                "ms",
-                                lambda y: F.struct(
-                                    x["name"].alias("name_a"),
-                                    y["name"].alias("name_b"),
-                                    x["n_grams"].alias("na"),
-                                    y["n_grams"].alias("nb"),
-                                ),
-                            ),
-                            lambda p: p["name_a"] < p["name_b"],
-                        ),
-                    )
-                )
-            ).alias("p")
-        ).select("p.name_a", "p.name_b", "p.na", "p.nb")
-        shared = pairs.groupBy("name_a", "name_b", "na", "nb").agg(
+        # name_a < name_b drops the self-pair a repeated name would make,
+        # so the counts match the join formulation for any input
+        pairs = _list_pairs(members).select(
+            F.least("x.name", "y.name").alias("name_a"),
+            F.greatest("x.name", "y.name").alias("name_b"),
+            (F.col("x.n_grams") + F.col("y.n_grams")).alias("__nanb"),
+        ).filter(F.col("name_a") < F.col("name_b"))
+        shared = pairs.groupBy("name_a", "name_b", "__nanb").agg(
             F.count("*").alias("shared")
         )
     else:
@@ -109,11 +97,11 @@ def jaccard_pairs(
         shared = (
             a.join(b, "gram")
             .filter(F.col("name_a") < F.col("name_b"))
-            .groupBy("name_a", "name_b", "na", "nb")
+            .groupBy("name_a", "name_b", (F.col("na") + F.col("nb")).alias("__nanb"))
             .agg(F.count("*").alias("shared"))
         )
     return shared.withColumn(
-        "jaccard", F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
+        "jaccard", F.col("shared") / (F.col("__nanb") - F.col("shared"))
     ).filter(F.col("jaccard") >= threshold).select("name_a", "name_b", "jaccard")
 
 

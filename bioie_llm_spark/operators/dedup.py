@@ -181,6 +181,23 @@ def minhash_dropped_buckets(
     )
 
 
+def _list_pairs(lists: DataFrame) -> DataFrame:
+    """``(x, y)``: every pair of positions i < j of each posting list
+    ``ms``, once — the candidate expansion of the inverted-index joins
+    (``ngram_jaccard_pairs``, ``minhash_lsh_candidates``,
+    ``canonical.jaccard_pairs``). Two codegen'd Generates (posexplode, then
+    explode of the per-position tail slice) instead of a nested
+    transform+filter: the HOF form builds sz^2 structs through interpreted
+    expression eval and filters half away, while this form emits exactly
+    the sz(sz-1)/2 pairs inside whole-stage codegen — measured 20.8s ->
+    14.8s on the sf1.0 dd_ngram_jaccard slot (71M pair rows). Callers
+    orient each pair with least/greatest."""
+    wx = lists.select("ms", F.posexplode("ms").alias("i", "x"))
+    return wx.select(
+        "x", F.explode(F.slice("ms", F.col("i") + 2, F.size("ms"))).alias("y")
+    )
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -221,18 +238,11 @@ def minhash_lsh_candidates(
         .agg(F.collect_list(F.struct("id", "sig")).alias("ms"), F.count("*").alias("sz"))
         .filter((F.col("sz") >= 2) & (F.col("sz") <= max_bucket))
     )
-    # upper-triangle pair expansion via two Generates (the
-    # ngram_jaccard_pairs rewrite): the nested transform+filter form built
-    # sz^2 structs — each carrying the est expression over two 32-long
-    # signature arrays — through interpreted HOF eval and discarded half;
-    # this emits each unordered pair once and evaluates est once per pair.
-    # est is symmetric (fraction of agreeing positions), so the
-    # least/greatest orientation produces bit-identical rows to the old
-    # id_a < id_b filter.
-    wx = grouped.select("ms", F.posexplode("ms").alias("i", "x"))
-    pairs = wx.select(
-        "x", F.explode(F.slice("ms", F.col("i") + 2, F.size("ms"))).alias("y")
-    ).select(
+    # upper-triangle pair expansion (``_list_pairs``): est is evaluated once
+    # per unordered pair, and it is symmetric (fraction of agreeing
+    # positions), so the least/greatest orientation produces bit-identical
+    # rows to the old id_a < id_b filter.
+    pairs = _list_pairs(grouped).select(
         F.least("x.id", "y.id").alias("id_a"),
         F.greatest("x.id", "y.id").alias("id_b"),
         est(F.col("x.sig"), F.col("y.sig")).alias("est_jaccard"),
@@ -307,22 +317,11 @@ def ngram_jaccard_pairs(
             )
             .filter(F.col("__df") <= max_df)
         )
-        # Upper-triangle pair expansion as TWO codegen'd Generates
-        # (posexplode, then explode of the per-position tail slice) instead
-        # of a nested transform+filter: the HOF form builds df^2 structs
-        # through interpreted expression eval and filters half away, while
-        # the Generate form emits exactly the df(df-1)/2 surviving pairs
-        # inside whole-stage codegen — measured 20.8s -> 14.8s on the
-        # sf1.0 slot (71M pair rows; guide §1.2 per-task work). The pair
-        # key carries na+nb as one int (the jaccard denominator needs only
-        # the sum); least/greatest normalizes the orientation the nested
-        # form got from its id_a < id_b filter — posting-list ids are
-        # unique per gram, so each unordered pair is emitted exactly once
-        # either way.
-        wx = members.select("ms", F.posexplode("ms").alias("i", "x"))
-        pairs = wx.select(
-            "x", F.explode(F.slice("ms", F.col("i") + 2, F.size("ms"))).alias("y")
-        ).select(
+        # Upper-triangle pair expansion (``_list_pairs``). The pair key
+        # carries na+nb as one int (the jaccard denominator needs only the
+        # sum); least/greatest normalizes the orientation — posting-list
+        # ids are unique per gram, so each unordered pair is emitted once.
+        pairs = _list_pairs(members).select(
             F.least("x.id", "y.id").alias("id_a"),
             F.greatest("x.id", "y.id").alias("id_b"),
             (F.col("x.n_sh") + F.col("y.n_sh")).alias("__nanb"),

@@ -61,11 +61,6 @@ def stratified_sample(
     )
 
 
-def seeded_shuffle(df: DataFrame, key_cols: list[str], seed: int = SEED) -> DataFrame:
-    """T5: deterministic shuffle = total order by seeded hash."""
-    return df.orderBy(hash_order_key(key_cols, seed))
-
-
 def top_k(df: DataFrame, order_cols: list[str | Column], k: int) -> DataFrame:
     """T3/T7: global top-k via orderBy+limit (Spark executes this as a
     per-partition TakeOrdered + driver merge — no full sort at scale).

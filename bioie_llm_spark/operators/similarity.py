@@ -259,8 +259,8 @@ def ivf_topk(
     ~n_centroids/n_probe-fold. Centroids are dimension-sized and live in
     the plan as literals (collected once — bounded by n_centroids).
     Pass ``index`` (from a prior ivf_index call) to serve against a
-    prebuilt index — the train-once shape, and what the ANN crossover
-    bench times (scripts/bench_ann_crossover.py): per-row cell assignment
+    prebuilt index — the train-once shape, and what BASELINE.md's "ANN
+    crossover, measured" timed: per-row cell assignment
     costs n_centroids squared-distances per corpus row and belongs with
     the build, not in every serve query."""
     if index is None:
@@ -674,8 +674,8 @@ def ivfpq_auto_knobs(
     a coarse ranker whose quantization noise grows with the number of
     candidates competing for the shortlist, and only the top
     ``refine * k`` survive to exact re-rank. The measured crossover sweep
-    (scripts/bench_ann_crossover.py, BASELINE.md: dim 64, 64 cells,
-    probe 8) shows recall@10 tracks the SHORTLIST / CANDIDATES ratio, not
+    (BASELINE.md, "ANN crossover, measured": dim 64, 64 cells, probe 8)
+    shows recall@10 tracks the SHORTLIST / CANDIDATES ratio, not
     refine itself: ~5% of candidates re-ranked gives 0.89-0.97, ~10%
     gives ~1.0, while a fixed refine=128 decays 0.97@200k -> 0.79@400k.
 

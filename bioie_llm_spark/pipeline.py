@@ -34,7 +34,6 @@ from .operators.metrics import (
     classification_metrics,
     confusion_matrix,
     full_matches,
-    triple_pr,
 )
 from .operators.sampling import seeded_sample, stratified_sample
 from .operators.setops import sort_and_pad
@@ -432,23 +431,3 @@ def incremental_triples(
         .select(*deltas.columns),
         partition_by=["pred"],
     )
-
-
-def run_end_to_end(
-    spark: SparkSession,
-    spec: CorpusSpec | None = None,
-    sf: float = 0.001,
-    out_dir: str | None = None,
-) -> dict[str, DataFrame]:
-    """Full pipeline at a given scale; returns the triple table, the triple
-    P/R grade vs gold, and all three scored tasks."""
-    spec = spec or CorpusSpec.for_scale(sf)
-    stages = build_triples(spark, spec, out_dir=out_dir)
-    gold = stages["facts"]
-    triples = stages["triples"]
-    out = {"triples": triples, "triple_pr": triple_pr(triples, gold)}
-    out["entity"] = entity_task(triples, gold)
-    out["relation"] = relation_task(triples, gold)
-    out["relation_type"] = relation_type_task(triples, gold)
-    out["kegg_entity"] = kegg_entity_task(triples, gold)
-    return out

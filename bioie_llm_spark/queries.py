@@ -119,16 +119,6 @@ def _kg_stages(spark: SparkSession, sf_dir: str) -> dict:
     return _KG_CACHE[id(spark), _kg.root(sf_dir)]
 
 
-def _triple_digest(t: DataFrame, *cols: str) -> DataFrame:
-    return t.agg(
-        F.count("*").cast("long").alias("n_triples"),
-        F.countDistinct("subj").alias("n_subj"),
-        F.countDistinct("pred").alias("n_pred"),
-        F.countDistinct("obj").alias("n_obj"),
-        F.bit_xor(F.xxhash64(*cols)).alias("content_hash"),
-    )
-
-
 _METRIC_COLS = [
     "n", "accuracy", "micro_precision", "micro_recall", "micro_f1",
     "macro_precision", "macro_recall", "macro_f1",
@@ -709,7 +699,7 @@ def kg_hot_predicates(spark, sf_dir):
     )
 
 
-@artifact("canon", _KG_MODULES + ("operators.canonical",))
+@artifact("canon", _KG_MODULES + ("operators.canonical", "operators.dedup"))
 def _canon(spark, sf_dir, out):
     """The canonicalization outputs: ``mapping/`` (name, canonical_id) and
     ``remapped/`` (subj, pred, obj, source_sha256) — the cross-engine

@@ -152,11 +152,3 @@ def package_zip() -> str:
                     )
                     zf.write(full, rel)
     return out
-
-
-def ship_package(spark: SparkSession) -> str:
-    """Attach the package zip to a running session (addPyFile) so executors
-    can unpickle UDF closures that reference package modules."""
-    z = package_zip()
-    spark.sparkContext.addPyFile(z)
-    return z

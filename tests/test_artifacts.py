@@ -26,7 +26,7 @@ def test_oracle_text_stable_under_source_edit(monkeypatch):
     monkeypatch.setitem(A._SRC_SNAPSHOT, path, A._SRC_SNAPSHOT[path] + b"\n")
     assert Q.all_oracles() == text
     moved = {a.name for a in arts if a.root(SF_DIR) != roots[a.name]}
-    assert moved == {"mhc", "fuzzy", "stream_equiv"}
+    assert moved == {"canon", "mhc", "fuzzy", "stream_equiv"}
     assert moved == {a.name for a in arts if "operators.dedup" in a.modules}
 
 

@@ -88,15 +88,28 @@ def test_ngram_hot_gram_cap(spark):
 def test_grouped_equals_join_formulation(spark):
     """With a non-binding cap, the grouped posting-list path must produce
     exactly the join-formulation (max_df=None) pair set — the two physical
-    shapes share one logical spec."""
+    shapes share one logical spec. Both inverted-index joins with a join
+    twin are checked: document shingles and entity-name char-n-grams (one
+    name repeated, so a posting list holds it twice)."""
+    from bioie_llm_spark.operators.canonical import jaccard_pairs
+
     rows = [
         (i, " ".join(f"w{(i * 7 + j * 13) % 23}" for j in range(12)))
         for i in range(40)
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    grouped = sorted(map(tuple, ngram_jaccard_pairs(df, threshold=0.2, max_df=10**6).collect()))
-    joined = sorted(map(tuple, ngram_jaccard_pairs(df, threshold=0.2, max_df=None).collect()))
-    assert grouped == joined and len(grouped) > 0
+    names = spark.createDataFrame(
+        [(f"P{(i * 5) % 13}X{(i * 3) % 7}Q{i % 4}",) for i in range(40)] + [("P0X0Q0",)],
+        "name string",
+    )
+    for pairs in (
+        lambda max_df: ngram_jaccard_pairs(df, threshold=0.2, max_df=max_df),
+        lambda max_df: jaccard_pairs(names, threshold=0.3, max_df=max_df),
+    ):
+        grouped = sorted(map(tuple, pairs(10**6).collect()))
+        joined = sorted(map(tuple, pairs(None).collect()))
+        assert grouped == joined and len(grouped) > 0
+        assert all(a < b for a, b, _ in grouped)
 
 
 def test_grouped_pair_plans_single_index_pass(spark):
