@@ -101,10 +101,9 @@ def quality_score(col: Column) -> Column:
     return quality_score_of(col, tokens(col))
 
 
-def language_id(col: Column) -> Column:
-    """Marker-word-ratio language classifier: argmax over per-language
-    marker hit counts; 'und' (undetermined) when nothing hits."""
-    toks = F.transform(tokens(col), lambda t: F.lower(t))
+def language_id_of(toks: Column) -> Column:
+    """``language_id`` over an already-materialized token array."""
+    toks = F.transform(toks, lambda t: F.lower(t))
     scores = []
     for lang in sorted(LANG_MARKERS):
         markers = F.array(*[F.lit(w) for w in LANG_MARKERS[lang]])
@@ -119,6 +118,13 @@ def language_id(col: Column) -> Column:
     # via reverse iteration (first wins on >=).
     best = F.array_max(F.array(*scores))
     return F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit("und"))
+
+
+def language_id(col: Column) -> Column:
+    """Marker-word-ratio language classifier: argmax over per-language
+    marker hit counts; 'und' (undetermined) when nothing hits. Hot paths
+    should materialize the token array and call ``language_id_of``."""
+    return language_id_of(tokens(col))
 
 
 def fingerprint(col: Column) -> Column:

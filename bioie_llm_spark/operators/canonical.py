@@ -135,16 +135,19 @@ def connected_components(
     recompute them. Losing an executor that holds them fails the call; it
     never returns wrong labels. Re-run the operator from its inputs.
     """
+    # the input is read once: the node set and the edge set both come from
+    # this checkpoint, so an expensive edge plan (an all-pairs join) runs
+    # once per call
+    uv = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint()
+    # every endpoint, self-loop-only and NULL ones included
     nodes = (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
+        uv.select(F.col("u").alias("node"))
+        .unionByName(uv.select(F.col("v").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
     # canonical undirected pair set (a < b); self-loops contribute no edge
     e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
+        uv.filter(F.col("u") != F.col("v"))
         .select(F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b"))
         .distinct()
         .localCheckpoint()

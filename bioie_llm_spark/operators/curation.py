@@ -135,14 +135,22 @@ def contamination_check_bloom(
     screen's per-doc hit count, >= n_hit always) and ``bloom_ge_exact``
     (that invariant as a per-doc boolean).
     """
+    from pyspark.sql import Observation
+
     from .membership import bloom_build, bloom_parameters, bloom_probe
 
     # materialize the distinct benchmark gram set once (it is small — the
-    # broadcast side of the exact screen): the sizing count, the bloom
-    # build AND the exact screen's broadcast side all read it, which would
-    # otherwise re-run explode+distinct
-    bench_grams = _bench_grams(benchmark, n, bench_text_col).localCheckpoint()
-    n_bench = bench_grams.count()
+    # broadcast side of the exact screen): the bloom build AND the exact
+    # screen's broadcast side both read it, which would otherwise re-run
+    # explode+distinct. The sizing count is observed on the checkpoint's
+    # own job, not counted by another one.
+    sized = Observation()
+    bench_grams = (
+        _bench_grams(benchmark, n, bench_text_col)
+        .observe(sized, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
+    )
+    n_bench = sized.get["n"]
     m_bits, k = bloom_parameters(n_bench, fpp)
     bloom = bloom_build(bench_grams, "g", m_bits, k)
 
@@ -643,12 +651,14 @@ def save_ngram_lm(corpus: DataFrame, out_dir: str, text_col: str = "text") -> No
 
 def load_ngram_lm(spark, out_dir: str):
     """Load persisted LM count tables; pass the result as ``model=`` to
-    ``ngram_lm_score`` to skip the per-query training aggregates."""
+    ``ngram_lm_score`` to skip the per-query training aggregates. The
+    schemas are the ones ``train_ngram_lm`` writes, declared so the read
+    runs no Parquet schema-inference job per table."""
     import os
 
     return (
-        spark.read.parquet(os.path.join(out_dir, "uni")),
-        spark.read.parquet(os.path.join(out_dir, "bi")),
+        spark.read.schema("w string, c_w bigint").parquet(os.path.join(out_dir, "uni")),
+        spark.read.schema("w1 string, w2 string, c_b bigint").parquet(os.path.join(out_dir, "bi")),
     )
 
 

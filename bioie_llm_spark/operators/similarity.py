@@ -107,11 +107,24 @@ def cosine_near_dup_pairs(
     (same-bucket in any of n_tables hyperplane tables) then exact cosine —
     the 100 TB path; near-identical vectors agree on every hyperplane sign,
     so recall at high thresholds is ~1."""
-    c = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+    # each vector's norm once per row, not once per pair: the pair score
+    # is dot / (na * nb), the same operands in the same order as cosine()
+    c = corpus.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias("vec"),
+        l2_norm(F.col(vec_col)).alias("norm"),
+    )
+
+    def side(df: DataFrame, x: str, *keys: str) -> DataFrame:
+        return df.select(
+            *keys,
+            F.col("id").alias(f"id_{x}"),
+            F.col("vec").alias(f"v{x}"),
+            F.col("norm").alias(f"n{x}"),
+        )
+
     if exact:
-        a = c.select(F.col("id").alias("id_a"), F.col("vec").alias("va"))
-        b = c.select(F.col("id").alias("id_b"), F.col("vec").alias("vb"))
-        pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
+        pairs = side(c, "a").crossJoin(side(c, "b")).filter(F.col("id_a") < F.col("id_b"))
     else:
         tables = F.explode(
             F.array(
@@ -126,20 +139,21 @@ def cosine_near_dup_pairs(
                 ]
             )
         ).alias("tb")
-        bucketed = c.select("id", "vec", tables).select(
-            "id", "vec", F.col("tb.table").alias("table"), F.col("tb.bucket").alias("bucket")
+        bucketed = c.select("id", "vec", "norm", tables).select(
+            "id", "vec", "norm", F.col("tb.table").alias("table"), F.col("tb.bucket").alias("bucket")
         )
-        a = bucketed.select("table", "bucket", F.col("id").alias("id_a"), F.col("vec").alias("va"))
-        b = bucketed.select("table", "bucket", F.col("id").alias("id_b"), F.col("vec").alias("vb"))
         pairs = (
-            a.join(b, ["table", "bucket"])
+            side(bucketed, "a", "table", "bucket")
+            .join(side(bucketed, "b", "table", "bucket"), ["table", "bucket"])
             .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "va", "vb")
+            .select("id_a", "id_b", "va", "vb", "na", "nb")
             .distinct()
         )
     return (
         pairs.select(
-            "id_a", "id_b", cosine(F.col("va"), F.col("vb")).alias("cos")
+            "id_a",
+            "id_b",
+            (dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", F.round("cos", 4).alias("cosine_sim"))

@@ -2122,7 +2122,9 @@ def sim_cosine_topk(spark, sf_dir):
 def sim_near_dup_pairs(spark, sf_dir):
     from .operators.similarity import cosine_near_dup_pairs
 
-    emb = load(spark, sf_dir, "embeddings").withColumn(
+    # fan out: the all-pairs join keeps its streamed side's partitioning,
+    # one split of the single-row-group scan (see load_fanout)
+    emb = load_fanout(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double"))
     )
     return cosine_near_dup_pairs(emb, threshold=0.35, exact=True)
@@ -2153,7 +2155,9 @@ def _simlsh(spark, sf_dir, out):
 
     from .operators.similarity import cosine_near_dup_pairs, semantic_dedup
 
-    emb = load(spark, sf_dir, "embeddings").withColumn(
+    # fanned out, so the planted parquet has a file per core for the
+    # exact twin's all-pairs join to read in parallel
+    emb = load_fanout(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double"))
     )
     cosine_near_dup_pairs(
@@ -2282,28 +2286,36 @@ def sim_near_dup_lsh(spark, sf_dir):
     from .operators.similarity import cosine_near_dup_pairs, semantic_dedup
 
     root = _simlsh.materialize(spark, sf_dir)
-    emb = load(spark, sf_dir, "embeddings").withColumn(
+    emb = load_fanout(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double"))
     )
     lsh = spark.read.parquet(os.path.join(root, "lsh_pairs")).select(
         "id_a", "id_b", "cosine_sim"
     )
-    exact = cosine_near_dup_pairs(emb, threshold=0.35, exact=True).select(
-        "id_a", "id_b", "cosine_sim"
+    # one all-pairs join, one aggregate: the LSH pairs are distinct on
+    # (id_a, id_b), so the left join flags each exact pair at most once
+    high = F.col("cosine_sim") >= 0.45
+    counts = (
+        cosine_near_dup_pairs(emb, threshold=0.35, exact=True)
+        .join(
+            lsh.select("id_a", "id_b", F.lit(True).alias("hit")),
+            ["id_a", "id_b"],
+            "left",
+        )
+        .agg(
+            F.count("*").alias("n_exact"),
+            F.count("hit").alias("n_found"),
+            F.count_if(high).alias("n_exact_high"),
+            F.count_if(high & F.col("hit")).alias("n_found_high"),
+        )
     )
-    found = exact.join(lsh.select("id_a", "id_b"), ["id_a", "id_b"], "left_semi")
-    high = exact.filter(F.col("cosine_sim") >= 0.45)
-    high_found = high.join(lsh.select("id_a", "id_b"), ["id_a", "id_b"], "left_semi")
     high_recall = F.coalesce(F.try_divide("n_found_high", "n_exact_high"), F.lit(1.0))
     lsh_digest = (
         lsh.agg(
             F.count("*").alias("n_candidates"),
             F.bit_xor(F.xxhash64("id_a", "id_b", "cosine_sim")).alias("lsh_hash"),
         )
-        .crossJoin(exact.agg(F.count("*").alias("n_exact")))
-        .crossJoin(found.agg(F.count("*").alias("n_found")))
-        .crossJoin(high.agg(F.count("*").alias("n_exact_high")))
-        .crossJoin(high_found.agg(F.count("*").alias("n_found_high")))
+        .crossJoin(counts)
         .select(
             "n_candidates", "n_exact", "n_found",
             F.round(
@@ -2758,11 +2770,11 @@ def txt_profile(spark, sf_dir):
         bpe_ish_token_count,
         duplicate_line_stats,
         fingerprint,
-        language_id,
-        quality_score,
+        language_id_of,
+        quality_score_of,
         repetition_ratio,
         scrub_pii,
-        token_count,
+        tokens,
     )
 
     d = load(spark, sf_dir, "documents")
@@ -2784,7 +2796,19 @@ def txt_profile(spark, sf_dir):
             ),
         ),
     ).otherwise(F.col("text"))
-    scrubbed = scrub_pii(injected)
+    # the token array, the scrubbed text and the line stats are each read
+    # several times below: staged in their own projection, every read is
+    # an attribute read, not another copy of a lambda-bearing subtree
+    # (Catalyst does not share those between references; see
+    # functions/text.py quality_score_of)
+    staged = d.select(
+        "doc_id",
+        "text",
+        tokens(F.col("text")).alias("__toks"),
+        scrub_pii(injected).alias("__scrubbed"),
+        dls.alias("__dls"),
+    )
+    scrubbed = F.col("__scrubbed")
 
     def mask_count(token: str):
         return (
@@ -2792,20 +2816,20 @@ def txt_profile(spark, sf_dir):
             - F.length(F.replace(scrubbed, F.lit(token), F.lit("")))
         ) / F.lit(len(token))
 
-    profile = d.select(
+    profile = staged.select(
         "doc_id",
-        token_count(F.col("text")).alias("n_tokens"),
+        F.size("__toks").alias("n_tokens"),
         bpe_ish_token_count(F.col("text")).alias("n_bpe"),
         fingerprint(F.col("text")).alias("fp"),
-        language_id(F.col("text")).alias("lang_pred"),
-        quality_score(F.col("text")).alias("quality"),
+        language_id_of(F.col("__toks")).alias("lang_pred"),
+        quality_score_of(F.col("text"), F.col("__toks")).alias("quality"),
         repetition_ratio(F.col("text")).alias("repetition"),
         (mask_count("<EMAIL>") + mask_count("<URL>") + mask_count("<IP>"))
         .cast("int")
         .alias("n_masks"),
-        dls.getField("n_lines").alias("n_lines"),
-        dls.getField("dup_line_frac").alias("dup_line_frac"),
-        dls.getField("dup_char_frac").alias("dup_char_frac"),
+        F.col("__dls.n_lines").alias("n_lines"),
+        F.col("__dls.dup_line_frac").alias("dup_line_frac"),
+        F.col("__dls.dup_char_frac").alias("dup_char_frac"),
     )
     # CCNet-style LM-perplexity signal under the same driver row — scored
     # against the PERSISTED count tables (save_ngram_lm under the shared
@@ -3539,29 +3563,36 @@ def cur_contamination(spark, sf_dir):
     # graded through two invariants the filter guarantees: per-doc
     # bloom_ge_exact (zero false negatives — a Bloom can only over-count)
     # and the corpus-level fp_bound_ok digest (observed false-positive
-    # hits within 3x the nominal 1% rate, broadcast 1-row crossJoin).
+    # hits within 3x the nominal 1% rate, a literal on every row).
+    from pyspark.sql import Observation
+
     from .operators.curation import contamination_check_bloom
 
     # fan out: the shingle scan + the Bloom probe's k bit tests per gram
     # otherwise run on the single-row-group scan's 1-2 tasks (see load_fanout)
     docs = load_fanout(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 17 == 0).select("text")
-    # localCheckpoint: the fp-bound digest below re-reads the screen, and
-    # without the checkpoint the whole gram-index+probe pipeline is
-    # evaluated once per consumer (stage profile: two ~50 executor-second
-    # stages for one 50k-row result; measured 6.8s -> 4.5s checkpointed)
-    screened = contamination_check_bloom(
-        docs, bench, n=3, threshold=0.5, fpp=0.01
-    ).localCheckpoint()
-    fp_digest = screened.agg(
-        (
-            (F.sum("n_hit_bloom") - F.sum("n_hit"))
-            <= F.greatest(
-                0.03 * (F.sum("n_grams") - F.sum("n_hit")), F.lit(8.0)
-            )
-        ).alias("fp_bound_ok")
+    # localCheckpoint: the gram-index+probe pipeline runs once, in the
+    # checkpoint's job, which also observes the fp-bound digest's three
+    # corpus sums; each further consumer of an unchecked screen would
+    # re-run it (measured 6.8s -> 4.5s checkpointed)
+    sums = Observation()
+    screened = (
+        contamination_check_bloom(docs, bench, n=3, threshold=0.5, fpp=0.01)
+        .observe(
+            sums,
+            F.sum("n_hit_bloom").alias("bloom"),
+            F.sum("n_hit").alias("hit"),
+            F.sum("n_grams").alias("grams"),
+        )
+        .localCheckpoint()
     )
-    return screened.drop("n_hit_bloom").crossJoin(F.broadcast(fp_digest))
+    s = sums.get
+    # NULL sums (no docs) leave no row to carry the flag
+    ok = None
+    if s["hit"] is not None:
+        ok = s["bloom"] - s["hit"] <= max(0.03 * (s["grams"] - s["hit"]), 8.0)
+    return screened.drop("n_hit_bloom").withColumn("fp_bound_ok", F.lit(ok).cast("boolean"))
 
 
 _PACK_MAX_TOKENS = 200

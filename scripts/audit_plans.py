@@ -58,7 +58,6 @@ CARTESIAN_OK = {
     # (adjacency.negative_pairs) is hash-drawn, never cartesian
     "j3_j4_anti_negatives",
     "txt_tfidf_topterms",  # tf-df rows x broadcast 1-row corpus-size digest (r7)
-    "cur_contamination",   # screen rows x broadcast 1-row bloom fp-bound digest (r7)
 }
 
 

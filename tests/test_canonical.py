@@ -45,6 +45,25 @@ def test_connected_components_chain(spark):
     assert comp == {"a": "a", "b": "a", "c": "a", "d": "d", "e": "d"}
 
 
+def test_connected_components_reads_edges_once(spark):
+    """The edge input is evaluated once per call — the node set and the
+    edge set come from one checkpoint — so an expensive edge plan (an
+    all-pairs join) is not re-run per use. Self-loop-only nodes stay."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def count_read(x):
+        acc.add(1)
+        return x
+
+    read = F.udf(count_read, "string")
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("d", "e"), ("f", "f")], "src string, dst string"
+    ).select(read("src").alias("src"), "dst")
+    comp = {r["node"]: r["component"] for r in connected_components(edges).collect()}
+    assert comp == {"a": "a", "b": "a", "c": "a", "d": "d", "e": "d", "f": "f"}
+    assert acc.value == 4
+
+
 def test_connected_components_long_chain(spark):
     """Propagation must cross a 9-hop chain (iteration count exercised)."""
     edges = spark.createDataFrame(

@@ -603,6 +603,28 @@ def test_ngram_lm_pretrained_matches_selftrain(spark, tmp_path):
     assert len(pre) == docs.count()
 
 
+def test_load_ngram_lm_runs_no_job(spark, tmp_path):
+    """load_ngram_lm declares the count tables' schemas, so loading them
+    runs no Parquet schema-inference job; the declared schemas are the
+    ones save_ngram_lm writes."""
+    import uuid
+
+    from bioie_llm_spark.operators.curation import load_ngram_lm, save_ngram_lm
+
+    out_dir = str(tmp_path / "lm_stage")
+    save_ngram_lm(_docs(spark), out_dir)
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        uni, bi = load_ngram_lm(spark, out_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert uni.schema == spark.read.parquet(f"{out_dir}/uni").schema
+    assert bi.schema == spark.read.parquet(f"{out_dir}/bi").schema
+
+
 def test_lm_artifact_keyed_per_document_table(spark, tmp_path):
     """Two Spark-written document tables in two directories, with the same
     file count and the same directory mtime, each get their own persisted

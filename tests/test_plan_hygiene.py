@@ -25,6 +25,37 @@ def test_no_undocumented_cartesian(spark):
     assert not bad, f"undocumented cartesian/nested-loop joins: {bad}"
 
 
+SF_TINY = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
+
+
+def test_sim_near_dup_lsh_plans_one_all_pairs_join(spark):
+    """sim_near_dup_lsh takes its exact twin's four counts from one
+    aggregate, so its plan holds one all-pairs cosine join (the SemDeDup
+    twin's join is checkpointed before planning)."""
+    plan = REGISTRY["sim_near_dup_lsh"][0](spark, SF_TINY)._jdf.queryExecution().executedPlan()
+    joins = [
+        line
+        for line in plan.toString().splitlines()
+        if "BroadcastNestedLoopJoin" in line and "zip_with(va" in line
+    ]
+    assert len(joins) == 1, joins
+
+
+def test_sim_near_dup_pairs_spans_every_core(spark):
+    """The all-pairs join keeps its streamed side's partitioning, so it
+    runs on every core only if the embeddings scan is fanned out first."""
+    pairs = REGISTRY["sim_near_dup_pairs"][0](spark, SF_TINY)
+    assert pairs.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+
+
+def test_txt_profile_plans_one_pii_scrub(spark):
+    """txt_profile stages the scrubbed text in its own projection, so the
+    three-regex PII scrub its six mask-count terms read appears once in
+    the optimized plan."""
+    plan = REGISTRY["txt_profile"][0](spark, SF_TINY)._jdf.queryExecution().optimizedPlan()
+    assert plan.toString().count("https?://") == 1
+
+
 def test_extraction_plan_shape(spark):
     """MapInPandas directly over the scan (no exchange before the UDF);
     both gazetteer joins broadcast; zero sort-merge joins anywhere."""
