@@ -355,9 +355,7 @@ def mix_sources(
     """Draw the mixture: within each source, rank docs by the portable
     md5 hash order and keep the first ``target`` rows. Deterministic at
     any parallelism (sampling-module rationale); one window shuffle keyed
-    on source — for a corpus whose largest source skews that shuffle, use
-    ``mix_sources_threshold`` (same hash key as a [0,1) bucket, pure
-    filter, zero shuffle), trading exact counts for expected ones.
+    on source, so each source's count is its exact quota.
 
     Returns the sampled rows as (id, source, rn).
     """
@@ -369,36 +367,6 @@ def mix_sources(
         docs.select(id_col, source_col)
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= quota[F.col(source_col)])
-    )
-
-
-def mix_sources_threshold(
-    docs: DataFrame,
-    targets: dict[str, tuple[int, int]],
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    seed: int = SEED,
-) -> DataFrame:
-    """The zero-shuffle mixing draw: keep a row iff the first 8 hex chars
-    of its portable md5 order key fall below quota/count — a deterministic
-    Bernoulli(quota_s/count_s) per source, so per-source counts are
-    EXPECTED (binomial, ±O(sqrt(n))) rather than exact, and no window
-    shuffle on the source key is paid. The right trade at 100 TB where the
-    largest source would skew mix_sources' window; the same hash key means
-    a doc selected here is (approximately) the low-rank doc the exact draw
-    selects. Pure filter: parallelism from input splits."""
-    frac = F.create_map(
-        *[
-            x
-            for s, (c, t) in sorted(targets.items())
-            for x in (F.lit(s), F.lit(t / c if c else 0.0))
-        ]
-    )
-    bucket = F.conv(F.substring(hash_order_key([id_col], seed), 1, 8), 16, 10).cast(
-        "double"
-    ) / F.lit(float(16**8))
-    return docs.select(id_col, source_col).filter(
-        bucket < frac[F.col(source_col)]
     )
 
 

@@ -106,11 +106,20 @@ def shingle_frame(
 def minhash_signature(shingles: Column, n_hashes: int = 32) -> Column:
     """MinHash signature: for each of n_hashes seeded hash functions, the
     min xxhash64 over the shingle set. array<long> of length n_hashes;
-    empty shingle sets get a sentinel signature."""
+    empty shingle sets get a sentinel signature.
+
+    The seed is bound by a closure, not a default argument: ``F.transform``
+    reads a two-parameter lambda as (element, index), which would seed
+    every hash function with the shingle's position and make all n_hashes
+    functions one."""
+
+    def seeded(i: int):
+        return lambda s: F.xxhash64(s, F.lit(i))
+
     return F.array(
         *[
             F.coalesce(
-                F.array_min(F.transform(shingles, lambda s, i=i: F.xxhash64(s, F.lit(i)))),
+                F.array_min(F.transform(shingles, seeded(i))),
                 F.lit(-(2**62) + i),
             )
             for i in range(n_hashes)
@@ -240,13 +249,13 @@ def minhash_lsh_candidates(
     )
     # upper-triangle pair expansion (``_list_pairs``): est is evaluated once
     # per unordered pair, and it is symmetric (fraction of agreeing
-    # positions), so the least/greatest orientation produces bit-identical
-    # rows to the old id_a < id_b filter.
+    # positions), so the least/greatest orientation is exact; id_a < id_b
+    # drops the self-pair a repeated id would make.
     pairs = _list_pairs(grouped).select(
         F.least("x.id", "y.id").alias("id_a"),
         F.greatest("x.id", "y.id").alias("id_b"),
         est(F.col("x.sig"), F.col("y.sig")).alias("est_jaccard"),
-    )
+    ).filter(F.col("id_a") < F.col("id_b"))
     return pairs.distinct()
 
 
@@ -319,13 +328,14 @@ def ngram_jaccard_pairs(
         )
         # Upper-triangle pair expansion (``_list_pairs``). The pair key
         # carries na+nb as one int (the jaccard denominator needs only the
-        # sum); least/greatest normalizes the orientation — posting-list
-        # ids are unique per gram, so each unordered pair is emitted once.
+        # sum); least/greatest normalizes the orientation, and id_a < id_b
+        # drops the self-pair a repeated id would make, so the counts match
+        # the join formulation for any input.
         pairs = _list_pairs(members).select(
             F.least("x.id", "y.id").alias("id_a"),
             F.greatest("x.id", "y.id").alias("id_b"),
             (F.col("x.n_sh") + F.col("y.n_sh")).alias("__nanb"),
-        )
+        ).filter(F.col("id_a") < F.col("id_b"))
         shared = (
             pairs.groupBy("id_a", "id_b", "__nanb")
             .agg(F.count("*").alias("shared"))
@@ -423,73 +433,6 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits:
 def hamming_distance(a: Column, b: Column) -> Column:
     """Popcount of XOR via bit_count (JVM intrinsic)."""
     return F.bit_count(a.bitwiseXOR(b))
-
-
-def ngram_jaccard_pairs_prefix(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """EXACT word-n-gram Jaccard join via prefix filtering (Bayardo et
-    al., WWW'07 "Scaling Up All Pairs Similarity Search" / PPJoin family —
-    public algorithm): no max_df recall caveat.
-
-    Each doc indexes only its PREFIX — the |G| - ceil(t*|G|) + 1 rarest
-    shingles in global-document-frequency order; two docs with Jaccard >=
-    t must share a prefix shingle, so the candidate join on prefix grams
-    misses nothing. Boilerplate shingles are the most frequent, so they
-    sort LAST and almost never enter a prefix — the hot-key blow-up the
-    max_df cap guards against is pruned here exactly instead of lossily.
-    Candidates then verify against the full shingle sets (array_intersect)
-    with the standard length filter (t*|A| <= |B|).
-
-    Trade-off vs ngram_jaccard_pairs: exact at any threshold, but ~5
-    shuffles (df count, df join, per-doc prefix window, candidate join,
-    two verify joins) against the capped path's one — the right choice
-    when missed boilerplate-only pairs are unacceptable; the capped path
-    when they are (its drop is audited via ngram_hot_grams)."""
-    grams = shingle_frame(df, id_col, text_col, shingle_n, id_alias="id").withColumn(
-        "n_sh", F.size("sh")
-    )
-    ex = grams.select("id", "n_sh", F.explode("sh").alias("g"))
-    dfreq = ex.groupBy("g").agg(F.count("*").alias("df"))
-    w = Window.partitionBy("id").orderBy("df", "g")
-    prefix_len = F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")).cast("int") + 1
-    pref = (
-        ex.join(dfreq, "g")
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= prefix_len)
-        .select("id", "n_sh", "g")
-    )
-    cand = (
-        pref.select(F.col("id").alias("id_a"), F.col("n_sh").alias("na"), "g")
-        .join(pref.select(F.col("id").alias("id_b"), F.col("n_sh").alias("nb"), "g"), "g")
-        .filter(F.col("id_a") < F.col("id_b"))
-        # length filter: |B| in [t*|A|, |A|/t] is necessary for J >= t
-        .filter(
-            (F.col("nb") >= F.lit(threshold) * F.col("na"))
-            & (F.col("na") >= F.lit(threshold) * F.col("nb"))
-        )
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    ga = grams.select(F.col("id").alias("id_a"), F.col("sh").alias("sha"))
-    gb = grams.select(F.col("id").alias("id_b"), F.col("sh").alias("shb"))
-    shared = F.size(F.array_intersect("sha", "shb"))
-    return (
-        cand.join(ga, "id_a")
-        .join(gb, "id_b")
-        .withColumn("__shared", shared)
-        .withColumn(
-            "jaccard",
-            F.col("__shared")
-            / (F.size("sha") + F.size("shb") - F.col("__shared")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
-    )
 
 
 def substring_windows(

@@ -4,8 +4,8 @@ the sklearn `precision_recall_fscore_support` calls of the reference
 
 Each aggregate references its input frame ONCE. The input of a scored
 task is the tail of a long lazy chain (seeded sample -> prompt build ->
-`mapInPandas` generate -> `pandas_udf` matcher); every extra reference
-is a separate branch that re-runs that whole chain, Python workers
+`mapInPandas` generate -> mention matcher); every extra reference
+is a separate branch that re-runs that whole chain, Python worker
 included, because branches ending in different aggregates share no
 exchange. So `classification_metrics` folds its input into a (pred,
 true) count table first and derives every number from that one table —

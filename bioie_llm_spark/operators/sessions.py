@@ -5,10 +5,8 @@
     then one groupBy (user, session_id) for session facts.
 
 Two window passes over the same (user_id, ts) ordering — Spark reuses the
-sort across them — plus one hash agg. The streaming twin (true infinite
-sessions) is `streaming.stateful_user_totals`'s applyInPandasWithState
-shape; this is the batch form a training-data pipeline runs over event
-logs.
+sort across them — plus one hash agg. This is the batch form a
+training-data pipeline runs over event logs.
 """
 
 from __future__ import annotations

@@ -196,8 +196,7 @@ def resume_by_key(
 
     - ``compute(todo_inputs) -> DataFrame`` runs the stage on the pending
       subset only; an interrupted run resumes at file/key granularity, not
-      stage granularity (the batch twin of the streaming source's
-      exactly-once file tracking).
+      stage granularity.
     - completed keys live in ``{root}/{stage}__keys/snapshot=...`` —
       appended AFTER the output append commits, so a crash between the two
       reprocesses a key (at-least-once): the replayed key's rows land in

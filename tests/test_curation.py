@@ -363,38 +363,6 @@ def test_paragraph_dedup_matches_python_twin(spark):
             assert got == want, (kf, texts, got, want)
 
 
-def test_mix_sources_threshold_zero_shuffle(spark):
-    """The scale-path draw: expected per-source counts within binomial
-    tolerance of the exact quotas, deterministic at any parallelism, and
-    a ZERO-exchange plan (pure filter)."""
-    import math
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
-    from audit_plans import plan_stats
-
-    from bioie_llm_spark.operators.curation import (
-        mix_sources_threshold,
-        source_mix_targets,
-    )
-
-    docs = _docs(spark)
-    targets = source_mix_targets(docs, total=200, temperature=1.0)
-    out = mix_sources_threshold(docs, targets)
-    assert plan_stats(out)["exchanges"] == 0
-    got = {
-        r["source"]: r["n"]
-        for r in out.groupBy("source").agg(F.count("*").alias("n")).collect()
-    }
-    for s, (c, t) in targets.items():
-        n = got.get(s, 0)
-        tol = 4 * math.sqrt(max(t, 1)) + 1  # binomial +-4 sigma
-        assert abs(n - t) <= tol, (s, n, t, tol)
-    again = mix_sources_threshold(docs.repartition(11), targets)
-    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, again.collect()))
-
-
 def test_review_fix_edge_cases(spark):
     """Round-3 review fixes: regex-metachar paragraph separator, NULL/zero
     size_col quotas, all-oversize pack_stats."""

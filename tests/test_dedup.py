@@ -6,7 +6,9 @@ from bioie_llm_spark.operators.dedup import (
     exact_dedup,
     hamming_distance,
     minhash_lsh_candidates,
+    minhash_signature,
     ngram_jaccard_pairs,
+    shingle_frame,
     simhash,
     word_shingles,
 )
@@ -52,10 +54,15 @@ def test_minhash_lsh_finds_near_dups(spark):
     got = {(r["id_a"], r["id_b"]): r["est_jaccard"] for r in cands.collect()}
     assert got.get((1, 2)) == 1.0
     assert got.get((1, 3)) == 1.0
-    # near-dup pair should surface with high estimated jaccard
-    assert (1, 4) in got
+    # near-dup pair should surface, with an estimate below an exact dup's
+    assert (1, 4) in got and got[(1, 4)] < 1.0
     # unrelated docs must not pair
     assert (1, 5) not in got and (1, 6) not in got
+    # the n_hashes hash functions differ: a signature is not one value
+    # repeated (a shared seed makes every estimate 1.0)
+    sh = shingle_frame(_docs(spark), id_alias="id")
+    sigs = sh.select(minhash_signature(F.col("sh")).alias("sig")).collect()
+    assert all(len(set(r["sig"])) > 1 for r in sigs)
 
 
 def test_simhash_near_vs_far(spark):
@@ -90,14 +97,16 @@ def test_grouped_equals_join_formulation(spark):
     exactly the join-formulation (max_df=None) pair set — the two physical
     shapes share one logical spec. Both inverted-index joins with a join
     twin are checked: document shingles and entity-name char-n-grams (one
-    name repeated, so a posting list holds it twice)."""
+    document row and one name repeated, so a posting list holds the id
+    twice and must not pair it with itself)."""
     from bioie_llm_spark.operators.canonical import jaccard_pairs
 
     rows = [
         (i, " ".join(f"w{(i * 7 + j * 13) % 23}" for j in range(12)))
         for i in range(40)
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
+    # doc 20's text has no identical twin, so no pair's denominator is 0
+    df = spark.createDataFrame(rows + [rows[20]], "doc_id long, text string")
     names = spark.createDataFrame(
         [(f"P{(i * 5) % 13}X{(i * 3) % 7}Q{i % 4}",) for i in range(40)] + [("P0X0Q0",)],
         "name string",
@@ -136,55 +145,26 @@ def test_minhash_deterministic(spark):
 
 
 def test_fuzzy_dedup_clusters(spark):
-    """End-to-end fuzzy dedup: docs 1/2/3 are identical after normalization,
-    doc 4 is a one-word near-dup — all four must collapse to keeper 1 via
-    the transitive similarity graph; unrelated docs keep themselves."""
+    """End-to-end fuzzy dedup: docs 1/2/3 are identical after normalization
+    and collapse to keeper 1. Doc 4 changes one word of a 9-word text, so
+    it shares 4 of 10 trigrams with doc 1 (Jaccard 0.4, below the 0.5
+    threshold) and keeps itself. Docs 7/8 differ in the last word of a
+    30-word text (Jaccard 27/29) and share keeper 7; unrelated docs keep
+    themselves."""
     from bioie_llm_spark.operators.dedup import fuzzy_dedup
 
-    out = {r["id"]: r for r in fuzzy_dedup(_docs(spark), est_threshold=0.5).collect()}
+    long = " ".join(f"word{j}" for j in range(29))
+    near = spark.createDataFrame(
+        [(7, long + " ending"), (8, long + " finish")], "doc_id long, text string"
+    )
+    docs = _docs(spark).unionByName(near)
+    out = {r["id"]: r for r in fuzzy_dedup(docs, est_threshold=0.5).collect()}
     assert out[1]["keeper_id"] == out[2]["keeper_id"] == out[3]["keeper_id"] == 1
-    assert out[4]["keeper_id"] == 1  # near-dup joins the cluster
+    assert out[4]["keeper_id"] == 4  # Jaccard 0.4 < 0.5
+    assert out[7]["keeper_id"] == out[8]["keeper_id"] == 7
     assert out[5]["keeper_id"] == 5 and out[6]["keeper_id"] == 6
     keepers = [r for r in out.values() if r["is_keeper"]]
-    assert {r["id"] for r in keepers} == {1, 5, 6}
-
-
-def test_ngram_jaccard_prefix_exact_equivalence(spark):
-    """Prefix-filtered join (Bayardo/PPJoin) must produce EXACTLY the
-    uncapped inverted-index join's pairs — it is a pruning, not an
-    approximation — including pairs whose overlap is boilerplate-only
-    (which the max_df-capped path documents as missed)."""
-    from pyspark.sql import functions as F
-
-    from bioie_llm_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        ngram_jaccard_pairs_prefix,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    # inject a boilerplate-heavy near-dup pair: identical long texts whose
-    # shingles are ubiquitous (appended to 30 other docs too)
-    boiler = "generated file do not edit all rights reserved " * 3
-    extra = spark.createDataFrame(
-        [(9001, boiler), (9002, boiler + "tail marker")]
-        + [(9100 + i, f"doc body {i} " + boiler) for i in range(30)],
-        "doc_id bigint, text string",
-    )
-    corpus = docs.select("doc_id", "text").unionByName(extra)
-    exact = ngram_jaccard_pairs(corpus, threshold=0.5, max_df=None)
-    pref = ngram_jaccard_pairs_prefix(corpus, threshold=0.5)
-    e = {(r["id_a"], r["id_b"]): r["jaccard"] for r in exact.collect()}
-    p = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pref.collect()}
-    assert p == e and len(e) > 0
-    # the planted boilerplate pair is found by the exact paths but dropped
-    # by the capped path (its overlap is exclusively hot shingles)
-    assert (9001, 9002) in p
-    capped = ngram_jaccard_pairs(corpus, threshold=0.5, max_df=25)
-    capped_pairs = {(r["id_a"], r["id_b"]) for r in capped.collect()}
-    assert (9001, 9002) not in capped_pairs
-    # partition invariance
-    again = ngram_jaccard_pairs_prefix(corpus.repartition(7), threshold=0.5)
-    assert {(r["id_a"], r["id_b"]): r["jaccard"] for r in again.collect()} == p
+    assert {r["id"] for r in keepers} == {1, 4, 5, 6, 7}
 
 
 # --- ExactSubstr window dedup (Lee et al. 2022) ---------------------------
@@ -385,13 +365,17 @@ def test_minhash_upper_triangle_pair_invariants(spark):
     the invariants the old nested transform+filter form guaranteed."""
     from bioie_llm_spark.operators.dedup import minhash_lsh_candidates
 
-    rows = minhash_lsh_candidates(_docs(spark)).collect()
-    seen = set()
-    for r in rows:
-        assert r["id_a"] < r["id_b"]
-        assert (r["id_a"], r["id_b"]) not in seen  # distinct() collapsed bands
-        seen.add((r["id_a"], r["id_b"]))
-        assert 0.0 <= r["est_jaccard"] <= 1.0
+    docs = _docs(spark)
+    # a repeated id shares every bucket with itself: no self-pair
+    repeated = docs.unionByName(docs.filter(F.col("doc_id") == 1))
+    for frame in (repeated, docs):
+        rows = minhash_lsh_candidates(frame).collect()
+        seen = set()
+        for r in rows:
+            assert r["id_a"] < r["id_b"]
+            assert (r["id_a"], r["id_b"]) not in seen  # distinct() collapsed bands
+            seen.add((r["id_a"], r["id_b"]))
+            assert 0.0 <= r["est_jaccard"] <= 1.0
     # the exact-duplicate docs (1,2,3 normalize identically) must pair at 1.0
     est = {(r["id_a"], r["id_b"]): r["est_jaccard"] for r in rows}
     assert est.get((1, 2)) == 1.0 and est.get((1, 3)) == 1.0

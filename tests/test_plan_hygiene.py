@@ -158,22 +158,41 @@ def test_contamination_bloom_starts_no_python(spark):
 
 
 def test_catalyst_modules_import_no_numpy_or_pandas():
-    """membership (Bloom), cleaning (matchers) and curation (packing) are
-    pure Catalyst; an import of numpy or pandas there would bring the
-    Python worker stack back. Read from the source, so another module's
-    imports cannot mask it."""
+    """The mock-LLM generate in extraction.py is the engine's one Python
+    worker (the black-box model contract). Every other package module is
+    pure Catalyst: it imports neither numpy nor pandas and names no
+    Python-worker operator (mapInPandas, applyInPandas[WithState],
+    pandas_udf, udf). Read from the source, so another module's imports
+    cannot mask it."""
     import ast
 
     import bioie_llm_spark
 
+    workers = {"mapInPandas", "applyInPandas", "applyInPandasWithState", "pandas_udf", "udf"}
     root = os.path.dirname(bioie_llm_spark.__file__)
-    for rel in ("operators/membership.py", "functions/cleaning.py", "operators/curation.py"):
+    rels = sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, files in os.walk(root)
+        for f in files
+        if f.endswith(".py")
+    )
+    assert "extraction.py" in rels and len(rels) > 10
+    for rel in rels:
+        if rel == "extraction.py":
+            continue
         with open(os.path.join(root, rel)) as f:
             tree = ast.parse(f.read())
-        imported = set()
+        imported, named = set(), set()
         for node in ast.walk(tree):
             if isinstance(node, ast.Import):
                 imported |= {a.name.split(".")[0] for a in node.names}
-            elif isinstance(node, ast.ImportFrom) and node.module:
-                imported.add(node.module.split(".")[0])
+            elif isinstance(node, ast.ImportFrom):
+                if node.module:
+                    imported.add(node.module.split(".")[0])
+                named |= {a.name for a in node.names}
+            elif isinstance(node, ast.Attribute):
+                named.add(node.attr)
+            elif isinstance(node, ast.Name):
+                named.add(node.id)
         assert not imported & {"numpy", "pandas"}, (rel, imported)
+        assert not named & workers, (rel, named & workers)

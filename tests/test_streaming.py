@@ -1,66 +1,12 @@
-"""Structured Streaming: incremental extraction (exactly-once per file via
-stream checkpoint) and watermarked window aggregation."""
+"""Structured Streaming: watermarked window aggregation and exact dedup
+with cross-drain state, each against its batch twin."""
 
 from pyspark.sql import functions as F
 
-from bioie_llm_spark.datagen.corpus import build_corpus, build_gazetteer
 from bioie_llm_spark.streaming.incremental import (
     run_windowed_events_stream,
-    stateful_user_totals,
-    stream_extract_triples,
     windowed_event_counts,
 )
-
-
-def test_stateful_user_totals(spark, tmp_path):
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    events_dir = str(tmp_path / "sevents")
-    events.write.mode("overwrite").parquet(events_dir)
-    got = stateful_user_totals(spark, events_dir, str(tmp_path / "sckpt"))
-    expect = events.groupBy("user_id").agg(
-        F.count("*").alias("n_events"),
-        F.round(F.sum("value"), 4).alias("total_value"),
-    )
-    diff = got.join(
-        expect.withColumnRenamed("n_events", "ne").withColumnRenamed("total_value", "tv"),
-        "user_id",
-    ).filter((F.col("n_events") != F.col("ne")) | (F.abs(F.col("total_value") - F.col("tv")) > 1e-6))
-    assert got.count() == expect.count()
-    assert diff.count() == 0
-
-
-def test_incremental_extraction_resume(spark, tiny_spec, tmp_path):
-    corpus_dir = str(tmp_path / "corpus")
-    out_dir = str(tmp_path / "triples")
-    ckpt = str(tmp_path / "ckpt")
-    gaz = build_gazetteer(spark, tiny_spec)
-
-    corpus = build_corpus(spark, tiny_spec)
-    first, second = corpus.filter(F.col("path") < "src/file_3").cache(), corpus.filter(
-        F.col("path") >= "src/file_3"
-    ).cache()
-
-    # snapshot 1 arrives
-    first.write.mode("append").parquet(corpus_dir)
-    stream_extract_triples(spark, corpus_dir, gaz, out_dir, ckpt)
-    n1 = spark.read.parquet(out_dir).count()
-    assert n1 > 0
-
-    # re-run with NO new data: checkpoint must prevent reprocessing
-    stream_extract_triples(spark, corpus_dir, gaz, out_dir, ckpt)
-    assert spark.read.parquet(out_dir).count() == n1
-
-    # snapshot 2 arrives: only the delta is processed (append grows)
-    second.write.mode("append").parquet(corpus_dir)
-    stream_extract_triples(spark, corpus_dir, gaz, out_dir, ckpt)
-    n2 = spark.read.parquet(out_dir).count()
-    assert n2 > n1
-
-    # incremental total == one-shot batch total over the same corpus
-    from bioie_llm_spark.extraction import extract_triples, link_entities
-
-    batch = link_entities(extract_triples(spark.read.parquet(corpus_dir)), gaz)
-    assert n2 == batch.count()
 
 
 def test_windowed_counts_stream_matches_batch(spark, tmp_path):
@@ -109,86 +55,3 @@ def test_stream_dedup_docs(spark, tmp_path):
     assert out.count() == 3
     keys = [r["content_key"] for r in out.select("content_key").collect()]
     assert len(set(keys)) == 3  # no duplicate content ever emitted
-
-
-def test_stream_near_dup_matches_batch_twin(spark, tmp_path):
-    """Streaming MinHash-LSH near-dup (late r7): verdicts equal a python
-    twin computed from the SAME Spark-expression signatures, and a
-    two-batch drain (state carried across micro-batches) equals the
-    single-batch drain."""
-    from bioie_llm_spark.operators.dedup import _minhash_banded
-    from bioie_llm_spark.streaming.incremental import stream_near_dup_docs
-
-    base = "the quick brown fox jumps over the lazy dog and runs far away"
-    docs = [
-        (0, base),
-        (1, base + " tail"),                     # near-dup of 0
-        (2, "completely different text about spark catalyst optimizer"),
-        (3, base),                               # exact dup of 0
-        (4, "completely different text about spark catalyst plans"),  # near 2
-        (5, "unrelated third topic entirely separate words here now"),
-    ]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    n_hashes, bands, threshold = 32, 8, 0.5
-
-    # python twin from the same expression-computed signatures/buckets
-    banded = _minhash_banded(df, "doc_id", "text", n_hashes, bands).collect()
-    sigs = {r["id"]: list(r["sig"]) for r in banded}
-    buckets: dict[tuple, list[int]] = {}
-    for r in banded:
-        buckets.setdefault((r["band"], r["bucket"]), []).append(r["id"])
-    want = {}
-    for did in sorted(sigs):
-        best = None
-        for (b, bk), members in buckets.items():
-            if did not in members:
-                continue
-            for pid in members:
-                if pid >= did:
-                    continue
-                est = sum(
-                    a == b2 for a, b2 in zip(sigs[did], sigs[pid])
-                ) / n_hashes
-                if est >= threshold and (best is None or (est, -pid) > best):
-                    best = (est, -pid)
-        want[did] = None if best is None else (-best[1], round(best[0], 4))
-
-    def run(splits, tag):
-        d = str(tmp_path / f"docs_{tag}")
-        for part in splits:
-            spark.createDataFrame(part, ["doc_id", "text"]).coalesce(1).write.mode(
-                "append"
-            ).parquet(d)
-        got_df = stream_near_dup_docs(
-            spark, d, str(tmp_path / f"ck_{tag}"),
-            n_hashes=n_hashes, bands=bands, threshold=threshold,
-        )
-        return {
-            r["doc_id"]: (None if r["dup_of"] is None else (r["dup_of"], r["est_jaccard"]))
-            for r in got_df.collect()
-        }
-
-    got_single = run([docs], "single")
-    assert got_single == want
-    # two files, AvailableNow with default trigger drains them together;
-    # restartable state is what matters: run a SECOND stream over a dir
-    # that grows between drains
-    d = str(tmp_path / "docs_grow")
-    ck = str(tmp_path / "ck_grow")
-    spark.createDataFrame(docs[:3], ["doc_id", "text"]).coalesce(1).write.mode(
-        "append"
-    ).parquet(d)
-    first = stream_near_dup_docs(
-        spark, d, ck, n_hashes=n_hashes, bands=bands, threshold=threshold
-    ).collect()
-    spark.createDataFrame(docs[3:], ["doc_id", "text"]).coalesce(1).write.mode(
-        "append"
-    ).parquet(d)
-    second = stream_near_dup_docs(
-        spark, d, ck, n_hashes=n_hashes, bands=bands, threshold=threshold
-    )
-    got_grow = {
-        r["doc_id"]: (None if r["dup_of"] is None else (r["dup_of"], r["est_jaccard"]))
-        for r in second.collect()
-    }
-    assert got_grow == want  # cross-drain state: doc 3 still matches doc 0
