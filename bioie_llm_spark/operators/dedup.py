@@ -278,8 +278,9 @@ def ngram_hot_grams(
     """The shingles `ngram_jaccard_pairs` drops under its max_df cap, with
     their document frequencies — the no-silent-caps drop report: pipelines
     materialize/count this next to the pair output so the cap is auditable
-    instead of silent."""
-    ex = ngram_exploded_index(df, id_col, text_col, shingle_n)
+    instead of silent. A document is counted once per gram however many
+    rows repeat it, as in the pair generator."""
+    ex = ngram_exploded_index(df, id_col, text_col, shingle_n).distinct()
     return (
         ex.groupBy("g").agg(F.count("*").alias("df")).filter(F.col("df") > max_df)
     )
@@ -315,16 +316,19 @@ def ngram_jaccard_pairs(
     times (hot-gram agg + both join sides) — measured 2x slower
     end-to-end, and its collect-free plan carries no cap on group size
     anyway. With max_df=None posting lists are unbounded, so the join
-    formulation is kept for that (correctness-twin) path."""
+    formulation is kept for that (correctness-twin) path.
+
+    Both paths count a gram once per distinct ``(id, n_sh)``: a repeated
+    ``(id, text)`` row adds nothing to ``shared`` or to a gram's document
+    frequency, so jaccard stays <= 1."""
     ex = ngram_exploded_index(df, id_col, text_col, shingle_n)
     if max_df is not None:
+        # array_distinct dedups each posting list inside the aggregate
+        # that builds it: no second exchange
         members = (
             ex.groupBy("g")
-            .agg(
-                F.collect_list(F.struct("id", "n_sh")).alias("ms"),
-                F.count("*").alias("__df"),
-            )
-            .filter(F.col("__df") <= max_df)
+            .agg(F.array_distinct(F.collect_list(F.struct("id", "n_sh"))).alias("ms"))
+            .filter(F.size("ms") <= max_df)
         )
         # Upper-triangle pair expansion (``_list_pairs``). The pair key
         # carries na+nb as one int (the jaccard denominator needs only the
@@ -354,6 +358,7 @@ def ngram_jaccard_pairs(
             .select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
         )
     else:
+        ex = ex.distinct()
         a = ex.select(F.col("id").alias("id_a"), F.col("n_sh").alias("na"), "g")
         b = ex.select(F.col("id").alias("id_b"), F.col("n_sh").alias("nb"), "g")
         shared = (

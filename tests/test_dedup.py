@@ -92,13 +92,31 @@ def test_ngram_hot_gram_cap(spark):
     assert ngram_jaccard_pairs(_docs(spark), threshold=0.3, max_df=100).count() > 0
 
 
+def test_repeated_row_counts_once(spark):
+    """A repeated ``(id, text)`` row adds nothing: both pair paths and the
+    hot-gram report count each gram once per id. Texts t and u differ in
+    the last of 8 words, so they share 5 of their 6 trigrams each
+    (Jaccard 5/7)."""
+    from bioie_llm_spark.operators.dedup import ngram_hot_grams
+
+    t = "alpha beta gamma delta epsilon zeta eta theta"
+    u = "alpha beta gamma delta epsilon zeta eta iota"
+    df = spark.createDataFrame([(1, t), (1, t), (2, u)], "doc_id long, text string")
+    for max_df in (100, None):
+        got = [tuple(r) for r in ngram_jaccard_pairs(df, threshold=0.5, max_df=max_df).collect()]
+        assert got == [(1, 2, 0.7143)], (max_df, got)
+    hot = {r["g"]: r["df"] for r in ngram_hot_grams(df, max_df=1).collect()}
+    assert hot == {g: 2 for g in ("alpha beta gamma", "beta gamma delta", "gamma delta epsilon",
+                                  "delta epsilon zeta", "epsilon zeta eta")}
+
+
 def test_grouped_equals_join_formulation(spark):
     """With a non-binding cap, the grouped posting-list path must produce
     exactly the join-formulation (max_df=None) pair set — the two physical
     shapes share one logical spec. Both inverted-index joins with a join
     twin are checked: document shingles and entity-name char-n-grams (one
-    document row and one name repeated, so a posting list holds the id
-    twice and must not pair it with itself)."""
+    document row and one name repeated, so an id must not pair with
+    itself)."""
     from bioie_llm_spark.operators.canonical import jaccard_pairs
 
     rows = [
