@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..sources.checkpoint import CODEC
 
@@ -74,21 +74,6 @@ def ensure_bucketed_table(
             shutil.rmtree(loc, ignore_errors=True)
         write_bucketed(df, table, bucket_cols, n_buckets, sort_cols)
     return table
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: list[str], how: str = "inner"
-) -> DataFrame:
-    """Join two same-bucketed tables on their bucket key — Catalyst elides
-    both exchanges (verify via explain: no Exchange under the join)."""
-    return spark.table(left_table).join(spark.table(right_table), on, how)
-
-
-def exchanges_under_join(df: DataFrame) -> int:
-    """Count Exchange operators in the executed plan — 0 for a co-located
-    bucketed join (plan-shape assertion used by tests and audits)."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return plan.count("Exchange ")
 
 
 def shuffle_exchange_count(df: DataFrame) -> int:

@@ -435,11 +435,6 @@ def simhash(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits:
     return per.select("id", fp.alias("simhash"))
 
 
-def hamming_distance(a: Column, b: Column) -> Column:
-    """Popcount of XOR via bit_count (JVM intrinsic)."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 def substring_windows(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -397,12 +397,12 @@ def incremental_triples(
     The triple stage follows the same rule (sources.checkpoint
     .delta_snapshot): ``triples/snapshot=X`` holds only the partial
     aggregate ``(count(*) AS n_sources, min(source_sha256))`` per
-    (subj, pred, obj) of the linked-store files no earlier snapshot
+    (subj, pred, obj) of the linked-store attempts no earlier snapshot
     consumed, and X's table is one ``sum(n_sources), min(source_sha256)``
     merge over the deltas of X's chain, with the columns of a full build's
-    triple table. Interrupted runs resume at file granularity
-    (at-least-once): a replayed file keeps the triple set and
-    ``source_sha256`` exact, but its rows count again in ``n_sources``."""
+    triple table. Interrupted runs resume at file granularity, and a file's
+    rows and its key commit together, so no file counts twice in
+    ``n_sources``."""
 
     def compute(todo: DataFrame) -> DataFrame:
         return link_entities(

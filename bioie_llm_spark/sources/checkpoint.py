@@ -9,21 +9,25 @@ snapshot-keyed Parquet stage materialization:
   ``{root}/{stage}/snapshot={snapshot}`` exactly once; a restart that finds
   the stage's ``_SUCCESS`` marker reads it back instead of recomputing —
   checkpoint-resume per snapshot, stage-granular.
-- every materialization also appends per-partition lineage rows
+- every materialization also writes per-partition lineage rows
   (snapshot, stage, partition_id, n_rows, content_hash) under
   ``{root}/_lineage`` — the audit trail that lets an operator prove which
   partitions of which snapshot produced which triples.
-- ``resume_by_key`` appends to one cumulative store at key granularity, and
-  ``delta_snapshot`` keeps a per-snapshot aggregate over that store as a
-  chain of deltas: each snapshot writes only the partial aggregate of the
-  store files no earlier snapshot consumed, and its read merges the chain.
+- ``resume_by_key`` grows one cumulative store at key granularity, one
+  write-once attempt per call, and ``delta_snapshot`` keeps a per-snapshot
+  aggregate over that store as a chain of deltas: each snapshot writes
+  only the partial aggregate of the attempts no earlier snapshot consumed,
+  and its read merges the chain.
+
+Every write of this layer goes through ``write_once`` (scratch directory,
+``_SUCCESS``, atomic rename); nothing is appended in place.
 
 The content hash is ``bit_xor(xxhash64(all columns))`` — order-insensitive,
 so it is stable no matter how rows land in partitions, and cheap (one
 map-side aggregate over data that is already being written).
 
-Every parquet file of this layer (stage data, lineage, the key log, and the
-bucketed copy written by ``operators.bucketing.write_bucketed``) is
+Every parquet file of this layer (stage data, lineage, an attempt's keys,
+and the bucketed copy written by ``operators.bucketing.write_bucketed``) is
 compressed with ``CODEC`` (zstd). Stage files are dominated by
 ``source_sha256`` dictionaries — hex digests, 4 bits of entropy per byte —
 which snappy cannot shrink because it has no entropy coder; zstd does
@@ -31,9 +35,7 @@ which snappy cannot shrink because it has no entropy coder; zstd does
 80 KB raw, 80 KB under snappy and 47 KB under zstd; the file 97 -> 61 KB).
 The codec is set per write, not session-wide: the small outputs callers
 write themselves are a few KB of tiny pages where zstd's frame overhead
-outweighs its gain, so they keep the session default (snappy). Parquet
-records the codec per column chunk, so a store written under snappy stays
-readable and resumable and may mix both codecs.
+outweighs its gain, so they keep the session default (snappy).
 """
 
 from __future__ import annotations
@@ -115,16 +117,16 @@ def write_once(path: str, build) -> str:
     return path
 
 
+def _write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
+    writer = df.write.option("compression", CODEC)
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
+
+
 def _write_stage(df: DataFrame, path: str, partition_by: list[str] | None) -> None:
     """``write_once`` of one checkpoint-layer parquet directory."""
-
-    def build(tmp: str) -> None:
-        writer = df.write.option("compression", CODEC)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
-
-    write_once(path, build)
+    write_once(path, lambda tmp: _write_parquet(df, tmp, partition_by))
 
 
 def _stored_schema(df: DataFrame, partition_by: list[str] | None) -> StructType:
@@ -191,76 +193,73 @@ def resume_by_key(
 ) -> DataFrame:
     """Key-granular checkpoint-resume (SURVEY.md §7 step 7: 'skip
     partitions whose lineage row exists'): process only input rows whose
-    key is NOT in the stage's completed-key log, append results + the new
-    keys, return the full stage output.
+    key no committed attempt holds, commit their results as one new
+    attempt, and return the full stage output.
 
     - ``compute(todo_inputs) -> DataFrame`` runs the stage on the pending
-      subset only; an interrupted run resumes at file/key granularity, not
+      subset only; an interrupted run resumes at key granularity, not
       stage granularity.
-    - completed keys live in ``{root}/{stage}__keys/snapshot=...`` —
-      appended AFTER the output append commits, so a crash between the two
-      reprocesses a key (at-least-once): the replayed key's rows land in
-      the output twice. A downstream dedup keeps the same triple set and
-      ``min(source_sha256)``, but ``count(*)`` (``n_sources``) counts the
-      replayed rows again.
+    - an attempt is one ``write_once`` directory
+      ``{root}/{stage}/snapshot={snapshot}/{attempt}`` (a fresh uuid)
+      holding the output rows and, under ``_keys`` (which parquet readers
+      skip), the attempt's distinct keys. One rename publishes both, so a
+      key counts as done exactly when its rows are in the output, and a
+      crash inside the build leaves only a scratch sibling no reader
+      lists: no key is processed twice.
+    - the completed keys are the union of the committed attempts'
+      ``_keys``, and the output is the union of their rows. Each attempt's
+      lineage is written once under
+      ``_lineage/stage={stage}/snapshot={snapshot}@{attempt}``; an attempt
+      that committed without it gets it on the next call.
     """
     spark = inputs.sparkSession
-    out_path = stage_path(root, stage, snapshot)
-    keys_path = stage_path(root, stage + "__keys", snapshot)
-    if os.path.exists(keys_path):
-        done = spark.read.parquet(keys_path)
-        todo = inputs.join(done, key_cols, "left_anti")
-    else:
-        todo = inputs
-    n_todo = todo.count()
-    if n_todo > 0:
-        before = _data_files(out_path)
+    store = stage_path(root, stage, snapshot)
+    attempts = _committed(store)
+    todo = inputs
+    if attempts:
+        keys = spark.read.schema(inputs.select(key_cols).schema).parquet(
+            *(os.path.join(store, a, "_keys") for a in attempts)
+        )
+        todo = inputs.join(keys, key_cols, "left_anti")
+    reader = spark.read
+    if todo.count() > 0:
         result = compute(todo)
-        writer = result.write.mode("append").option("compression", CODEC)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(out_path)
-        # lineage over THIS attempt's delta only (the files the append just
-        # created) — recomputing it over the full output would re-log every
-        # prior attempt's rows, double-counting n_rows on resumed runs
-        delta = [f for f in _data_files(out_path) if f not in before]
-        if delta:
-            # basePath restores Hive-partition columns (they live in the
-            # directory names, not the leaf files) so the delta's lineage
-            # hash covers the same column set as materialize's would
-            delta_df = spark.read.option("basePath", out_path).parquet(*delta)
-            lineage_of(delta_df, stage, snapshot).drop(
-                "stage", "snapshot"
-            ).write.mode("append").option("compression", CODEC).parquet(
-                lineage_path(root, stage, snapshot)
-            )
-        todo.select(key_cols).distinct().write.mode("append").option(
-            "compression", CODEC
-        ).parquet(keys_path)
-    return spark.read.parquet(out_path)
+
+        def build(tmp: str) -> None:
+            _write_parquet(result, tmp, partition_by)
+            _write_parquet(todo.select(key_cols).distinct(), os.path.join(tmp, "_keys"))
+
+        attempt = uuid.uuid4().hex[:12]
+        write_once(os.path.join(store, attempt), build)
+        attempts.append(attempt)
+        # every attempt has this schema: no schema-inference job below
+        reader = reader.schema(_stored_schema(result, partition_by))
+    for a in attempts:
+        lineage = lineage_path(root, stage, f"{snapshot}@{a}")
+        if not os.path.exists(os.path.join(lineage, "_SUCCESS")):
+            rows = reader.parquet(os.path.join(store, a))
+            _write_stage(lineage_of(rows, stage, snapshot).drop("stage", "snapshot"), lineage, None)
+    return reader.parquet(*(os.path.join(store, a) for a in attempts))
 
 
-def _committed_snapshots(root: str, stage: str) -> list[str]:
-    """The snapshots of a stage whose write committed: their directory has
-    ``_SUCCESS`` and is not the scratch sibling of an unfinished
-    ``write_once``."""
-    d = os.path.join(root, stage)
-    if not os.path.isdir(d):
+def _committed(path: str) -> list[str]:
+    """The subdirectories of ``path`` whose ``write_once`` committed: they
+    have ``_SUCCESS`` and are not the scratch sibling of an unfinished
+    build."""
+    if not os.path.isdir(path):
         return []
     return sorted(
-        n[len("snapshot="):]
-        for n in os.listdir(d)
-        if n.startswith("snapshot=")
-        and _TMP not in n
-        and os.path.exists(os.path.join(d, n, "_SUCCESS"))
+        n
+        for n in os.listdir(path)
+        if _TMP not in n and os.path.exists(os.path.join(path, n, "_SUCCESS"))
     )
 
 
-def _chain_record(root: str, stage: str, snapshot: str) -> tuple[list[str], list[str]]:
+def _chain_record(path: str) -> tuple[list[str], list[str]]:
     # a few hundred bytes: read on the driver, no Spark job
     import pyarrow.parquet as pq
 
-    row = pq.read_table(stage_path(root, stage + "__chain", snapshot)).to_pylist()[0]
+    row = pq.read_table(path).to_pylist()[0]
     return row["consumed"], row["chain"]
 
 
@@ -274,15 +273,15 @@ def delta_snapshot(
     merge,
     partition_by: list[str] | None = None,
 ) -> DataFrame:
-    """Snapshot ``snapshot`` of an aggregate over an append-only store
-    (a ``resume_by_key`` output read as ``store`` from ``store_path``),
-    kept as a chain of deltas that share storage.
+    """Snapshot ``snapshot`` of an aggregate over a growing store (a
+    ``resume_by_key`` output read as ``store`` from ``store_path``), kept
+    as a chain of deltas that share storage.
 
     - ``{root}/{stage}/snapshot=X`` holds ``partial(rows)`` (materialized)
-      over only the store files that no earlier snapshot consumed. Store
-      files are append-only, so "consumed" is well defined.
+      over only the store's committed attempts that no earlier snapshot
+      consumed. Attempts are write-once, so "consumed" is well defined.
     - ``{root}/{stage}__chain/snapshot=X`` records, write-once and BEFORE
-      the delta, the store files X consumed and the earlier snapshots whose
+      the delta, the attempts X consumed and the earlier snapshots whose
       deltas make up X's chain (every snapshot recorded before X).
     - X's table is ``merge(deltas)`` over the deltas of its chain and its
       own, or its own delta alone when the chain is empty. ``partial`` must
@@ -290,23 +289,19 @@ def delta_snapshot(
       ``merge`` must keep the delta's columns and their order.
 
     Re-calling X after later snapshots returns X's rows unchanged: its
-    record is fixed. A crash between the store append and the record leaves
-    the appended files unconsumed, so the next snapshot takes them; a crash
-    between the record and the delta rebuilds the delta from the recorded
-    files, which never change. A store with no records counts every file as
-    unconsumed, and a stage written with no record is a whole table from
-    before chains, returned as it is."""
+    record is fixed. An attempt that committed with no record yet is
+    unconsumed, so the next snapshot takes it; a crash between the record
+    and the delta rebuilds the delta from the recorded attempts, which
+    never change."""
     spark = store.sparkSession
+    chains = os.path.join(root, stage + "__chain")
     records = {
-        s: _chain_record(root, stage, s)
-        for s in _committed_snapshots(root, stage + "__chain")
+        n[len("snapshot="):]: _chain_record(os.path.join(chains, n)) for n in _committed(chains)
     }
     if snapshot not in records:
-        if is_materialized(root, stage, snapshot):
-            return spark.read.parquet(stage_path(root, stage, snapshot))
-        consumed = set().union(*(files for files, _ in records.values()))
-        stored = {os.path.relpath(f, store_path) for f in _data_files(store_path)}
-        fresh, chain = sorted(stored - consumed), sorted(records)
+        consumed = set().union(*(attempts for attempts, _ in records.values()))
+        fresh = [a for a in _committed(store_path) if a not in consumed]
+        chain = sorted(records)
         record = spark.range(1, numPartitions=1).select(
             F.lit(fresh).cast("array<string>").alias("consumed"),
             F.lit(chain).cast("array<string>").alias("chain"),
@@ -315,12 +310,8 @@ def delta_snapshot(
         records[snapshot] = (fresh, chain)
 
     def delta(snap: str) -> DataFrame:
-        files = [os.path.join(store_path, f) for f in records[snap][0]]
-        rows = (
-            spark.read.schema(store.schema).option("basePath", store_path).parquet(*files)
-            if files
-            else store.limit(0)
-        )
+        attempts = [os.path.join(store_path, a) for a in records[snap][0]]
+        rows = spark.read.schema(store.schema).parquet(*attempts) if attempts else store.limit(0)
         return materialize(partial(rows), root, stage, snap, partition_by)
 
     own = delta(snapshot)
@@ -343,16 +334,10 @@ def delta_snapshot(
 
 
 def _data_files(path: str) -> set[str]:
-    """All parquet data files under a stage output path (any partition
-    depth), except an unfinished write's uncommitted ``_temporary`` files,
-    which readers skip too."""
-    out: set[str] = set()
-    for dirpath, dirs, files in os.walk(path):
-        if "_temporary" in dirs:
-            dirs.remove("_temporary")
-        out.update(
-            os.path.join(dirpath, f)
-            for f in files
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-    return out
+    """All parquet data files under ``path``, at any depth."""
+    return {
+        os.path.join(d, f)
+        for d, _, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    }

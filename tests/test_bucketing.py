@@ -4,11 +4,7 @@ exchange-free equi-joins."""
 import pytest
 from pyspark.sql import functions as F
 
-from bioie_llm_spark.operators.bucketing import (
-    bucketed_join,
-    exchanges_under_join,
-    write_bucketed,
-)
+from bioie_llm_spark.operators.bucketing import shuffle_exchange_count, write_bucketed
 
 
 @pytest.fixture(scope="module")
@@ -30,8 +26,8 @@ def test_bucketed_join_no_exchange(spark, bucketed_tables):
     # force SMJ so the exchange-elision (not broadcast) is what's tested
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        j = bucketed_join(spark, lt, rt, ["node"])
-        n_ex = exchanges_under_join(j)
+        j = spark.table(lt).join(spark.table(rt), "node")
+        n_ex = shuffle_exchange_count(j)
         assert n_ex == 0, f"bucketed join should be exchange-free, saw {n_ex}"
         assert j.count() > 0
     finally:
@@ -50,7 +46,7 @@ def test_unbucketed_join_has_exchanges(spark, bucketed_tables, tiny_spec):
             build_facts(spark, tiny_spec).filter(F.col("pred") == "interacts_with")
         )
         j = facts.join(adj, "node")
-        assert exchanges_under_join(j) >= 2
+        assert shuffle_exchange_count(j) >= 2
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
@@ -61,10 +57,7 @@ def test_flagship_bucketed_sink_colocated_remap(spark, tiny_spec, tmp_path):
     subj join over (bucketed triples) x (bucketed mapping) is EXCHANGE-FREE
     — the only remaining shuffle is the obj remap of the intermediate.
     Results must match the broadcast canonicalize_triples bit-for-bit."""
-    from bioie_llm_spark.operators.bucketing import (
-        ensure_bucketed_table,
-        shuffle_exchange_count,
-    )
+    from bioie_llm_spark.operators.bucketing import ensure_bucketed_table
     from bioie_llm_spark.operators.canonical import (
         canonicalize_entities,
         canonicalize_triples,
@@ -180,7 +173,7 @@ def test_bucketed_results_match_plain(spark, bucketed_tables, tiny_spec):
     from bioie_llm_spark.operators.adjacency import symmetric_adjacency
 
     lt, rt = bucketed_tables
-    j = bucketed_join(spark, lt, rt, ["node"]).select("node", "pred", "obj")
+    j = spark.table(lt).join(spark.table(rt), "node").select("node", "pred", "obj")
     facts = build_facts(spark, tiny_spec).withColumnRenamed("subj", "node")
     adj = symmetric_adjacency(
         build_facts(spark, tiny_spec).filter(F.col("pred") == "interacts_with")

@@ -145,111 +145,122 @@ def test_skew_operators(spark):
     assert len(hot) == 1 and hot[0]["k"] == "hot"
 
 
+# the triple table's columns, in the order every build returns them
+_COLS = ["subj", "obj", "n_sources", "source_sha256", "pred"]
+_KEYS = ["repo", "path", "commit"]
+
+
+def _rows(df):
+    return sorted(df.select(_COLS).collect())
+
+
+def _oneshot(linked):
+    return linked.groupBy("subj", "pred", "obj").agg(
+        F.count("*").alias("n_sources"), F.min("source_sha256").alias("source_sha256")
+    )
+
+
+def _incremental_setup(spark, tiny_spec):
+    """The TINY corpus, its gazetteer and the extract-and-link step."""
+    from bioie_llm_spark.datagen.corpus import build_corpus, build_gazetteer
+    from bioie_llm_spark.extraction import extract_triples, link_entities
+
+    gaz = build_gazetteer(spark, tiny_spec)
+    return (
+        build_corpus(spark, tiny_spec).cache(),
+        gaz,
+        lambda df: link_entities(extract_triples(df), gaz),
+    )
+
+
 def test_incremental_snapshots(spark, tiny_spec, tmp_path):
     """A delta chain of three snapshots (about 1/3, 2/3 and all files):
     only each snapshot's new files run through extraction, each later
     snapshot's stage holds only its delta, and each snapshot's table equals
-    a from-scratch build over its corpus, on all five columns. Both crash
-    windows lose nothing: store files appended with no delta committed are
-    picked up by the next call, and a chain record whose delta never
-    committed has its delta rebuilt."""
+    a from-scratch build over its corpus, on all five columns. The crash
+    windows lose nothing and count nothing twice: an attempt committed with
+    no chain record is consumed by the next snapshot, an unfinished
+    attempt's scratch sibling is never read and its keys are processed
+    again exactly once, and a chain record whose delta never committed has
+    its delta rebuilt."""
     import shutil
 
-    from bioie_llm_spark.datagen.corpus import build_corpus, build_gazetteer
-    from bioie_llm_spark.extraction import extract_triples, link_entities
     from bioie_llm_spark.pipeline import incremental_triples
-    from bioie_llm_spark.sources.checkpoint import resume_by_key
+    from bioie_llm_spark.sources.checkpoint import _committed, resume_by_key
 
     root = str(tmp_path / "incr")
-    corpus = build_corpus(spark, tiny_spec).cache()
-    gaz = build_gazetteer(spark, tiny_spec)
+    corpus, gaz, link = _incremental_setup(spark, tiny_spec)
     snaps = {
         "snap-a": corpus.filter(F.col("path") < "src/file_3"),
         "snap-b": corpus.filter(F.col("path") < "src/file_5"),
         "snap-c": corpus,
     }
-    cols = ["subj", "obj", "n_sources", "source_sha256", "pred"]
-
-    def rows(df):
-        return sorted(df.select(cols).collect())
-
-    want = {
-        s: rows(
-            link_entities(extract_triples(c), gaz).groupBy("subj", "pred", "obj").agg(
-                F.count("*").alias("n_sources"), F.min("source_sha256").alias("source_sha256")
-            )
-        )
-        for s, c in snaps.items()
-    }
+    want = {s: _rows(_oneshot(link(c))) for s, c in snaps.items()}
     tables = {"snap-a": incremental_triples(spark, snaps["snap-a"], gaz, root, "snap-a")}
-    # a crash after snapshot B's store append and before its delta commits
-    resume_by_key(
-        snaps["snap-b"], root, "linked_incr", "cumulative", ["repo", "path", "commit"],
-        lambda todo: link_entities(extract_triples(todo), gaz),
-    )
-    # and an append that crashed before its commit: its task files stay
-    # under _temporary, which no snapshot may consume
+    # (a) snapshot B's attempt commits, then a crash before its chain record
+    resume_by_key(snaps["snap-b"], root, "linked_incr", "cumulative", _KEYS, link)
+    # (b) an attempt over the files only C adds crashed before its rename:
+    # its scratch sibling holds all their keys, a _SUCCESS marker and only
+    # part of their rows
+    rest = corpus.filter(F.col("path") >= "src/file_5")
     store = stage_path(root, "linked_incr", "cumulative")
-    uncommitted = os.path.join(store, "_temporary", "0", "task_0")
-    os.makedirs(uncommitted)
-    for f in os.listdir(store):
-        if f.endswith(".parquet"):
-            shutil.copy(os.path.join(store, f), uncommitted)
+    crashed = os.path.join(store, "0" * 12 + ".__tmp-0")
+    link(rest.filter(F.col("path") < "src/file_7")).write.parquet(crashed)
+    rest.select(_KEYS).write.parquet(os.path.join(crashed, "_keys"))
     for s in ("snap-b", "snap-c"):
         tables[s] = incremental_triples(spark, snaps[s], gaz, root, s)
     for s in snaps:
-        assert tables[s].columns == cols
-        assert rows(tables[s]) == want[s], s
-    # only the deltas were extracted: the cumulative key log covers all files
-    keys = spark.read.parquet(os.path.join(root, "linked_incr__keys", "snapshot=cumulative"))
-    assert keys.count() == corpus.count()
+        assert tables[s].columns == _COLS
+        assert _rows(tables[s]) == want[s], s
+    # only the deltas were extracted: the committed keys cover every file once
+    done = spark.read.parquet(*(os.path.join(store, a, "_keys") for a in _committed(store)))
+    assert done.count() == done.distinct().count() == corpus.count()
     # the first snapshot's stage is its whole table; later stages are deltas
     stage = lambda s: spark.read.parquet(stage_path(root, "triples", s))
-    assert rows(stage("snap-a")) == want["snap-a"]
+    assert _rows(stage("snap-a")) == want["snap-a"]
     assert 0 < stage("snap-b").count() < tables["snap-b"].count()
     # re-calling an earlier snapshot after later ones returns its own rows
-    assert rows(incremental_triples(spark, snaps["snap-a"], gaz, root, "snap-a")) == want["snap-a"]
+    assert _rows(incremental_triples(spark, snaps["snap-a"], gaz, root, "snap-a")) == want["snap-a"]
     # a crash after B's chain record and before its delta: the delta is
     # rebuilt from the record, by B itself or by any snapshot chained on B
     shutil.rmtree(stage_path(root, "triples", "snap-b"))
-    assert rows(incremental_triples(spark, corpus, gaz, root, "snap-c")) == want["snap-c"]
+    assert _rows(incremental_triples(spark, corpus, gaz, root, "snap-c")) == want["snap-c"]
     assert is_materialized(root, "triples", "snap-b")
-    assert rows(incremental_triples(spark, corpus, gaz, root, "snap-b")) == want["snap-b"]
+    assert _rows(incremental_triples(spark, corpus, gaz, root, "snap-b")) == want["snap-b"]
 
 
-def test_incremental_recall_of_unchained_snapshot(spark, tiny_spec, tmp_path):
-    """A triple table written with no chain record (a full aggregate, as
-    builds before delta chains wrote it) is returned as it is when its
-    snapshot is called again, and no later snapshot counts it."""
-    from bioie_llm_spark.datagen.corpus import build_corpus, build_gazetteer
-    from bioie_llm_spark.extraction import extract_triples, link_entities
+def test_incremental_crash_after_commit_counts_once(spark, tiny_spec, tmp_path, monkeypatch):
+    """A crash inside the first resume attempt, after its rows are written
+    and before its lineage: the re-run's table equals the one-shot build on
+    all five columns, ``n_sources`` included (no file is extracted twice),
+    and the attempt's lineage is written on the re-run."""
+    import pytest
+
     from bioie_llm_spark.pipeline import incremental_triples
+    from bioie_llm_spark.sources import checkpoint
 
-    root = str(tmp_path / "unchained")
-    corpus = build_corpus(spark, tiny_spec).cache()
-    gaz = build_gazetteer(spark, tiny_spec)
-    snap_a = corpus.filter(F.col("path") < "src/file_3")
-    cols = ["subj", "obj", "n_sources", "source_sha256", "pred"]
+    root = str(tmp_path / "crash")
+    corpus, gaz, link = _incremental_setup(spark, tiny_spec)
+    real = checkpoint.lineage_of
+    crashes = []
 
-    def full(df):
-        return df.groupBy("subj", "pred", "obj").agg(
-            F.count("*").alias("n_sources"), F.min("source_sha256").alias("source_sha256")
-        )
+    def crash_once(*args):
+        if not crashes:
+            crashes.append(args[1])
+            raise RuntimeError("crashed inside the attempt")
+        return real(*args)
 
-    def rows(df):
-        return sorted(df.select(cols).collect())
-
-    # snapshot A as an unchained build lays it out: store, key log, full table
-    linked_a = link_entities(extract_triples(snap_a), gaz)
-    linked_a.write.parquet(stage_path(root, "linked_incr", "cumulative"))
-    snap_a.select("repo", "path", "commit").write.parquet(
-        stage_path(root, "linked_incr__keys", "cumulative")
-    )
-    table_a = rows(materialize(full(linked_a), root, "triples", "snap-a", ["pred"]))
-    want = rows(full(link_entities(extract_triples(corpus), gaz)))
-    assert rows(incremental_triples(spark, corpus, gaz, root, "snap-b")) == want
-    assert rows(incremental_triples(spark, snap_a, gaz, root, "snap-a")) == table_a
-    assert rows(incremental_triples(spark, corpus, gaz, root, "snap-c")) == want
+    monkeypatch.setattr(checkpoint, "lineage_of", crash_once)
+    with pytest.raises(RuntimeError):
+        incremental_triples(spark, corpus, gaz, root, "snap-a")
+    assert crashes == ["linked_incr"]
+    got = incremental_triples(spark, corpus, gaz, root, "snap-a")
+    want = _oneshot(link(corpus))
+    assert _rows(got) == _rows(want)
+    n_sources = lambda df: df.agg(F.sum("n_sources")).first()[0]
+    assert n_sources(got) == n_sources(want)
+    lin = read_lineage(spark, root).filter("stage = 'linked_incr'")
+    assert lin.agg(F.sum("n_rows")).first()[0] == n_sources(want)
 
 
 def test_materialize_empty_partitioned(spark, tmp_path):
@@ -314,8 +325,8 @@ def _codecs(files) -> dict[str, set[str]]:
 
 def test_checkpoint_layer_writes_zstd(spark, tmp_path):
     """Every parquet file the checkpoint layer writes — a materialized
-    stage and its lineage, a resume_by_key store with its delta lineage
-    and key log, and a bucketed table — has only ZSTD column chunks."""
+    stage and its lineage, a resume_by_key store with each attempt's keys
+    and lineage, and a bucketed table — has only ZSTD column chunks."""
     from urllib.parse import urlparse
 
     from bioie_llm_spark.operators.bucketing import write_bucketed
@@ -333,49 +344,17 @@ def test_checkpoint_layer_writes_zstd(spark, tmp_path):
     try:
         files = _data_files(root) | set(spark.table(table).inputFiles())
         dirs = {os.path.relpath(os.path.dirname(f), root).split(os.sep)[0] for f in files}
-        # the stage, its lineage, the store and its key log
-        assert {"stage", "_lineage", "rk", "rk__keys"} <= dirs
-        assert len([f for f in files if "/_lineage/stage=rk/" in f]) >= 2  # two deltas
+        # the stage, its lineage and the store; each of the store's two
+        # attempts has its keys and its lineage
+        assert {"stage", "_lineage", "rk"} <= dirs
+        dirs_of = lambda part: {os.path.dirname(f) for f in files if part in f}  # noqa: E731
+        assert len(dirs_of("/_keys/")) == len(dirs_of("/_lineage/stage=rk/")) == 2
         codecs = _codecs(urlparse(f).path for f in files)
         # (a file of an empty task has a schema footer but no column chunks)
         assert sum(len(c) > 0 for c in codecs.values()) >= 10
         assert {f: c for f, c in codecs.items() if not c <= {"ZSTD"}} == {}
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-def test_incremental_on_snappy_store(spark, tiny_spec, tmp_path):
-    """A store whose first snapshot was written with snappy (an older
-    build's codec) stays resumable: a zstd append on top mixes the codecs
-    in one store, and the last snapshot's triple table equals a one-shot
-    build over the full corpus."""
-    from bioie_llm_spark.datagen.corpus import build_corpus, build_gazetteer
-    from bioie_llm_spark.extraction import extract_triples, link_entities
-    from bioie_llm_spark.pipeline import incremental_triples
-    from bioie_llm_spark.sources.checkpoint import _data_files
-
-    root = str(tmp_path / "mixed")
-    corpus = build_corpus(spark, tiny_spec).cache()
-    gaz = build_gazetteer(spark, tiny_spec)
-    snap_a = corpus.filter(F.col("path") < "src/file_3")
-    keys = ["repo", "path", "commit"]
-    # snapshot A's store and key log, laid out as incremental_triples
-    # lays them out, in snappy
-    link_entities(extract_triples(snap_a), gaz).write.option(
-        "compression", "snappy"
-    ).parquet(stage_path(root, "linked_incr", "cumulative"))
-    snap_a.select(keys).distinct().write.option("compression", "snappy").parquet(
-        stage_path(root, "linked_incr__keys", "cumulative")
-    )
-
-    t_b = incremental_triples(spark, corpus, gaz, root, "snap-b")
-    store = _codecs(_data_files(stage_path(root, "linked_incr", "cumulative")))
-    assert set().union(*store.values()) == {"SNAPPY", "ZSTD"}
-    oneshot = link_entities(extract_triples(corpus), gaz).groupBy("subj", "pred", "obj").agg(
-        F.count("*").alias("n_sources"), F.min("source_sha256").alias("source_sha256")
-    )
-    cols = ["subj", "pred", "obj", "n_sources", "source_sha256"]
-    assert sorted(t_b.select(cols).collect()) == sorted(oneshot.select(cols).collect())
 
 
 def test_write_once_failed_build_leaves_nothing(tmp_path):

@@ -4,7 +4,6 @@ from pyspark.sql import functions as F
 
 from bioie_llm_spark.operators.dedup import (
     exact_dedup,
-    hamming_distance,
     minhash_lsh_candidates,
     minhash_signature,
     ngram_jaccard_pairs,
@@ -71,7 +70,7 @@ def test_simhash_near_vs_far(spark):
         [(fps[1], fps[4]), (fps[1], fps[5])], "a long, b long"
     )
     d_near, d_far = [
-        r["d"] for r in df.select(hamming_distance(F.col("a"), F.col("b")).alias("d")).collect()
+        r["d"] for r in df.select(F.bit_count(F.col("a").bitwiseXOR(F.col("b"))).alias("d")).collect()
     ]
     assert fps[1] == fps[2] == fps[3]  # identical normalized content
     assert d_near < d_far
